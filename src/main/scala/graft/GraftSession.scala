@@ -12,7 +12,19 @@ import org.apache.spark.sql.SparkSession
   *  - nanosAsLong: some driver testdata generations store `events.ts`
   *    as parquet TIMESTAMP(NANOS), which Spark's vectorized reader
   *    refuses — read as long; [[Tables.events]] adapts to whichever
-  *    encoding (int64-nanos or timestamp[us]) the current files use.
+  *    encoding (int64-nanos or timestamp[us]) the current files use;
+  *  - codegen.cache.maxEntries sized to the engine's working set of
+  *    generated classes. Spark's default holds 100, and the cache is
+  *    LRU, so a streaming topology whose batches need more than that
+  *    evicts, every micro-batch, what the next one recompiles: one
+  *    `perfbench` `cdc_stream` run (seed 21, 4 cores) made 1,166
+  *    Janino compiles at the default. Distinct compiles measured with
+  *    an unbounded cache: 200 in that `cdc_stream` run, 326 in a
+  *    `table_dml` run (seed 21), 5,638 over the whole test suite in
+  *    one JVM. The bound holds the largest of those with ~45% headroom;
+  *    a cached class costs metaspace, not heap. The setting is static
+  *    (read once, when the code generator first loads), which is why
+  *    it lives here, where every entrypoint builds its session.
   */
 object GraftSession {
   def build(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -34,6 +46,7 @@ object GraftSession {
       // pushdown on every timestamp column the engine writes (the
       // read path still decodes INT96 for externally-written files)
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

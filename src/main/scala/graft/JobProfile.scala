@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Dev tool (r20 optimization round): attribute a query's wall time to
@@ -11,6 +12,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * time between one job's end and the next job's start, which is where
   * commit-path fs work, planning, and codebook collects live. The gap
   * before the first job includes query construction + analysis.
+  * Beside them it prints the query's Janino compiles and compile time
+  * (Spark's `CodegenMetrics`), so generated-code cache thrash — every
+  * run recompiling what the previous one evicted — shows without a
+  * JVM profiler.
   *
   * Usage: JobProfile <query> [query...]   (SPARK_GRAFT_SF_DIR as Bench)
   */
@@ -37,8 +42,10 @@ object JobProfile {
         done.add((je.jobId, t0, je.time, desc))
       }
     })
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     for (name <- args) {
       done.clear()
+      val compiles0 = compiles.getCount
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
       val wall0 = System.currentTimeMillis()
@@ -60,6 +67,11 @@ object JobProfile {
       }
       println(f"  tail gap ${wall0 + (dt * 1000).toLong - prevEnd}%d ms")
       println(f"  SUM jobs ${jobSum}%d ms, driver gaps ${gapSum}%d ms")
+      // the histogram keeps a recency-weighted sample, not a sum: compile
+      // time is estimated as the query's compile count times its mean
+      val nCompiles = compiles.getCount - compiles0
+      val compileMs = nCompiles * compiles.getSnapshot.getMean
+      println(f"  Janino compiles $nCompiles%d, ~${compileMs}%.0f ms")
       spark.catalog.clearCache()
       System.gc()
     }

@@ -22,12 +22,11 @@ import org.apache.spark.sql.functions._
   *     read errors propagate rather than masquerading as "first batch"
   *     and dropping history;
   *  3. merge old+new, precombine again, apply delete tombstones;
-  *  4. materialize the merge to checkpoint blocks (no lineage back to
-  *     the files about to be replaced — a lost block fails the job and
-  *     the streaming retry replays into this idempotent upsert), then
-  *     rewrite just the touched partitions via the per-writer
-  *     dynamic-overwrite option (no session-conf mutation — concurrent
-  *     upsert streams in one session must not race each other's conf);
+  *  4. rewrite just the touched partitions in ONE write via the
+  *     per-writer dynamic-overwrite option (no session-conf mutation —
+  *     concurrent upsert streams in one session must not race each
+  *     other's conf), learning the surviving partition set from the
+  *     write itself ([[rewritePartitions]]);
   *  5. partitions whose keys were ALL tombstoned get their directories
   *     deleted explicitly (dynamic overwrite never rewrites a partition
   *     absent from the written data), using Hive-escaped dir names.
@@ -171,19 +170,82 @@ final case class ParquetUpsertSink(
   /** Rewrite `df`'s partitions in place via per-writer dynamic
     * partition overwrite (no session-conf mutation — concurrent upsert
     * streams in one session must not race each other's conf).
+    * `observed` wraps the distributed frame the write task reads.
     */
-  private def writeFinal(df: DataFrame): Unit = {
+  private def writeFinal(df: DataFrame,
+      observed: DataFrame => DataFrame = identity): Unit = {
     val distributed =
       if (filesPerPartition == 1) df.repartition(col(partitionCol))
       else df.repartition(col(partitionCol),
         pmod(xxhash64(recordKeys.map(col): _*), lit(filesPerPartition)))
-    distributed
+    observed(distributed)
       .write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic") // per-writer, race-free
       .options(bloomWriteOptions)
       .partitionBy(partitionCol)
       .parquet(path)
+  }
+
+  private def partDir(v: String): Path = new Path(s"$path/$partitionCol=${dirName(v)}")
+
+  /** The copy-on-write commit of every partition rewrite (upsert merge,
+    * DELETE, MOR compaction): `rows` is the complete new content of the
+    * `touched` partitions. In order — the crash-safe order every replay
+    * relies on: verify the lock, archive the pre-images, persist the
+    * schema additively, write `rows` ONCE with dynamic overwrite, delete
+    * the touched partitions the write left empty, run `beforeMark`,
+    * mark the commit complete. Returns the surviving partition dirs.
+    *
+    * No materialization: only the write job reads the pre-images, and
+    * every read (a retried shuffle map stage included) finishes before
+    * the committer's `commitJob` replaces partition directories;
+    * [[archivePreImages]] copies, so the live files stay readable until
+    * that commit. A lost shuffle block fails the job before anything is
+    * replaced, and the replay re-merges idempotently.
+    *
+    * The surviving set comes from the write itself: an `Observation`
+    * (`collect_set`) over `rows`, filled once the write succeeds —
+    * instead of a checkpoint plus a second distinct collect. collect_set
+    * drops nulls, so the null partition is collected as its directory
+    * token; without it a surviving null partition would be deleted right
+    * after it was written. An all-tombstoned merge writes no file.
+    */
+  private def rewritePartitions(spark: org.apache.spark.sql.SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, rows: DataFrame, touched: Seq[String],
+      batchId: Long, op: String)(beforeMark: => Unit = ()): Seq[Path] = {
+    verifyLockOwnership(fs)
+    val commit =
+      if (keepVersions > 1) Some(archivePreImages(fs, touched.toArray, batchId, op))
+      else None
+    // ADDITIVE: the touched-partition content may lack columns that
+    // exist only in untouched partitions — the schema must never narrow
+    persistSchemaAdditive(spark, fs, rows.schema)
+    // observed ABOVE the shuffle, in the write's own stage: an empty
+    // shuffle output lets adaptive execution replace the stage below
+    // with an empty relation, and an observation inside that stage
+    // would report no metrics at all
+    val obs = org.apache.spark.sql.Observation()
+    writeFinal(rows, _.observe(obs, collect_set(
+      coalesce(col(partitionCol).cast("string"), lit(nullDir))).as("parts")))
+    val surviving = obs.get.get("parts") match {
+      case Some(ps: scala.collection.Seq[_]) => ps.map(_.toString).toSet
+      // never guess "nothing survived": that would delete what was just
+      // written. Failing leaves the commit unmarked; the replay re-merges
+      case _ => throw new IllegalStateException(
+        s"graft-upsert: the rewrite of $path reported no partition set")
+    }
+    val (kept, emptied) =
+      touched.partition(v => surviving.contains(if (v == null) nullDir else v))
+    // dynamic overwrite never touches a partition absent from the
+    // written data — remove the emptied directories explicitly
+    emptied.foreach { v =>
+      fs.delete(partDir(v), true)
+      UpsertStatsManifest.invalidate(fs, partDir(v))
+    }
+    beforeMark
+    markCommitComplete(fs, commit)
+    kept.map(partDir)
   }
 
   /** Read ONLY the given partition directories, with the partition
@@ -573,7 +635,7 @@ final case class ParquetUpsertSink(
       values: Seq[String]): DataFrame = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val liveDirs = values.distinct
-      .map(v => new Path(s"$path/$partitionCol=${dirName(v)}"))
+      .map(partDir)
       .filter(hasDataFiles(fs, _))
     if (liveDirs.isEmpty) emptyTable(spark, fs)
     else readStringPartitioned(spark, liveDirs)
@@ -1330,43 +1392,19 @@ final case class ParquetUpsertSink(
       case Some(d) => mergedAll.filter(!coalesce(col(d), lit(false)))
       case None => mergedAll
     }
-    val mat = merged.localCheckpoint(true)
-    try {
-      verifyLockOwnership(fs)
-      val commit =
-        if (keepVersions > 1)
-          Some(archivePreImages(fs, touchedValues.toArray, batchId, "compact"))
-        else None
-      val surviving: Set[String] = mat
-        .select(col(partitionCol).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSet
-      if (surviving.nonEmpty) {
-        // ADDITIVE persist: the touched-partition merge may lack
-        // columns that exist only in untouched base partitions — the
-        // table schema must never narrow
-        persistSchemaAdditive(spark, fs, mat.schema)
-        writeFinal(mat)
-      }
-      // partitions whose every key tombstoned away lose their base dirs
-      touchedValues.filterNot(surviving.contains).foreach { v =>
-        val p = new Path(s"$path/$partitionCol=${dirName(v)}")
-        fs.delete(p, true)
-        UpsertStatsManifest.invalidate(fs, p)
-      }
+    val kept = rewritePartitions(spark, fs, merged, touchedValues, batchId, "compact") {
       folding.foreach(c => fs.delete(new Path(deltaRoot, c), true))
-      markCommitComplete(fs, commit)
-      // hive-sync fires at COMPACTION in MOR mode — the point where the
-      // registered (read-optimized, base-files) table's content
-      // actually changes; syncing on delta append would register a
-      // name whose reads silently exclude the very rows just written.
-      // Sync the PERSISTED superset schema, not mat.schema: the fold
-      // reads only touched partitions, and a column living solely in
-      // untouched ones would otherwise vanish from the catalog entry.
-      syncTable.foreach(registerAndSync(spark, _,
-        mergeReadSchema(spark, fs, Seq.empty).getOrElse(pinString(mat.schema))))
-      (folding, surviving.toSeq.map(v =>
-        new Path(s"$path/$partitionCol=${dirName(v)}")))
-    } finally Checkpoints.release(mat)
+    }
+    // hive-sync fires at COMPACTION in MOR mode — the point where the
+    // registered (read-optimized, base-files) table's content actually
+    // changes; syncing on delta append would register a name whose
+    // reads silently exclude the very rows just written. Sync the
+    // PERSISTED superset schema, not merged.schema: the fold reads only
+    // touched partitions, and a column living solely in untouched ones
+    // would otherwise vanish from the catalog entry.
+    syncTable.foreach(registerAndSync(spark, _,
+      mergeReadSchema(spark, fs, Seq.empty).getOrElse(pinString(merged.schema))))
+    (folding, kept)
   }
 
   /** Loud guard for paths that operate on the BASE file set only: with
@@ -1418,9 +1456,15 @@ final case class ParquetUpsertSink(
       // partition identity is the STRING form (basis of the dir name); the
       // read-back table infers the partition column's type (e.g. DATE
       // where the batch carries STRING) — value-typed set compares would
-      // silently never match
-      val parts = deduped.select(col(partitionCol).cast("string"))
-        .distinct().collect().map(_.getString(0))
+      // silently never match. A per-task local distinct over the
+      // persisted batch: no distinct shuffle, and this job is the one
+      // that fills the cache the merge reads
+      val parts: Array[String] = {
+        import org.apache.spark.sql.Encoders
+        deduped.select(col(partitionCol).cast("string")).as(Encoders.STRING)
+          .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+          .collect().distinct
+      }
       if (parts.isEmpty) return
 
       // ONE glob round-trip discovers every live data file; the previous
@@ -1445,7 +1489,7 @@ final case class ParquetUpsertSink(
       // must not masquerade as first-batch
       val touchedDirs = parts
         .filter(v => liveDataDirs.contains(s"$partitionCol=${dirName(v)}"))
-        .map(v => new Path(s"$path/$partitionCol=${dirName(v)}"))
+        .map(partDir)
       // metadata-schema read: no per-batch footer-inference job (the
       // lazy liveDirs fallback lists only legacy tables that predate
       // `_schema.json`, once per sink lifetime)
@@ -1482,58 +1526,11 @@ final case class ParquetUpsertSink(
         case None => mergedAll
       }
 
-      def deleteDirs(values: Iterable[String]): Unit =
-        values.foreach { v =>
-          val p = new Path(s"$path/$partitionCol=${dirName(v)}")
-          fs.delete(p, true)
-          UpsertStatsManifest.invalidate(fs, p)
-        }
-
-      if (existing.isDefined) {
-        // sever lineage from the files the overwrite replaces by
-        // materializing the merge to checkpoint blocks — ONE pass over
-        // the merge, where the previous sibling-staging design paid a
-        // parquet encode, a re-read, and a second scan for the surviving
-        // set. Crash semantics are unchanged: a lost checkpoint block
-        // fails the job and the streaming retry replays the batch into
-        // this idempotent upsert, exactly like a lost staging file did.
-        val mat = merged.localCheckpoint(true)
-        try {
-          verifyLockOwnership(fs)
-          // the live pre-images of the touched partitions move to the
-          // archive only once the merge result is safely materialized
-          val commit =
-            if (keepVersions > 1) Some(archivePreImages(fs, parts, batchId)) else None
-          // an all-tombstoned merge survives nowhere — skip the write
-          val surviving: Set[String] = mat
-            .select(col(partitionCol).cast("string")).distinct()
-            .collect().map(_.getString(0)).toSet
-          if (surviving.nonEmpty) { persistSchema(fs, mat.schema); writeFinal(mat) }
-          // tombstoned-empty partitions: dynamic overwrite left their old
-          // files in place — remove the directories explicitly
-          deleteDirs(parts.filterNot(surviving.contains))
-          markCommitComplete(fs, commit)
-        } finally Checkpoints.release(mat)
-      } else {
-        // creation-only commit (no live pre-images): still record it —
-        // with its touched-partition manifest — or [[readAsOf]] could not
-        // tell that these partitions did not exist before this commit.
-        // ADDITIVE persist: the table may hold live partitions this
-        // batch did not touch (it only created NEW ones) — a plain
-        // persist of the batch schema would narrow `_schema.json` below
-        // those partitions' columns, and the next merge to read them
-        // with it would silently drop, then erase, the missing column
-        persistSchemaAdditive(spark, fs, merged.schema)
-        // same pre-destructive fence as the merge branch: a writer that
-        // stalled past the lock timeout may find its "new" partitions
-        // CREATED meanwhile by the breaker — writeFinal's dynamic
-        // overwrite would silently clobber the new holder's commit
-        verifyLockOwnership(fs)
-        val commit =
-          if (keepVersions > 1) Some(archivePreImages(fs, parts, batchId)) else None
-        writeFinal(merged)
-        markCommitComplete(fs, commit)
-      }
+      // a batch touching only absent partitions (creation-only) takes
+      // the same commit: there are no pre-images to read, and its
+      // touched-partition manifest still lets [[readAsOf]] tell that
+      // these partitions did not exist before this commit
+      rewritePartitions(spark, fs, merged, parts.toSeq, batchId, "upsert")()
       persistWriteConfig(fs)
       if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
         compactPartitions(spark)
@@ -1600,32 +1597,11 @@ final case class ParquetUpsertSink(
         .select(col(partitionCol)).distinct()
         .collect().map(_.getString(0))
     if (matched.isEmpty) return (Seq.empty, Seq.empty)
-    val touchedDirs = matched.toSeq
-      .map(v => new Path(s"$path/$partitionCol=${dirName(v)}"))
     // survivors: rows where cond is FALSE or NULL (SQL DELETE keeps
-    // NULL-condition rows); checkpoint severs lineage from the files
-    // the overwrite replaces, exactly like upsert's merge
-    val mat = readWithSchema(spark, touchedDirs, schema)
+    // NULL-condition rows), written back exactly like upsert's merge
+    val survivors = readWithSchema(spark, matched.toSeq.map(partDir), schema)
       .filter(!coalesce(cond, lit(false)))
-      .localCheckpoint(true)
-    try {
-      verifyLockOwnership(fs)
-      val commit =
-        if (keepVersions > 1)
-          Some(archivePreImages(fs, matched, batchId, "delete")) else None
-      val surviving: Set[String] = mat
-        .select(col(partitionCol)).distinct()
-        .collect().map(_.getString(0)).toSet
-      if (surviving.nonEmpty) writeFinal(mat)
-      matched.filterNot(surviving.contains).foreach { v =>
-        val p = new Path(s"$path/$partitionCol=${dirName(v)}")
-        fs.delete(p, true)
-        UpsertStatsManifest.invalidate(fs, p)
-      }
-      markCommitComplete(fs, commit)
-      (matched.toSeq, surviving.toSeq.map(v =>
-        new Path(s"$path/$partitionCol=${dirName(v)}")))
-    } finally Checkpoints.release(mat)
+    (matched.toSeq, rewritePartitions(spark, fs, survivors, matched.toSeq, batchId, "delete")())
   }
 
   /** Group-replacement commit for SQL row-level operations (UPDATE /
@@ -1700,12 +1676,12 @@ final case class ParquetUpsertSink(
         .parquet(path)
     val rowPartDirs = rowParts.map(dirName).toSet
     replaced.filterNot(v => rowPartDirs.contains(dirName(v))).foreach { v =>
-      val p = new Path(s"$path/$partitionCol=${dirName(v)}")
+      val p = partDir(v)
       fs.delete(p, true)
       UpsertStatsManifest.invalidate(fs, p)
     }
     markCommitComplete(fs, commit)
-    rowParts.toSeq.map(v => new Path(s"$path/$partitionCol=${dirName(v)}"))
+    rowParts.toSeq.map(partDir)
   }
 
   /** RESTORE the table to its state as of archive commit `asOf` (the
@@ -1855,7 +1831,7 @@ final case class ParquetUpsertSink(
     val tmpDir = new Path(archiveRoot, commit + tmpSuffix)
     fs.mkdirs(tmpDir)
     parts.foreach { v =>
-      val live = new Path(s"$path/$partitionCol=${dirName(v)}")
+      val live = partDir(v)
       if (fs.exists(live))
         org.apache.hadoop.fs.FileUtil.copy(
           fs, live, fs, new Path(tmpDir, live.getName),

@@ -491,4 +491,100 @@ class ParquetUpsertSinkSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(dir, ParquetUpsertSink.SchemaFileName)))
   }
+
+  // ——— the single-write COW commit ———
+
+  private def partDirNames(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("processing_date=")).map(_.getName).toSeq.sorted
+
+  /** Data files under the table root, archive and metadata dirs excluded. */
+  private def liveDataFiles(dir: String): Seq[String] =
+    partDirNames(dir).flatMap(d => new java.io.File(dir, d).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(f => s"$d/${f.getName}")).sorted
+
+  test("rows in the null (default) partition survive a second commit that touches it") {
+    val dir = Files.createTempDirectory("cownull").toString + "/t"
+    val sink = ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date")
+    sink.upsert(Seq(
+      Rec(1, "a", 1, null),
+      Rec(2, "b", 1, "2024-01-01")).toDF(), 0)
+    // touches the null partition: its surviving rows must be rewritten,
+    // not deleted as an "emptied" partition after the write
+    sink.upsert(Seq(Rec(3, "c", 2, null), Rec(1, "a2", 2, null)).toDF(), 1)
+    assert(partDirNames(dir) == Seq(
+      "processing_date=2024-01-01", "processing_date=__HIVE_DEFAULT_PARTITION__"))
+    val rows = spark.read.parquet(dir)
+      .select($"id", $"v", $"processing_date".cast("string"))
+      .as[(Int, String, Option[String])].collect().sortBy(_._1).toSeq
+    assert(rows == Seq((1, "a2", None), (2, "b", Some("2024-01-01")), (3, "c", None)))
+  }
+
+  test("a batch that moves a partition's last key elsewhere removes the emptied directory") {
+    val dir = Files.createTempDirectory("cowmove").toString + "/t"
+    val sink = ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date")
+    sink.upsert(Seq(
+      Rec(1, "a", 10, "2024-01-01"),
+      Rec(2, "b", 10, "2024-01-02")).toDF(), 0)
+    // id 1 moves to 2024-01-02; a stale version of id 2 touches
+    // 2024-01-01, so both partitions are merged and the newer version of
+    // each key wins — 2024-01-01 keeps no row
+    sink.upsert(Seq(
+      Rec(1, "a-moved", 20, "2024-01-02"),
+      Rec(2, "b-stale", 5, "2024-01-01")).toDF(), 1)
+    assert(partDirNames(dir) == Seq("processing_date=2024-01-02"))
+    val rows = spark.read.parquet(dir).select($"id", $"v")
+      .as[(Int, String)].collect().sortBy(_._1).toSeq
+    assert(rows == Seq((1, "a-moved"), (2, "b")))
+  }
+
+  test("an all-tombstoned touched partition is removed and nothing is written") {
+    val dir = Files.createTempDirectory("cowtomb").toString + "/t"
+    val sink = ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date",
+      deleteCol = Some("is_delete"))
+    sink.upsert(Seq(
+      (1, "a", 10L, "2024-01-05", false, "x1"),
+      (2, "b", 10L, "2024-01-05", false, "x2"),
+      (3, "c", 10L, "2024-01-06", false, "x3"))
+      .toDF("id", "v", "precombine", "processing_date", "is_delete", "extra"), 0)
+    val before = liveDataFiles(dir)
+    val schemaFile = java.nio.file.Paths.get(dir, ParquetUpsertSink.SchemaFileName)
+    val schemaBefore = new String(Files.readAllBytes(schemaFile), "UTF-8")
+    // a NARROW batch (no `extra`) tombstoning every key of 2024-01-05
+    sink.upsert(Seq(
+      (1, "gone", 20L, "2024-01-05", true),
+      (2, "gone", 20L, "2024-01-05", true))
+      .toDF("id", "v", "precombine", "processing_date", "is_delete"), 1)
+    assert(partDirNames(dir) == Seq("processing_date=2024-01-06"))
+    // no data file was added or replaced: the untouched partition keeps
+    // exactly its old file
+    assert(liveDataFiles(dir) == before.filter(_.startsWith("processing_date=2024-01-06")))
+    // and the schema did not narrow below the untouched partition's column
+    assert(new String(Files.readAllBytes(schemaFile), "UTF-8") == schemaBefore)
+    val rows = spark.read.format("graft-upsert").load(dir)
+      .select($"id", $"extra").as[(Int, String)].collect().toSeq
+    assert(rows == Seq((3, "x3")))
+  }
+
+  test("a steady-state commit on an existing partition runs at most 6 Spark jobs") {
+    val dir = Files.createTempDirectory("cowjobs").toString + "/t"
+    val sink = ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date")
+    sink.upsert((1 to 200).map(i => Rec(i, s"v$i", 1, "2024-01-01")).toDF(), 0)
+    val batch = (150 to 250).map(i => Rec(i, s"w$i", 2, "2024-01-01")).toDF()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerBusBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sink.upsert(batch, 1)
+      org.apache.spark.GraftListenerBusBridge.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= 6, s"the commit ran ${jobs.get} Spark jobs")
+    assert(spark.read.parquet(dir).count() == 250)
+    assert(liveDataFiles(dir).size == 1)
+  }
 }
