@@ -23,4 +23,6 @@ fi
 # (r18 verdict #1: the round-close claim quotes THIS output — never a
 # hand-computed list that can drift from the committed file).
 echo "[gate] bench regression list" && python3 scripts/bench_regressions.py
+# net Scala line count of the engine, a tracked number (ROADMAP aim 2)
+echo "[gate] src/main Scala lines: $(find src/main -name '*.scala' | xargs cat | wc -l)"
 echo "[gate] GREEN"

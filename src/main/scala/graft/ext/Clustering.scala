@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Present, Tables}
+import graft.Tables
 import graft.Tables.Resplit
 
 /** Distributed k-means (Lloyd) over the embedding corpus — the
@@ -76,14 +76,12 @@ object Clustering {
       cents = spark.createDataFrame(
         spark.sparkContext.parallelize(next.collect().toIndexedSeq, 1), next.schema)
     }
-    Present.sortSmall(
-      // the summary needs only (cent_id, sim): slim the assignment so
-      // the exchange ships ~20 bytes/vector, not the 256-byte embedding
-      Similarity.assignNearest(emb, cents, keepEmbedding = false)
-        .groupBy(col("cent_id"))
-        .agg(count(lit(1)).as("n_members"),
-          round(avg(col("sim")), 4).as("cohesion")),
-      col("cent_id"))
+    // the summary needs only (cent_id, sim): slim the assignment so
+    // the exchange ships ~20 bytes/vector, not the 256-byte embedding
+    Similarity.assignNearest(emb, cents, keepEmbedding = false)
+      .groupBy(col("cent_id"))
+      .agg(count(lit(1)).as("n_members"),
+        round(avg(col("sim")), 4).as("cohesion"))
   }
 
   /** kNN label-consistency eval — the standard embedding-quality /
@@ -118,13 +116,11 @@ object Clustering {
     val pred = graft.plans.TopKPerGroup.topKPerGroup(
       votes, Seq(col("query_id")), Seq(col("c").desc, col("nlabel").asc), 1)
       .select(col("query_id"), col("qlabel"), col("nlabel").as("plabel"))
-    Present.sortSmall(
-      pred.groupBy(col("qlabel").as("label"))
-        .agg(count(lit(1)).as("n_queries"),
-          sum(when(col("plabel") === col("qlabel"), 1L).otherwise(0L)).as("n_correct"))
-        .withColumn("accuracy",
-          round(col("n_correct").cast("double") / col("n_queries"), 4)),
-      col("label"))
+    pred.groupBy(col("qlabel").as("label"))
+      .agg(count(lit(1)).as("n_queries"),
+        sum(when(col("plabel") === col("qlabel"), 1L).otherwise(0L)).as("n_correct"))
+      .withColumn("accuracy",
+        round(col("n_correct").cast("double") / col("n_queries"), 4))
   }
 
   val knnLabelEvalSql: String =
@@ -196,10 +192,8 @@ object Clustering {
     // rank numbering over the ≤ k·|labels| survivors only
     val w = Window.partitionBy(col("label"))
       .orderBy(col("cos_centroid").asc, col("vec_id").asc)
-    Present.sortSmall(
-      bottom.withColumn("rank", row_number().over(w))
-        .select(col("label"), col("vec_id"), col("cos_centroid"), col("rank")),
-      col("label"), col("rank"))
+    bottom.withColumn("rank", row_number().over(w))
+      .select(col("label"), col("vec_id"), col("cos_centroid"), col("rank"))
   }
 
   val labelOutliersSql: String =
@@ -272,15 +266,13 @@ object Clustering {
     val cells = Similarity.assignNearest(emb, exemplars, keepEmbedding = true)
       .select(col("vec_id"), col("embedding"), col("cent_id").as("cell"))
     val sim = round(Similarity.cosine(col("a_emb"), col("b_emb")), 4)
-    Present.sortSmall(
-      cells.select(col("cell"), col("vec_id").as("keep_id"), col("embedding").as("a_emb"))
-        .join(cells.select(col("cell"), col("vec_id").as("drop_id"),
-          col("embedding").as("b_emb")), Seq("cell"))
-        .filter(col("keep_id") < col("drop_id") && sim >= semanticDupThreshold)
-        .groupBy(col("drop_id"), col("cell"))
-        .agg(min(col("keep_id")).as("kept_by"))
-        .select(col("drop_id").as("vec_id"), col("cell"), col("kept_by")),
-      col("vec_id"))
+    cells.select(col("cell"), col("vec_id").as("keep_id"), col("embedding").as("a_emb"))
+      .join(cells.select(col("cell"), col("vec_id").as("drop_id"),
+        col("embedding").as("b_emb")), Seq("cell"))
+      .filter(col("keep_id") < col("drop_id") && sim >= semanticDupThreshold)
+      .groupBy(col("drop_id"), col("cell"))
+      .agg(min(col("keep_id")).as("kept_by"))
+      .select(col("drop_id").as("vec_id"), col("cell"), col("kept_by"))
   }
 
   val dedupSemanticSql: String =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Present, Tables}
+import graft.Tables
 
 /** Dedup cluster closure: connected components over near-dup candidate
   * pairs, so transitive chains (a~b, b~c ⇒ {a,b,c} one cluster) get a
@@ -118,11 +118,9 @@ object Clusters {
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     val edges = Dedup.minhashLshPairs(spark, sfDir).select(col("doc_a"), col("doc_b"))
     val cc = connectedComponents(edges)
-    Present.sortSmall(
-      cc.select(col("id").as("doc_id"), col("component").as("keeper_id"))
-        .withColumn("cluster_size",
-          count(lit(1)).over(Window.partitionBy(col("keeper_id")))),
-      col("doc_id"))
+    cc.select(col("id").as("doc_id"), col("component").as("keeper_id"))
+      .withColumn("cluster_size",
+        count(lit(1)).over(Window.partitionBy(col("keeper_id"))))
   }
 
   /** Shared oracle scaffolding: ground-truth pairwise-Jaccard pairs
@@ -237,11 +235,9 @@ object Clusters {
       .select(col("component"), col("k.doc_id").as("keeper_id"))
 
   def dedupKeep(spark: SparkSession, sfDir: String): DataFrame =
-    Present.sortSmall(
-      Tables.table(spark, sfDir, "documents")
-        .join(dropList(spark, sfDir), Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("source"), col("n_chars")),
-      col("doc_id"))
+    Tables.table(spark, sfDir, "documents")
+      .join(dropList(spark, sfDir), Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("source"), col("n_chars"))
 
   /** Shared oracle prefix for every media-aware drop-list consumer:
     * the text component chain, the media component chain
@@ -323,9 +319,7 @@ object Clusters {
         .select(col("dst").as("doc_id"),
           (lit(1.0 - prDamping) + lit(prDamping) * col("in")).as("pr"))
     }
-    Present.sortSmall(
-      ranks.select(col("doc_id"), round(col("pr"), 4).as("pagerank")),
-      col("doc_id"))
+    ranks.select(col("doc_id"), round(col("pr"), 4).as("pagerank"))
   }
 
   /** DuckDB twin: the naive-pair edge list + the same two chained
@@ -368,14 +362,12 @@ object Clusters {
       coalesce(col("component"), col("doc_id")).cast("string")) % 100
     val splitCol = when(bucket < 80, "train")
       .when(bucket < 90, "validation").otherwise("test")
-    Present.sortSmall(
-      Tables.table(spark, sfDir, "documents")
-        .join(cc, Seq("doc_id"), "left_outer")
-        .select(splitCol.as("split"),
-          size(Text.tokens(col("text"))).cast("long").as("toks"))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("n_tokens")),
-      col("split"))
+    Tables.table(spark, sfDir, "documents")
+      .join(cc, Seq("doc_id"), "left_outer")
+      .select(splitCol.as("split"),
+        size(Text.tokens(col("text"))).cast("long").as("toks"))
+      .groupBy(col("split"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("n_tokens"))
   }
 
   /** DuckDB twin of [[leakageSafeSplit]]. */
@@ -408,12 +400,10 @@ object Clusters {
     val edges = Dedup.minhashLshPairs(spark, sfDir).select(col("doc_a"), col("doc_b"))
     val sizes = connectedComponents(edges)
       .groupBy(col("component")).agg(count(lit(1)).as("cluster_size"))
-    Present.sortSmall(
-      sizes.groupBy(col("cluster_size"))
-        .agg(count(lit(1)).as("n_clusters"))
-        .select(col("cluster_size"), col("n_clusters"),
-          (col("cluster_size") * col("n_clusters")).as("n_docs")),
-      col("cluster_size"))
+    sizes.groupBy(col("cluster_size"))
+      .agg(count(lit(1)).as("n_clusters"))
+      .select(col("cluster_size"), col("n_clusters"),
+        (col("cluster_size") * col("n_clusters")).as("n_docs"))
   }
 
   /** DuckDB twin of [[clusterStats]]. */
@@ -456,15 +446,13 @@ object Clusters {
     val docs = Tables.table(spark, sfDir, "documents")
     val dropped = docs.join(dropList(spark, sfDir), Seq("doc_id"), "left_semi")
       .groupBy(col("source")).agg(count(lit(1)).as("n_dropped"))
-    Present.sortSmall(
-      docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-        .join(dropped, Seq("source"), "left_outer")
-        .select(col("source"), col("n_docs"),
-          coalesce(col("n_dropped"), lit(0L)).as("n_dropped"))
-        .withColumn("n_kept", col("n_docs") - col("n_dropped"))
-        .withColumn("dup_rate",
-          round(col("n_dropped").cast("double") / col("n_docs"), 4)),
-      col("source"))
+    docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
+      .join(dropped, Seq("source"), "left_outer")
+      .select(col("source"), col("n_docs"),
+        coalesce(col("n_dropped"), lit(0L)).as("n_dropped"))
+      .withColumn("n_kept", col("n_docs") - col("n_dropped"))
+      .withColumn("dup_rate",
+        round(col("n_dropped").cast("double") / col("n_docs"), 4))
   }
 
   /** DuckDB twin of [[dedupRates]] — charges the shared media-aware
@@ -515,17 +503,15 @@ object Clusters {
       .filter(col("doc_id") =!= col("keeper_id"))
       .select(col("doc_id")).withColumn("m", lit(true))
     val marks = textDrops.join(mediaDrops, Seq("doc_id"), "full_outer")
-    Present.sortSmall(
-      docs.join(marks, Seq("doc_id"), "left_outer")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("t"), 1L).otherwise(0L)).as("n_dropped_text"),
-          sum(when(col("m"), 1L).otherwise(0L)).as("n_dropped_media"),
-          // true || null = true; null || null = null -> otherwise(0)
-          sum(when(col("t") || col("m"), 1L).otherwise(0L)).as("n_dropped_any"))
-        .withColumn("dup_rate",
-          round(col("n_dropped_any").cast("double") / col("n_docs"), 4)),
-      col("source"))
+    docs.join(marks, Seq("doc_id"), "left_outer")
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(when(col("t"), 1L).otherwise(0L)).as("n_dropped_text"),
+        sum(when(col("m"), 1L).otherwise(0L)).as("n_dropped_media"),
+        // true || null = true; null || null = null -> otherwise(0)
+        sum(when(col("t") || col("m"), 1L).otherwise(0L)).as("n_dropped_any"))
+      .withColumn("dup_rate",
+        round(col("n_dropped_any").cast("double") / col("n_docs"), 4))
   }
 
   /** DuckDB twin of [[dedupRatesCombined]]: the text component chain
@@ -563,16 +549,14 @@ object Clusters {
     val docs = Tables.table(spark, sfDir, "documents")
     val drops = dropList(spark, sfDir).withColumn("dropped", lit(true))
     val toks = size(Text.tokens(col("text"))).cast("long")
-    Present.sortSmall(
-      docs.join(drops, Seq("doc_id"), "left_outer")
-        .select(col("source"), toks.as("t"),
-          coalesce(col("dropped"), lit(false)).as("dropped"))
-        .groupBy(col("source"))
-        .agg(sum(col("t")).as("n_tokens"),
-          sum(when(col("dropped"), col("t")).otherwise(0L)).as("tokens_dropped"))
-        .withColumn("token_dup_rate",
-          round(col("tokens_dropped").cast("double") / col("n_tokens"), 4)),
-      col("source"))
+    docs.join(drops, Seq("doc_id"), "left_outer")
+      .select(col("source"), toks.as("t"),
+        coalesce(col("dropped"), lit(false)).as("dropped"))
+      .groupBy(col("source"))
+      .agg(sum(col("t")).as("n_tokens"),
+        sum(when(col("dropped"), col("t")).otherwise(0L)).as("tokens_dropped"))
+      .withColumn("token_dup_rate",
+        round(col("tokens_dropped").cast("double") / col("n_tokens"), 4))
   }
 
   /** DuckDB twin of [[dedupTokenRates]] — same shared media-aware drop
@@ -631,13 +615,11 @@ object Clusters {
         (-col("doc_id")).as("neg"), col("doc_id").as("kid"))).as("m"))
       .select(col("component"), col("m.kid").as("keeper_id"),
         col("m.q").as("keeper_quality"))
-    Present.sortSmall(
-      memberQ.join(keepers, Seq("component"))
-        .select(col("doc_id"), col("quality_score"),
-          col("mdrop").as("media_dropped"), col("keeper_id"),
-          col("keeper_quality"),
-          (col("doc_id") === col("keeper_id")).as("is_keeper")),
-      col("doc_id"))
+    memberQ.join(keepers, Seq("component"))
+      .select(col("doc_id"), col("quality_score"),
+        col("mdrop").as("media_dropped"), col("keeper_id"),
+        col("keeper_quality"),
+        (col("doc_id") === col("keeper_id")).as("is_keeper"))
   }
 
   /** DuckDB twin of [[dedupKeepQuality]] — the text component CTE plus

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.{Present, Tables}
+import graft.Tables
 import graft.io.ParquetUpsertSink
 
 /** The composed streaming ingest path of a training-data corpus:
@@ -75,9 +75,7 @@ object CorpusIngest {
   def ingest(spark: SparkSession, sfDir: String): DataFrame = {
     val all = Tables.table(spark, sfDir, "documents")
     val idx = StreamDedup.index(all.filter(col("doc_id") % 2 === 0))
-    Present.sortSmall(
-      cleanBatch(all.filter(col("doc_id") % 2 === 1), idx),
-      col("doc_id"))
+    cleanBatch(all.filter(col("doc_id") % 2 === 1), idx)
   }
 
   /** DuckDB twin: the composed predicate — quality gate, no even

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.util.sketch.BloomFilter
 
-import graft.{Present, Tables}
+import graft.Tables
 import graft.Tables.Resplit
 import graft.functions.BloomFunctions.bloom_might_contain
 import graft.functions.HashFunctions.{hashed_shingle_set, minhash_signature, simhash_md5, sorted_intersect_count, word_shingles}
@@ -64,7 +64,6 @@ object Dedup {
     Tables.table(spark, sfDir, "documents")
       .groupBy(md5(col("text").cast("binary")).as("content_key"))
       .agg(min(col("doc_id")).as("keeper_doc_id"), count(lit(1)).as("n_copies"))
-      .transform(Present.sortSmall(_, col("keeper_doc_id")))
 
   val exactSql: String =
     """SELECT md5(text) AS content_key,
@@ -82,7 +81,6 @@ object Dedup {
     Tables.table(spark, sfDir, "documents")
       .groupBy(Text.bowKey(Text.tokens(col("text"))).as("bow_key"))
       .agg(min(col("doc_id")).as("keeper_doc_id"), count(lit(1)).as("n_copies"))
-      .transform(Present.sortSmall(_, col("keeper_doc_id")))
 
   val bagOfWordsSql: String =
     s"""SELECT ${Text.bowKeySql}
@@ -124,10 +122,8 @@ object Dedup {
     // pairs are copied out of the loop — acceptable for this capped
     // baseline; MinHash-LSH below is the scale path
     val jac = round(inter / (col("na") + col("nb") - inter), 4)
-    Present.sortSmall(
-      a.join(b, col("doc_a") < col("doc_b") && jac >= jaccardThreshold)
-        .select(col("doc_a"), col("doc_b"), jac.as("jaccard")),
-      col("doc_a"), col("doc_b"))
+    a.join(b, col("doc_a") < col("doc_b") && jac >= jaccardThreshold)
+      .select(col("doc_a"), col("doc_b"), jac.as("jaccard"))
    }
 
   val ngramJaccardSql: String =
@@ -193,15 +189,13 @@ object Dedup {
       .distinct()
     val inter = sorted_intersect_count(col("ha"), col("hb")).cast("double")
     val jac = round(inter / (col("na") + col("nb") - inter), 4)
-    Present.sortSmall(
-      cand
-        .join(docs.select(col("doc_id").as("doc_a"), col("hs").as("ha"),
-          col("n").as("na")), Seq("doc_a"))
-        .join(docs.select(col("doc_id").as("doc_b"), col("hs").as("hb"),
-          col("n").as("nb")), Seq("doc_b"))
-        .filter(jac >= t)
-        .select(col("doc_a"), col("doc_b"), jac.as("jaccard")),
-      col("doc_a"), col("doc_b"))
+    cand
+      .join(docs.select(col("doc_id").as("doc_a"), col("hs").as("ha"),
+        col("n").as("na")), Seq("doc_a"))
+      .join(docs.select(col("doc_id").as("doc_b"), col("hs").as("hb"),
+        col("n").as("nb")), Seq("doc_b"))
+      .filter(jac >= t)
+      .select(col("doc_a"), col("doc_b"), jac.as("jaccard"))
   }
 
   /** Oracle: the UNCAPPED naive pairwise ground truth — every pair the
@@ -312,9 +306,7 @@ object Dedup {
         .select(col(contained).as("contained_doc"), col(container).as("container_doc"),
           c.as("containment"))
     }
-    Present.sortSmall(
-      dir("doc_a", "doc_b", "na_a").unionAll(dir("doc_b", "doc_a", "na_b")),
-      col("contained_doc"), col("container_doc"))
+    dir("doc_a", "doc_b", "na_a").unionAll(dir("doc_b", "doc_a", "na_b"))
   }
 
   val containmentSql: String =
@@ -366,8 +358,7 @@ object Dedup {
     * only when you mean to execute it.
     */
   def decontaminate(spark: SparkSession, sfDir: String): DataFrame =
-    Present.sortSmall(contaminationPairs(spark, sfDir),
-      col("train_doc"), col("bench_doc"))
+    contaminationPairs(spark, sfDir)
 
   /** The raw contaminated pair set (no presentation sort) — shared by
     * [[decontaminate]] and [[Retrieval.hardNegatives]].
@@ -406,15 +397,13 @@ object Dedup {
     * (read from the [[Shared.memo]] staging).
     */
   def contaminationReport(spark: SparkSession, sfDir: String): DataFrame =
-    Present.sortSmall(
-      contaminationPairs(spark, sfDir)
-        .groupBy(col("bench_doc"))
-        .agg(count(lit(1)).as("n_train_docs"),
-          max(col("n_shared")).as("max_shared"),
-          max(struct(col("n_shared").as("s"), col("train_doc").as("d"))).as("m"))
-        .select(col("bench_doc"), col("n_train_docs"), col("max_shared"),
-          col("m.d").as("worst_train_doc")),
-      col("bench_doc"))
+    contaminationPairs(spark, sfDir)
+      .groupBy(col("bench_doc"))
+      .agg(count(lit(1)).as("n_train_docs"),
+        max(col("n_shared")).as("max_shared"),
+        max(struct(col("n_shared").as("s"), col("train_doc").as("d"))).as("m"))
+      .select(col("bench_doc"), col("n_train_docs"), col("max_shared"),
+        col("m.d").as("worst_train_doc"))
 
   /** DuckDB twin of [[contaminationReport]] — worst offender by
     * (n_shared, train_doc) max, mirrored via row_number.
@@ -484,15 +473,13 @@ object Dedup {
     // spans, count(dup) = duplicated ones): no separate n_spans
     // re-tokenize scan, no right_outer — every doc has ≥ 1 span (short
     // docs yield their whole text), so none is lost
-    Present.sortSmall(
-      docSpans
-        .join(dupSpan, Seq("span"), "left_outer")
-        .groupBy(col("doc_id"))
-        .agg(count(col("dup")).as("n_dup_spans"),
-          count(lit(1)).cast("int").as("n_spans"))
-        .select(col("doc_id"), col("n_dup_spans"), col("n_spans"),
-          round(col("n_dup_spans").cast("double") / col("n_spans"), 4).as("dup_frac")),
-      col("doc_id"))
+    docSpans
+      .join(dupSpan, Seq("span"), "left_outer")
+      .groupBy(col("doc_id"))
+      .agg(count(col("dup")).as("n_dup_spans"),
+        count(lit(1)).cast("int").as("n_spans"))
+      .select(col("doc_id"), col("n_dup_spans"), col("n_spans"),
+        round(col("n_dup_spans").cast("double") / col("n_spans"), 4).as("dup_frac"))
   }
 
   /** DuckDB twin: the same distinct fixed-length windows via a
@@ -598,17 +585,15 @@ object Dedup {
         array_join(
           transform(array_sort(collect_list(struct(col("i"), col("tok")))),
             s => s.getField("tok")), " ").as("ct"))
-    Present.sortSmall(
-      docs
-        .join(flagged.withColumn("is_flagged", lit(true)), Seq("doc_id"), "left_outer")
-        .join(rebuilt, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          size(col("t")).as("n_tokens"),
-          when(col("is_flagged"), size(col("t")) - coalesce(col("n_kept"), lit(0L)))
-            .otherwise(lit(0)).cast("int").as("n_removed"),
-          when(col("is_flagged"), coalesce(col("ct"), lit("")))
-            .otherwise(array_join(col("t"), " ")).as("clean_text")),
-      col("doc_id"))
+    docs
+      .join(flagged.withColumn("is_flagged", lit(true)), Seq("doc_id"), "left_outer")
+      .join(rebuilt, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
+        size(col("t")).as("n_tokens"),
+        when(col("is_flagged"), size(col("t")) - coalesce(col("n_kept"), lit(0L)))
+          .otherwise(lit(0)).cast("int").as("n_removed"),
+        when(col("is_flagged"), coalesce(col("ct"), lit("")))
+          .otherwise(array_join(col("t"), " ")).as("clean_text"))
   }
 
   /** DuckDB twin of [[dupSpanRemoval]]: same positional windows (list
@@ -711,7 +696,7 @@ object Dedup {
     val removed = occ.join(dupKeeper, Seq("lh"))
       .filter(!(struct(col("doc_id"), col("pos")) === col("keeper")))
       .select(col("doc_id"), col("pos"))
-    Present.sortSmall(rebuildWithoutLines(withLines, removed), col("doc_id"))
+    rebuildWithoutLines(withLines, removed)
   }
 
   /** Rebuild (doc_id, n_lines, n_removed_lines, clean_text) from the
@@ -785,7 +770,6 @@ object Dedup {
     */
   def minhashLsh(spark: SparkSession, sfDir: String): DataFrame =
     minhashLshPairs(spark, sfDir)
-      .transform(Present.sortSmall(_, col("doc_a"), col("doc_b")))
 
   /** MinHash signature + hashed shingle set of any (doc_id, text)
     * frame: (doc_id, sig, hs, n) — the per-doc projection both the
@@ -913,14 +897,12 @@ object Dedup {
     val matches = aggregate(
       zip_with(col("sa"), col("sb"), (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v)
-    Present.sortSmall(
-      pairs
-        .join(sigs.select(col("doc_id").as("doc_a"), col("msig").as("sa")), Seq("doc_a"))
-        .join(sigs.select(col("doc_id").as("doc_b"), col("msig").as("sb")), Seq("doc_b"))
-        .withColumn("est", round(matches.cast("double") / mhErrorSeeds, 4))
-        .withColumn("abs_err", round(abs(col("jaccard") - col("est")), 4))
-        .select(col("doc_a"), col("doc_b"), col("jaccard"), col("est"), col("abs_err")),
-      col("doc_a"), col("doc_b"))
+    pairs
+      .join(sigs.select(col("doc_id").as("doc_a"), col("msig").as("sa")), Seq("doc_a"))
+      .join(sigs.select(col("doc_id").as("doc_b"), col("msig").as("sb")), Seq("doc_b"))
+      .withColumn("est", round(matches.cast("double") / mhErrorSeeds, 4))
+      .withColumn("abs_err", round(abs(col("jaccard") - col("est")), 4))
+      .select(col("doc_a"), col("doc_b"), col("jaccard"), col("est"), col("abs_err"))
   }
 
   /** DuckDB twin of [[minhashError]] — replays the md5-seeded
@@ -975,8 +957,7 @@ object Dedup {
       .select(col("threshold"), explode(array(col("doc_a"), col("doc_b"))).as("doc"))
       .distinct()
       .groupBy(col("threshold")).agg(count(lit(1)).as("n_docs"))
-    Present.sortSmall(
-      nPairs.join(nDocs, Seq("threshold")), col("threshold"))
+    nPairs.join(nDocs, Seq("threshold"))
   }
 
   /** DuckDB twin of [[thresholdSweep]] (thresholds cast to DOUBLE so
@@ -1084,15 +1065,13 @@ object Dedup {
     }.reduce(_ unionAll _)
       .groupBy(col("r"), col("b"))
       .agg(count(lit(1)).as("n_truth"), sum(col("ip")).as("sip"))
-    Present.sortSmall(
-      theo.join(nCand, Seq("r", "b"), "left").join(nDet, Seq("r", "b"), "left")
-        .select(col("r"), col("b"), col("n_truth"),
-          coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-          coalesce(col("n_detected"), lit(0L)).as("n_detected"),
-          round(coalesce(col("n_detected"), lit(0L)).cast("double") / col("n_truth"), 4)
-            .as("recall"),
-          round(col("sip") / (col("n_truth") * 10000.0), 4).as("theory_recall")),
-      col("r"))
+    theo.join(nCand, Seq("r", "b"), "left").join(nDet, Seq("r", "b"), "left")
+      .select(col("r"), col("b"), col("n_truth"),
+        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
+        coalesce(col("n_detected"), lit(0L)).as("n_detected"),
+        round(coalesce(col("n_detected"), lit(0L)).cast("double") / col("n_truth"), 4)
+          .as("recall"),
+        round(col("sip") / (col("n_truth") * 10000.0), 4).as("theory_recall"))
   }
 
   /** DuckDB twin of [[lshRecall]] — replays the md5 signature, the
@@ -1180,14 +1159,12 @@ object Dedup {
     // shingles are distinct per doc (WordShingles), so count per s IS
     // the document frequency
     val dfreq = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    Present.sortSmall(
-      sh.join(dfreq, Seq("s"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_shingles"),
-          sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_unique"))
-        .withColumn("novelty",
-          round(col("n_unique").cast("double") / col("n_shingles"), 4)),
-      col("doc_id"))
+    sh.join(dfreq, Seq("s"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_shingles"),
+        sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_unique"))
+      .withColumn("novelty",
+        round(col("n_unique").cast("double") / col("n_shingles"), 4))
   }
 
   /** DuckDB twin of [[novelty]]. */
@@ -1222,13 +1199,11 @@ object Dedup {
     val dfreq = docs
       .select(col("doc_id"), explode(shingles(Text.tokens(col("text")))).as("shingle"))
       .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    Present.sortSmall(
-      dfreq.crossJoin(broadcast(nDocs)) // one scalar rides along
-        .orderBy(col("df").desc, col("shingle").asc)
-        .limit(boilerplateTopK)
-        .select(col("shingle"), col("df"),
-          round(col("df").cast("double") / col("n_docs"), 4).as("pct_docs")),
-      col("df").desc, col("shingle"))
+    dfreq.crossJoin(broadcast(nDocs)) // one scalar rides along
+      .orderBy(col("df").desc, col("shingle").asc)
+      .limit(boilerplateTopK)
+      .select(col("shingle"), col("df"),
+        round(col("df").cast("double") / col("n_docs"), 4).as("pct_docs"))
   }
 
   /** DuckDB twin of [[boilerplateShingles]]. */
@@ -1285,7 +1260,7 @@ object Dedup {
           count_distinct(col("train_doc")).as("n_train_docs"))
         .select(lit(n).as("n"), col("n_pairs"), col("n_train_docs"))
     }
-    Present.sortSmall(perN.reduce(_ unionAll _), col("n"))
+    perN.reduce(_ unionAll _)
   }
 
   /** DuckDB n-shingle expression over a pre-split token array `t` —
@@ -1327,16 +1302,14 @@ object Dedup {
       .select(col("x.doc_id").as("train_doc"), col("y.doc_id").as("bench_doc"))
       .distinct()
     val inter = sorted_intersect_count(col("ha"), col("hb")).cast("double")
-    Present.sortSmall(
-      cand
-        .join(st.select(col("doc_id").as("train_doc"), col("hs").as("ha"),
-          col("n").as("na")), Seq("train_doc"))
-        .join(broadcast(sb.select(col("doc_id").as("bench_doc"), col("hs").as("hb"),
-          col("n").as("nb"))), Seq("bench_doc"))
-        .withColumn("jaccard", round(inter / (col("na") + col("nb") - inter), 4))
-        .filter(col("jaccard") >= jaccardThreshold)
-        .select(col("train_doc"), col("bench_doc"), col("jaccard")),
-      col("train_doc"), col("bench_doc"))
+    cand
+      .join(st.select(col("doc_id").as("train_doc"), col("hs").as("ha"),
+        col("n").as("na")), Seq("train_doc"))
+      .join(broadcast(sb.select(col("doc_id").as("bench_doc"), col("hs").as("hb"),
+        col("n").as("nb"))), Seq("bench_doc"))
+      .withColumn("jaccard", round(inter / (col("na") + col("nb") - inter), 4))
+      .filter(col("jaccard") >= jaccardThreshold)
+      .select(col("train_doc"), col("bench_doc"), col("jaccard"))
   }
 
   val decontaminateFuzzySql: String =
@@ -1377,12 +1350,10 @@ object Dedup {
       .agg(count(lit(1)).as("n_shared"))
     val j = round(col("n_shared").cast("double") /
       (col("na") + col("nb") - col("n_shared")), 4)
-    Present.sortSmall(
-      shared
-        .join(sizes.select(col("source").as("source_a"), col("n").as("na")), Seq("source_a"))
-        .join(sizes.select(col("source").as("source_b"), col("n").as("nb")), Seq("source_b"))
-        .select(col("source_a"), col("source_b"), col("n_shared"), j.as("jaccard")),
-      col("source_a"), col("source_b"))
+    shared
+      .join(sizes.select(col("source").as("source_a"), col("n").as("na")), Seq("source_a"))
+      .join(sizes.select(col("source").as("source_b"), col("n").as("nb")), Seq("source_b"))
+      .select(col("source_a"), col("source_b"), col("n_shared"), j.as("jaccard"))
   }
 
   val sourceOverlapSql: String =
@@ -1453,7 +1424,6 @@ object Dedup {
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
       .filter(col("hamming") <= hammingMax)
       .distinct()
-      .transform(Present.sortSmall(_, col("doc_a"), col("doc_b")))
   }
 
   /** Oracle: naive O(n²) SimHash Hamming in SQL (blocking is lossless

@@ -39,16 +39,14 @@ object Layout {
   def zorderLayout(spark: SparkSession, sfDir: String): DataFrame = {
     val x = col("user_id")
     val y = floor(col("value")).cast("long")
-    graft.Present.sortSmall(
-      Tables.table(spark, sfDir, "events")
-        .select(x.as("x"), y.as("y"),
-          ZOrderExpressions.mortonCode(x, y).as("z"))
-        .groupBy(shiftright(col("z"), zorderShift).as("bucket"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          min(col("x")).as("x_min"), max(col("x")).as("x_max"),
-          min(col("y")).as("y_min"), max(col("y")).as("y_max")),
-      col("bucket"))
+    Tables.table(spark, sfDir, "events")
+      .select(x.as("x"), y.as("y"),
+        ZOrderExpressions.mortonCode(x, y).as("z"))
+      .groupBy(shiftright(col("z"), zorderShift).as("bucket"))
+      .agg(
+        count(lit(1)).as("n_events"),
+        min(col("x")).as("x_min"), max(col("x")).as("x_max"),
+        min(col("y")).as("y_min"), max(col("y")).as("y_max"))
   }
 
   val zorderLayoutSql: String = {

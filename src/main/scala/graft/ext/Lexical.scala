@@ -74,8 +74,7 @@ object Lexical {
       .orderBy(col("pmi").desc, col("w1"), col("w2"))
       .limit(collocTopK)
     val w = Window.orderBy(col("pmi").desc, col("w1"), col("w2"))
-    graft.Present.sortSmall(
-      scored.withColumn("rank", row_number().over(w)), col("rank"))
+    scored.withColumn("rank", row_number().over(w))
   }
 
   val collocationsSql: String =
@@ -136,17 +135,15 @@ object Lexical {
       .withColumn("b", expr("(3 * rn + cnt - 1) div cnt").cast("int"))
     val bucket = when(col("b") === 1, "head")
       .when(col("b") === 2, "middle").otherwise("tail")
-    graft.Present.sortSmall(
-      // aggregate on the exact integer keys: Σsk is order-independent
-      // (double summation is not — a boundary-straddling mean was a
-      // measured cross-engine flake), one division at the end
-      ranked.groupBy(col("source"), bucket.as("bucket"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          round(sum(col("sk")).cast("double") / (lit(10000.0) * count(lit(1))), 4)
-            .as("mean_logprob"),
-          round(min(col("sk")).cast("double") / 10000.0, 4).as("min_logprob")),
-      col("source"), col("bucket"))
+    // aggregate on the exact integer keys: Σsk is order-independent
+    // (double summation is not — a boundary-straddling mean was a
+    // measured cross-engine flake), one division at the end
+    ranked.groupBy(col("source"), bucket.as("bucket"))
+      .agg(
+        count(lit(1)).as("n_docs"),
+        round(sum(col("sk")).cast("double") / (lit(10000.0) * count(lit(1))), 4)
+          .as("mean_logprob"),
+        round(min(col("sk")).cast("double") / 10000.0, 4).as("min_logprob"))
   }
 
   lazy val ccnetBucketsSql: String =
@@ -207,7 +204,6 @@ object Lexical {
         concat_ws(" ", masked).as("masked_text"),
         concat_ws(" ", targets).as("targets"),
         size(targets).cast("long").as("n_masked"))
-      .transform(graft.Present.sortSmall(_, col("doc_id")))
   }
 
   val mlmMaskingSql: String =
@@ -242,19 +238,17 @@ object Lexical {
     */
   def compressionRatio(spark: SparkSession, sfDir: String): DataFrame = {
     val t = Text.tokens(col("text"))
-    graft.Present.sortSmall(
-      Tables.table(spark, sfDir, "documents")
-        .groupBy(col("source"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(length(col("text")).cast("long")).as("n_chars"),
-          sum(size(t).cast("long")).as("ws_tokens"),
-          sum(Text.bpeTokenEstimate(col("text"))).as("bpe_tokens"))
-        .withColumn("chars_per_token",
-          round(col("n_chars").cast("double") / col("bpe_tokens"), 4))
-        .withColumn("fertility",
-          round(col("bpe_tokens").cast("double") / col("ws_tokens"), 4)),
-      col("source"))
+    Tables.table(spark, sfDir, "documents")
+      .groupBy(col("source"))
+      .agg(
+        count(lit(1)).as("n_docs"),
+        sum(length(col("text")).cast("long")).as("n_chars"),
+        sum(size(t).cast("long")).as("ws_tokens"),
+        sum(Text.bpeTokenEstimate(col("text"))).as("bpe_tokens"))
+      .withColumn("chars_per_token",
+        round(col("n_chars").cast("double") / col("bpe_tokens"), 4))
+      .withColumn("fertility",
+        round(col("bpe_tokens").cast("double") / col("ws_tokens"), 4))
   }
 
   val compressionRatioSql: String =

@@ -230,7 +230,6 @@ object Multimodal {
         MediaRecord(id, "image", syntheticPng(id), 0L)))
       .mapPartitions(decodeImages)
     decoded.toDF()
-      .transform(graft.Present.sortSmall(_, col("doc_id")))
   }
 
   val mediaDecodeSql: String =
@@ -349,7 +348,6 @@ object Multimodal {
         MediaRecord(id, "audio", syntheticWav(id), 0L)))
       .mapPartitions(decodeAudio)
     decoded.toDF()
-      .transform(graft.Present.sortSmall(_, col("doc_id")))
   }
 
   val audioDecodeSql: String =
@@ -512,7 +510,6 @@ object Multimodal {
         MediaRecord(id, "video", syntheticGif(id), 0L)))
       .mapPartitions(decodeFrameSamples)
     decoded.toDF()
-      .transform(graft.Present.sortSmall(_, col("doc_id"), col("frame_idx")))
   }
 
   val videoFramesampleSql: String =
@@ -552,7 +549,6 @@ object Multimodal {
         when(col("media_type") === "image", 1)
           .when(col("media_type") === "audio", (col("byte_len") / 64).cast("int") + 1)
           .otherwise((col("byte_len") / 256).cast("int") + 1).as("frame_count"))
-      .transform(graft.Present.sortSmall(_, col("doc_id")))
 
   val mediaFeaturesSql: String =
     """SELECT doc_id,
@@ -593,7 +589,6 @@ object Multimodal {
         count(lit(1)).as("frames_sampled"),
         sum(col("frame_feature")).as("feature_sum"),
         min(col("frame_feature")).as("feature_min"))
-      .transform(graft.Present.sortSmall(_, col("doc_id")))
   }
 
   // ——— media dedup ———
@@ -610,7 +605,6 @@ object Multimodal {
     mediaTable(spark, sfDir).toDF()
       .groupBy(col("media_type"), md5(col("payload")).as("content_key"))
       .agg(min(col("doc_id")).as("keeper_doc_id"), count(lit(1)).as("n_copies"))
-      .transform(graft.Present.sortSmall(_, col("media_type"), col("keeper_doc_id")))
 
   val mediaDedupExactSql: String =
     """SELECT CASE WHEN doc_id % 3 = 0 THEN 'image'
@@ -676,8 +670,7 @@ object Multimodal {
     * ([[Similarity.dedupByEmbeddingLsh]]).
     */
   def mediaDedupFeature(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Present.sortSmall(mediaDedupPairs(spark, sfDir),
-      col("media_type"), col("doc_a"), col("doc_b"))
+    mediaDedupPairs(spark, sfDir)
 
   /** The banded+verified pair core of [[mediaDedupFeature]], before
     * presentation: one row per qualifying unordered pair, no distinct
@@ -811,11 +804,9 @@ object Multimodal {
     spark0.conf.getAll.foreach { case (k, v) =>
       scala.util.Try(spark.conf.set(k, v)) }
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    graft.Present.sortSmall(
-      mediaDedupAssignments(spark, sfDir)
-        .withColumn("cluster_size", count(lit(1))
-          .over(org.apache.spark.sql.expressions.Window.partitionBy(col("keeper_id")))),
-      col("doc_id"))
+    mediaDedupAssignments(spark, sfDir)
+      .withColumn("cluster_size", count(lit(1))
+        .over(org.apache.spark.sql.expressions.Window.partitionBy(col("keeper_id"))))
   }
 
   /** Unsorted `(doc_id, keeper_id)` media near-dup assignment — the
@@ -947,15 +938,13 @@ object Multimodal {
       .withColumn("src_h", lit(64) +
         conv(substring(md5(col("payload")), 1, 8), 16, 10).cast("long") % 448)
       .withColumn("long_edge", greatest(col("src_w"), col("src_h")))
-    graft.Present.sortSmall(
-      media.select(
-        col("doc_id"), col("media_type"), col("src_w"), col("src_h"),
-        when(col("long_edge") <= resizeTarget, col("src_w"))
-          .otherwise(expr(s"src_w * $resizeTarget DIV long_edge")).as("out_w"),
-        when(col("long_edge") <= resizeTarget, col("src_h"))
-          .otherwise(expr(s"src_h * $resizeTarget DIV long_edge")).as("out_h"),
-        (col("long_edge") > resizeTarget).as("resized")),
-      col("doc_id"))
+    media.select(
+      col("doc_id"), col("media_type"), col("src_w"), col("src_h"),
+      when(col("long_edge") <= resizeTarget, col("src_w"))
+        .otherwise(expr(s"src_w * $resizeTarget DIV long_edge")).as("out_w"),
+      when(col("long_edge") <= resizeTarget, col("src_h"))
+        .otherwise(expr(s"src_h * $resizeTarget DIV long_edge")).as("out_h"),
+      (col("long_edge") > resizeTarget).as("resized"))
   }
 
   /** DuckDB twin of [[mediaResize]]: same stub dims, same integer
@@ -1013,14 +1002,12 @@ object Multimodal {
         slice(col("embedding"), 1, alignDims).cast("array<double>").as("tv"))
     def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-    graft.Present.sortSmall(
-      media.join(text, "doc_id")
-        .withColumn("align_score",
-          round(dot(col("mv"), col("tv")) /
-            (sqrt(dot(col("mv"), col("mv"))) * sqrt(dot(col("tv"), col("tv")))), 4))
-        .select(col("doc_id"), col("media_type"), col("align_score"),
-          (col("align_score") >= alignThreshold).as("kept")),
-      col("doc_id"))
+    media.join(text, "doc_id")
+      .withColumn("align_score",
+        round(dot(col("mv"), col("tv")) /
+          (sqrt(dot(col("mv"), col("mv"))) * sqrt(dot(col("tv"), col("tv")))), 4))
+      .select(col("doc_id"), col("media_type"), col("align_score"),
+        (col("align_score") >= alignThreshold).as("kept"))
   }
 
   /** DuckDB twin of [[mediaTextAlign]]: same stub vector arithmetic,

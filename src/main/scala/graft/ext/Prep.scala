@@ -43,9 +43,7 @@ object Prep {
     * stream can be written partition-local.
     */
   def chunkDocs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Present.sortSmall(
-      chunkify(Tables.table(spark, sfDir, "documents")),
-      col("doc_id"), col("chunk_id"))
+    chunkify(Tables.table(spark, sfDir, "documents"))
 
   /** Core chunk transform over any `(doc_id, text)` relation.
     * Stateless per-row expression work, so the IDENTICAL code path
@@ -104,15 +102,13 @@ object Prep {
     */
   def shardPlan(spark: SparkSession, sfDir: String): DataFrame = {
     val h = Text.md5Long(concat(lit("shard:"), col("doc_id").cast("string")))
-    graft.Present.sortSmall(
-      Tables.table(spark, sfDir, "documents")
-        .select(col("doc_id"), h.as("h"))
-        .withColumn("shard", (col("h") % nShards).cast("int"))
-        .withColumn("pos",
-          row_number().over(
-            Window.partitionBy(col("shard")).orderBy(col("h"), col("doc_id"))))
-        .select(col("doc_id"), col("shard"), col("pos")),
-      col("doc_id"))
+    Tables.table(spark, sfDir, "documents")
+      .select(col("doc_id"), h.as("h"))
+      .withColumn("shard", (col("h") % nShards).cast("int"))
+      .withColumn("pos",
+        row_number().over(
+          Window.partitionBy(col("shard")).orderBy(col("h"), col("doc_id"))))
+      .select(col("doc_id"), col("shard"), col("pos"))
   }
 
   /** DuckDB twin of [[shardPlan]] (md5Long is non-negative, so `%`
@@ -174,15 +170,13 @@ object Prep {
       .foldRight(lit(curriculumCuts.size + 1)) { case ((cut, i), els) =>
         when(col("q") >= cut, lit(i + 1)).otherwise(els)
       }
-    graft.Present.sortSmall(
-      Tables.table(spark, sfDir, "documents")
-        .select(col("doc_id"), q.as("q"), h.as("h"))
-        .withColumn("phase", phase)
-        .withColumn("pos",
-          row_number().over(
-            Window.partitionBy(col("phase")).orderBy(col("h"), col("doc_id"))))
-        .select(col("doc_id"), col("q"), col("phase"), col("pos")),
-      col("doc_id"))
+    Tables.table(spark, sfDir, "documents")
+      .select(col("doc_id"), q.as("q"), h.as("h"))
+      .withColumn("phase", phase)
+      .withColumn("pos",
+        row_number().over(
+          Window.partitionBy(col("phase")).orderBy(col("h"), col("doc_id"))))
+      .select(col("doc_id"), col("q"), col("phase"), col("pos"))
   }
 
   /** DuckDB twin of [[curriculum]] — same 4-dp-rounded score, same
@@ -246,16 +240,14 @@ object Prep {
               .rowsBetween(Window.unboundedPreceding, -1)),
           lit(0L)))
       .select(col("band"), col("boff"))
-    graft.Present.sortSmall(
-      docs.join(broadcast(bandOff), Seq("band"))
-        .withColumn("cum_tokens",
-          col("boff") + sum(col("n_tokens")).over(
-            Window.partitionBy(col("band")).orderBy(col("doc_id"))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .crossJoin(broadcast(total))
-        .filter(col("cum_tokens") <= col("tot") * budgetFrac)
-        .select(col("doc_id"), col("q"), col("n_tokens"), col("cum_tokens")),
-      col("doc_id"))
+    docs.join(broadcast(bandOff), Seq("band"))
+      .withColumn("cum_tokens",
+        col("boff") + sum(col("n_tokens")).over(
+          Window.partitionBy(col("band")).orderBy(col("doc_id"))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .crossJoin(broadcast(total))
+      .filter(col("cum_tokens") <= col("tot") * budgetFrac)
+      .select(col("doc_id"), col("q"), col("n_tokens"), col("cum_tokens"))
   }
 
   /** DuckDB twin of [[budgetSelect]] — deliberately the NAIVE global
@@ -389,16 +381,14 @@ object Prep {
         docs.filter(col("doc_id") % 19 === 5)
           .select((col("doc_id") + 1000000L).as("doc_id"),
             md5(concat(col("text"), lit(" new")).cast("binary")).as("h2")))
-    graft.Present.sortSmall(
-      v1.join(v2, Seq("doc_id"), "full_outer")
-        .withColumn("status",
-          when(col("h1").isNull, lit("added"))
-            .when(col("h2").isNull, lit("removed"))
-            .when(col("h1") =!= col("h2"), lit("changed"))
-            .otherwise(lit("unchanged")))
-        .filter(col("status") =!= "unchanged")
-        .select(col("doc_id"), col("status")),
-      col("doc_id"))
+    v1.join(v2, Seq("doc_id"), "full_outer")
+      .withColumn("status",
+        when(col("h1").isNull, lit("added"))
+          .when(col("h2").isNull, lit("removed"))
+          .when(col("h1") =!= col("h2"), lit("changed"))
+          .otherwise(lit("unchanged")))
+      .filter(col("status") =!= "unchanged")
+      .select(col("doc_id"), col("status"))
   }
 
   /** DuckDB twin of [[corpusDiff]] — same derived v2, same hash-only
@@ -597,7 +587,6 @@ object Prep {
         frac(n, prev).as("frac_of_prev"))
     }: _*)
     counters.select(explode(stages).as("s")).select(col("s.*"))
-      .transform(graft.Present.sortSmall(_, col("stage_idx")))
   }
 
   def filterFunnel(spark: SparkSession, sfDir: String): DataFrame =
@@ -613,13 +602,11 @@ object Prep {
     * their surviving contribution).
     */
   def funnelBySource(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Present.sortSmall(
-      funnelCounts(Tables.table(spark, sfDir, "documents"),
-        groupCols = Seq(col("source")), carry = Seq(col("source")))
-        .withColumn("survival",
-          when(col("n0") === 0L, lit(null))
-            .otherwise(round(col("n5").cast("double") / col("n0"), 4))),
-      col("source"))
+    funnelCounts(Tables.table(spark, sfDir, "documents"),
+      groupCols = Seq(col("source")), carry = Seq(col("source")))
+      .withColumn("survival",
+        when(col("n0") === 0L, lit(null))
+          .otherwise(round(col("n5").cast("double") / col("n0"), 4)))
 
   /** DuckDB twin of [[funnelBySource]] — the [[filterFunnelSql]] CTEs
     * grouped by source.
@@ -766,7 +753,6 @@ object Prep {
         fim.as("fim"),
         n.cast("long").as("n_tokens"),
         when(fim, psm).otherwise(col("text")).as("training_text"))
-      .transform(graft.Present.sortSmall(_, col("doc_id")))
   }
 
   /** DuckDB twin of [[fimExamples]]: identical md5 cut arithmetic,

@@ -80,10 +80,8 @@ object Retrieval {
       bm25TopK)
     val w = Window.partitionBy(col("query_doc"))
       .orderBy(col("score").desc, col("doc_id").asc)
-    graft.Present.sortSmall(
-      top.withColumn("rank", row_number().over(w))
-        .select(col("query_doc"), col("doc_id"), col("score"), col("rank")),
-      col("query_doc"), col("rank"))
+    top.withColumn("rank", row_number().over(w))
+      .select(col("query_doc"), col("doc_id"), col("score"), col("rank"))
   }
 
   private[ext] def scoredBm25(spark: SparkSession, sfDir: String): DataFrame =
@@ -201,10 +199,8 @@ object Retrieval {
       cand, Seq(col("anchor")), Seq(col("h").asc, col("negative").asc), contrastiveK)
     val w = Window.partitionBy(col("anchor"))
       .orderBy(col("h").asc, col("negative").asc)
-    graft.Present.sortSmall(
-      top.withColumn("neg_rank", row_number().over(w))
-        .select(col("anchor"), col("positive"), col("negative"), col("neg_rank")),
-      col("anchor"), col("neg_rank"))
+    top.withColumn("neg_rank", row_number().over(w))
+      .select(col("anchor"), col("positive"), col("negative"), col("neg_rank"))
   }
 
   /** DuckDB twin of [[contrastivePairs]]: ground-truth pairwise near-dup
@@ -313,13 +309,11 @@ object Retrieval {
         coalesce(lit(1.0) / (lit(rrfK) + col("dense_rank")), lit(0.0)), 6)
     val fw = Window.partitionBy(col("query_doc"))
       .orderBy(col("rrf").desc, col("doc_id"))
-    graft.Present.sortSmall(
-      lex.join(dense, Seq("query_doc", "doc_id"), "full_outer")
-        .withColumn("rrf", rrf)
-        .withColumn("rank", row_number().over(fw))
-        .filter(col("rank") <= bm25TopK)
-        .select(col("query_doc"), col("doc_id"), col("rrf"), col("rank")),
-      col("query_doc"), col("rank"))
+    lex.join(dense, Seq("query_doc", "doc_id"), "full_outer")
+      .withColumn("rrf", rrf)
+      .withColumn("rank", row_number().over(fw))
+      .filter(col("rank") <= bm25TopK)
+      .select(col("query_doc"), col("doc_id"), col("rrf"), col("rank"))
   }
 
   /** DuckDB twin of [[hybridRrf]]: the shared BM25 scored CTE filtered

@@ -5,7 +5,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Present, Tables}
+import graft.Tables
 import graft.Tables.Resplit
 import graft.functions.VectorFunctions.{int_vec_dot, vec_cosine, vec_dot}
 
@@ -101,7 +101,7 @@ object Similarity {
 
   /** Exact cosine top-5 neighbors for every 100th vector. */
   def annBruteForce(spark: SparkSession, sfDir: String): DataFrame =
-    Present.sortSmall(bruteForceTop5(spark, sfDir), col("query_id"), col("rank"))
+    bruteForceTop5(spark, sfDir)
 
   val annBruteForceSql: String =
     s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
@@ -201,8 +201,7 @@ object Similarity {
     * block-tiled join above.
     */
   def embeddingPairs(spark: SparkSession, sfDir: String): DataFrame =
-    Present.sortSmall(
-      tiledCosinePairs(spark, sfDir, 0.4), col("vec_a"), col("vec_b"))
+    tiledCosinePairs(spark, sfDir, 0.4)
 
   val embeddingPairsSql: String =
     s"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -219,14 +218,12 @@ object Similarity {
     * vec_id cap); the keeper aggregation is one hash shuffle on dup_id.
     */
   def dedupByEmbedding(spark: SparkSession, sfDir: String): DataFrame =
-    Present.sortSmall(
-      tiledCosinePairs(spark, sfDir, 0.4)
-        .groupBy(col("vec_b").as("dup_id"))
-        .agg(
-          min(col("vec_a")).as("keeper_id"),
-          count(lit(1)).as("n_near_dups"),
-          max(col("sim")).as("best_sim")),
-      col("dup_id"))
+    tiledCosinePairs(spark, sfDir, 0.4)
+      .groupBy(col("vec_b").as("dup_id"))
+      .agg(
+        min(col("vec_a")).as("keeper_id"),
+        count(lit(1)).as("n_near_dups"),
+        max(col("sim")).as("best_sim"))
 
   val dedupByEmbeddingSql: String =
     s"""WITH pairs AS (
@@ -278,14 +275,12 @@ object Similarity {
           / (col("x.nrm") * col("y.nrm")), 4).as("sim"))
       .filter(col("sim") >= 0.4)
       .distinct()
-    Present.sortSmall(
-      pairs
-        .groupBy(col("vec_b").as("dup_id"))
-        .agg(
-          min(col("vec_a")).as("keeper_id"),
-          count(lit(1)).as("n_near_dups"),
-          max(col("sim")).as("best_sim")),
-      col("dup_id"))
+    pairs
+      .groupBy(col("vec_b").as("dup_id"))
+      .agg(
+        min(col("vec_a")).as("keeper_id"),
+        count(lit(1)).as("n_near_dups"),
+        max(col("sim")).as("best_sim"))
   }
 
   /** DuckDB twin of the banding: planes regenerated from md5, band bits
@@ -369,11 +364,9 @@ object Similarity {
           / (col("t.nrm") * col("b.nrm")), 4).as("sim"))
       .filter(col("sim") >= 0.4)
       .distinct()
-    Present.sortSmall(
-      pairs
-        .groupBy(col("train_id"))
-        .agg(count(lit(1)).as("n_bench_hits"), max(col("sim")).as("best_sim")),
-      col("train_id"))
+    pairs
+      .groupBy(col("train_id"))
+      .agg(count(lit(1)).as("n_bench_hits"), max(col("sim")).as("best_sim"))
   }
 
   /** DuckDB twin: the [[dedupByEmbeddingLshSql]] banding CTEs with a
@@ -439,12 +432,10 @@ object Similarity {
       .withColumn("sim", round(cosine(col("qv"), col("embedding")), 4))
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
-    Present.sortSmall(
-      scored
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"), col("sim"), col("rank")),
-      col("query_id"), col("rank"))
+    scored
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 5)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("sim"), col("rank"))
   }
 
   /** SQL literal for plane p's sign array. */
@@ -508,22 +499,20 @@ object Similarity {
     val scale = int8Scale(col("embedding"))
     val err = transform(col("embedding"), v =>
       v.cast("double") - round(v.cast("double") / col("scale")) * col("scale"))
-    Present.sortSmall(
-      Tables.table(spark, sfDir, "embeddings")
-        .withColumn("scale", scale)
-        .filter(col("scale") > 0) // an all-zero vector has nothing to quantize
-        // err materialized as its own column: two consumers reference
-        // it, which stops CollapseProject from inlining (= evaluating)
-        // the per-element lambda chain once per metric
-        .withColumn("err", err)
-        .withColumn("rms_err",
-          round(sqrt(aggregate(col("err"), lit(0.0), (a, e) => a + e * e)
-            / size(col("embedding"))), 6))
-        .withColumn("max_err",
-          round(array_max(transform(col("err"), e => abs(e))), 6))
-        .select(col("vec_id"), round(col("scale"), 6).as("scale"),
-          col("rms_err"), col("max_err")),
-      col("vec_id"))
+    Tables.table(spark, sfDir, "embeddings")
+      .withColumn("scale", scale)
+      .filter(col("scale") > 0) // an all-zero vector has nothing to quantize
+      // err materialized as its own column: two consumers reference
+      // it, which stops CollapseProject from inlining (= evaluating)
+      // the per-element lambda chain once per metric
+      .withColumn("err", err)
+      .withColumn("rms_err",
+        round(sqrt(aggregate(col("err"), lit(0.0), (a, e) => a + e * e)
+          / size(col("embedding"))), 6))
+      .withColumn("max_err",
+        round(array_max(transform(col("err"), e => abs(e))), 6))
+      .select(col("vec_id"), round(col("scale"), 6).as("scale"),
+        col("rms_err"), col("max_err"))
   }
 
   val quantizeInt8Sql: String =
@@ -605,11 +594,9 @@ object Similarity {
         Seq("query_id"))
       .withColumn("sim", round(cosine(col("qv"), col("nv")), 4))
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    Present.sortSmall(
-      rer.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank")),
-      col("query_id"), col("rank"))
+    rer.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 5)
+      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
   }
 
   /** DuckDB twin: same quantization recipe (round parity proven by
@@ -704,12 +691,10 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("sim", round(cosine(col("qv"), col("embedding")), 4))
     val wRank = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
-    Present.sortSmall(
-      scored
-        .withColumn("rank", row_number().over(wRank))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"), col("sim"), col("rank")),
-      col("query_id"), col("rank"))
+    scored
+      .withColumn("rank", row_number().over(wRank))
+      .filter(col("rank") <= 5)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("sim"), col("rank"))
   }
 
   /** The assembled production ANN stack — IVF + ADC, the shape every
@@ -763,11 +748,9 @@ object Similarity {
       .withColumn("sim", round(cosine(col("qv"), col("nv")), 4))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
-    Present.sortSmall(
-      rer.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank")),
-      col("query_id"), col("rank"))
+    rer.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 5)
+      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
   }
 
   /** DuckDB twin: the IVF assignment CTEs joined with the int8
@@ -1007,7 +990,7 @@ object Similarity {
     val emb = Tables.table(spark, sfDir, "embeddings")
     val approx = pqAdcApprox(emb, cents1, codes)
     val cands = pqShortlist(approx)
-    Present.sortSmall(pqRerank(emb, cands), col("query_id"), col("rank"))
+    pqRerank(emb, cands)
   }
 
   /** ADC stage of [[pqSearch]]: broadcast per-query lookup tables
@@ -1137,8 +1120,7 @@ object Similarity {
       .agg(subCols.head, subCols.tail: _*)
       .select(col("query_id"), col("vec_id"),
         (0 until pqSubspaces).map(s => col(s"t$s")).reduce(_ + _).as("adc"))
-    Present.sortSmall(pqRerank(emb, pqShortlist(approx)),
-      col("query_id"), col("rank"))
+    pqRerank(emb, pqShortlist(approx))
   }
 
   /** DuckDB twin builder for [[annIvfPq]] / [[annIvfPqNprobe]]: the PQ
@@ -1382,11 +1364,9 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("sim", round(cosine(col("qv"), col("embedding")), 4))
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
-    Present.sortSmall(
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"), col("sim"), col("rank")),
-      col("query_id"), col("rank"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 5)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("sim"), col("rank"))
   }
 
   /** DuckDB twin of [[annIvfNprobe]] — the annIvf CTEs with the query
@@ -1460,12 +1440,10 @@ object Similarity {
     val iv = annIvf(spark, sfDir).select(col("query_id"), col("neighbor_id"))
     val hits = bf.join(iv, Seq("query_id", "neighbor_id"), "left_semi")
       .groupBy(col("query_id")).agg(count(lit(1)).as("n_hits"))
-    Present.sortSmall(
-      bf.select(col("query_id")).distinct()
-        .join(hits, Seq("query_id"), "left_outer")
-        .select(col("query_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-        .withColumn("recall", round(col("n_hits").cast("double") / 5, 4)),
-      col("query_id"))
+    bf.select(col("query_id")).distinct()
+      .join(hits, Seq("query_id"), "left_outer")
+      .select(col("query_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
+      .withColumn("recall", round(col("n_hits").cast("double") / 5, 4))
   }
 
   /** DuckDB twin of [[annRecall]] — the two ANN oracles nested as
@@ -1511,7 +1489,7 @@ object Similarity {
         .select(lit(np).as("nprobe"), col("n_hits"), col("n_truth"),
           round(col("n_hits").cast("double") / col("n_truth"), 4).as("recall"))
     }
-    Present.sortSmall(rows.reduce(_ unionAll _), col("nprobe"))
+    rows.reduce(_ unionAll _)
   }
 
   /** DuckDB twin of [[annProbeSweep]] — all three ANN oracles nested
@@ -1581,7 +1559,7 @@ object Similarity {
         .select(lit(tier).as("tier"), col("n_hits"), col("n_truth"),
           round(col("n_hits").cast("double") / col("n_truth"), 4).as("recall"))
     }
-    Present.sortSmall(rows.reduce(_ unionAll _), col("tier"))
+    rows.reduce(_ unionAll _)
   }
 
   /** DuckDB twin of [[annIvfPqSweep]] — the four ANN oracles nested as
@@ -1674,7 +1652,7 @@ object Similarity {
           .localCheckpoint(true) // one row per sweep point: sever the
         // lineage back to `subs` so its blocks can be freed below
       }
-      Present.sortSmall(rows.reduce(_ unionAll _), col("rounds"))
+      rows.reduce(_ unionAll _)
     } finally graft.io.Checkpoints.release(subs)
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.util.sketch.BloomFilter
 
-import graft.{Present, Tables}
+import graft.Tables
 import graft.functions.BloomFunctions.bloom_might_contain
 
 /** Streaming decontamination against a STATIC benchmark corpus — the
@@ -111,10 +111,8 @@ object StreamDecon {
     // materialized once for its three consumers (sizing count, Bloom
     // build, broadcast join side) — mirrors Dedup.decontaminate
     val bench = benchmarkShingles(spark, sfDir).localCheckpoint()
-    Present.sortSmall(
-      clean(train, bench, Some(Dedup.shingleBloom(bench)))
-        .select(col("doc_id"), length(col("text")).as("text_len")),
-      col("doc_id"))
+    clean(train, bench, Some(Dedup.shingleBloom(bench)))
+      .select(col("doc_id"), length(col("text")).as("text_len"))
   }
 
   /** DuckDB twin: train docs with NO benchmark doc sharing ≥ threshold

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.{Present, Tables}
+import graft.Tables
 
 /** Streaming incremental near-dup dedup against a STATIC corpus — the
   * streaming twin of [[Dedup.minhashLsh]]: documents arrive on a stream
@@ -91,10 +91,8 @@ object StreamDedup {
   def cleanCorpus(spark: SparkSession, sfDir: String): DataFrame = {
     val all = Tables.table(spark, sfDir, "documents")
     val idx = index(all.filter(col("doc_id") % 2 === 0))
-    Present.sortSmall(
-      clean(all.filter(col("doc_id") % 2 === 1), idx)
-        .select(col("doc_id"), length(col("text")).as("text_len")),
-      col("doc_id"))
+    clean(all.filter(col("doc_id") % 2 === 1), idx)
+      .select(col("doc_id"), length(col("text")).as("text_len"))
   }
 
   /** DuckDB twin: odd docs with no even near-dup at the threshold

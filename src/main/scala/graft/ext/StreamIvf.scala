@@ -200,9 +200,7 @@ object StreamIvf {
       s.upsert(slice0.withColumn("seq", lit(5L)), batchId = 3L)
     })
     val queries = emb.filter(col("vec_id") % 100 === 0)
-    graft.Present.sortSmall(
-      search(readBack(spark, path, s), queries, centroids, k = 5),
-      col("query_id"), col("rank"))
+    search(readBack(spark, path, s), queries, centroids, k = 5)
   }
 
   /** The MERGE-ON-READ twin of [[annIvfIncremental]]: identical ingest

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.{Present, Tables}
+import graft.Tables
 
 /** Incremental line-level dedup over a document stream — the streaming
   * twin of [[Dedup.lineDedup]]. Each micro-batch's documents are
@@ -154,6 +154,6 @@ object StreamLineDedup {
         docs.filter(col("doc_id") >= b * per && col("doc_id") < (b + 1) * per), dir, b)
       if (b == 1) compactLines(spark, dir, 1)
     }
-    Present.sortSmall(cleaned(spark, dir), col("doc_id"))
+    cleaned(spark, dir)
   }
 }

@@ -75,7 +75,6 @@ object Text {
         regexp_count(col("text"), lit("[a-z0-9]+")).as("n_re_tokens"),
         size(array_distinct(tokens(col("text")))).as("n_distinct_tokens"),
         length(col("text")).as("n_chars"))
-      .transform(graft.Present.sortSmall(_, col("doc_id")))
 
   val tokenStatsSql: String =
     """SELECT doc_id,
@@ -102,7 +101,6 @@ object Text {
           .when(col("es_hits") >= col("fr_hits") && col("es_hits") > 0, "es")
           .when(col("fr_hits") > 0, "fr")
           .otherwise("und"))
-      .transform(graft.Present.sortSmall(_, col("doc_id")))
   }
 
   private def sqlHits(lang: String): String = {
@@ -150,7 +148,6 @@ object Text {
         round(ttr, 4).as("type_token_ratio"),
         round(stopRatio, 4).as("stopword_ratio"),
         qualityScore(t).as("quality_score"))
-      .transform(graft.Present.sortSmall(_, col("doc_id")))
   }
 
   val qualitySql: String =
@@ -204,10 +201,8 @@ object Text {
     // rank numbering over the ≤ k·|docs| survivors only
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("tfidf").desc, col("token").asc)
-    graft.Present.sortSmall(
-      top.withColumn("rank", row_number().over(w))
-        .select(col("doc_id"), col("token"), col("tfidf"), col("rank")),
-      col("doc_id"), col("rank"))
+    top.withColumn("rank", row_number().over(w))
+      .select(col("doc_id"), col("token"), col("tfidf"), col("rank"))
   }
 
   val tfidfSql: String =
@@ -245,15 +240,13 @@ object Text {
       .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
     val freq = toks.groupBy(col("token")).agg(count(lit(1)).as("tf"))
     val total = toks.agg(count(lit(1)).as("n_total"))
-    graft.Present.sortSmall(
-      toks.join(freq, Seq("token"))
-        .crossJoin(broadcast(total)) // scalar corpus size rides along
-        .groupBy(col("doc_id"))
-        .agg(
-          count(lit(1)).as("n_tokens"),
-          round(avg(log(col("tf").cast("double") / col("n_total"))), 4)
-            .as("avg_logprob")),
-      col("doc_id"))
+    toks.join(freq, Seq("token"))
+      .crossJoin(broadcast(total)) // scalar corpus size rides along
+      .groupBy(col("doc_id"))
+      .agg(
+        count(lit(1)).as("n_tokens"),
+        round(avg(log(col("tf").cast("double") / col("n_total"))), 4)
+          .as("avg_logprob"))
   }
 
   val unigramLogprobSql: String =
@@ -301,16 +294,14 @@ object Text {
     val total = toks.agg(count(lit(1)).as("n_total"))
     val p = lit(bigramLambda) * (col("c2").cast("double") / col("c1")) +
       lit(1 - bigramLambda) * (col("cu").cast("double") / col("n_total"))
-    graft.Present.sortSmall(
-      bigrams
-        .join(cBigram, Seq("w1", "w2"))
-        .join(cContext, Seq("w1"))
-        .join(cUnigram, bigrams("w2") === cUnigram("token"))
-        .crossJoin(broadcast(total)) // scalar corpus size rides along
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bigrams"),
-          round(avg(log(p)), 4).as("avg_logprob")),
-      col("doc_id"))
+    bigrams
+      .join(cBigram, Seq("w1", "w2"))
+      .join(cContext, Seq("w1"))
+      .join(cUnigram, bigrams("w2") === cUnigram("token"))
+      .crossJoin(broadcast(total)) // scalar corpus size rides along
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_bigrams"),
+        round(avg(log(p)), 4).as("avg_logprob"))
   }
 
   /** Shared oracle scaffolding for the interpolated-bigram model: CTE
@@ -365,12 +356,10 @@ object Text {
         sum(size(t).cast("long")).as("n_tokens"),
         round(avg(qualityScore(t)), 4).as("mean_quality"))
     val z = per.agg(sum(pow(col("n_tokens").cast("double"), mixAlpha)).as("z"))
-    graft.Present.sortSmall(
-      per.crossJoin(broadcast(z))
-        .withColumn("weight",
-          round(pow(col("n_tokens").cast("double"), mixAlpha) / col("z"), 4))
-        .drop("z"),
-      col("source"))
+    per.crossJoin(broadcast(z))
+      .withColumn("weight",
+        round(pow(col("n_tokens").cast("double"), mixAlpha) / col("z"), 4))
+      .drop("z")
   }
 
   val sourceWeightsSql: String =
@@ -418,14 +407,12 @@ object Text {
       .withColumn("cut", round(col("rate") * 10000).cast("long"))
       .select(col("source"), col("rate"), col("cut"))
     val kept = md5Long(col("doc_id").cast("string")) % 10000 < col("cut")
-    graft.Present.sortSmall(
-      docs.join(broadcast(rates), Seq("source"))
-        .groupBy(col("source"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          count(when(kept, 1)).as("n_kept"),
-          max(col("rate")).as("rate")),
-      col("source"))
+    docs.join(broadcast(rates), Seq("source"))
+      .groupBy(col("source"))
+      .agg(
+        count(lit(1)).as("n_docs"),
+        count(when(kept, 1)).as("n_kept"),
+        max(col("rate")).as("rate"))
   }
 
   val applyMixSql: String = {
@@ -485,16 +472,14 @@ object Text {
       .withColumn("cut", round(col("frac_rate") * 10000).cast("long"))
       .select(col("source"), col("base_repeats"), col("frac_rate"), col("cut"))
     val kept = md5Long(col("doc_id").cast("string")) % 10000 < col("cut")
-    graft.Present.sortSmall(
-      docs.join(broadcast(plan), Seq("source"))
-        .groupBy(col("source"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          max(col("base_repeats")).as("base_repeats"),
-          max(col("frac_rate")).as("frac_rate"),
-          (max(col("base_repeats")) * count(lit(1))
-            + count(when(kept, 1))).as("effective_docs")),
-      col("source"))
+    docs.join(broadcast(plan), Seq("source"))
+      .groupBy(col("source"))
+      .agg(
+        count(lit(1)).as("n_docs"),
+        max(col("base_repeats")).as("base_repeats"),
+        max(col("frac_rate")).as("frac_rate"),
+        (max(col("base_repeats")) * count(lit(1))
+          + count(when(kept, 1))).as("effective_docs"))
   }
 
   val epochPlanSql: String = {
@@ -542,7 +527,6 @@ object Text {
         distinctFrac.as("distinct_token_frac"))
       .withColumn("is_repetitive",
         col("top_bigram_frac") > 0.05 || col("distinct_token_frac") < 0.5)
-      .transform(graft.Present.sortSmall(_, col("doc_id")))
   }
 
   val repetitionSql: String =
@@ -576,7 +560,6 @@ object Text {
         col("doc_id"),
         md5(col("text").cast("binary")).as("content_md5"),
         fp.as("rolling_fp"))
-      .transform(graft.Present.sortSmall(_, col("doc_id")))
   }
 
   val fingerprintSql: String =
@@ -608,7 +591,6 @@ object Text {
         count(lit(1)).as("n_total"),
         count(when(kept, 1)).as("n_kept"),
         round(avg(when(kept, length(col("text")))), 4).as("avg_kept_chars"))
-      .transform(graft.Present.sortSmall(_, col("lang")))
   }
 
   private val keptSql =
@@ -646,7 +628,6 @@ object Text {
     graft.plans.TopKPerGroup.topKPerGroup(
         docs, Seq(col("source")), Seq(col("n_chars").desc, col("doc_id").asc),
         sourceCapK)
-      .transform(graft.Present.sortSmall(_, col("source"), col("doc_id")))
   }
 
   val sourceCapsSql: String =
@@ -677,7 +658,6 @@ object Text {
         count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("bin_tokens"),
         min(col("doc_id")).as("first_doc"))
-      .transform(graft.Present.sortSmall(_, col("lang"), col("bin")))
   }
 
   val packSequencesSql: String =
@@ -745,7 +725,6 @@ object Text {
         bpeTokenEstimate(col("text")).as("bpe_tokens"))
       .select(col("doc_id"), col("ws_tokens"), col("bpe_pieces"), col("bpe_tokens"),
         round(col("bpe_tokens").cast("double") / col("ws_tokens"), 4).as("fertility"))
-      .transform(graft.Present.sortSmall(_, col("doc_id")))
 
   val tokenCountBpeSql: String =
     s"""SELECT doc_id,
@@ -782,7 +761,6 @@ object Text {
         sum(col("bpe")).as("bpe_tokens"))
       .withColumn("fertility",
         round(col("bpe_tokens").cast("double") / col("ws_tokens"), 4))
-      .transform(graft.Present.sortSmall(_, col("lang")))
 
   /** DuckDB twin of [[bpeFertility]]. */
   val bpeFertilitySql: String =
@@ -815,7 +793,6 @@ object Text {
         count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("bin_tokens"),
         min(col("doc_id")).as("first_doc"))
-      .transform(graft.Present.sortSmall(_, col("lang"), col("bin")))
   }
 
   val packSequencesBpeSql: String =
@@ -915,8 +892,7 @@ object Text {
           .groupBy(col("token")).agg(count(lit(1)).as("exact_n")),
         Seq("token"), "left")
       .select(col("token"), coalesce(col("exact_n"), lit(0L)).as("exact_n"))
-    graft.Present.sortSmall(
-      exact.join(est, Seq("token")), col("token"))
+    exact.join(est, Seq("token"))
   }
 
   val tokenCmsSql: String = {
@@ -1001,16 +977,14 @@ object Text {
       log((coalesce(col("ct"), lit(0L)) + 1).cast("double") /
         (col("nt") + dsirBuckets)) -
         log((col("cp") + 1).cast("double") / (col("np") + dsirBuckets))
-    graft.Present.sortSmall(
-      feats
-        .join(broadcast(tgt), Seq("bucket"), "left")
-        .join(broadcast(prop), Seq("bucket"))
-        .crossJoin(broadcast(totals)) // two scalars ride along
-        .groupBy(col("doc_id"), col("lang"))
-        .agg(count(lit(1)).as("n_feats"),
-          round(sum(logRatio), 4).as("log_weight"))
-        .withColumn("selected", (col("log_weight") > 0).cast("int")),
-      col("doc_id"))
+    feats
+      .join(broadcast(tgt), Seq("bucket"), "left")
+      .join(broadcast(prop), Seq("bucket"))
+      .crossJoin(broadcast(totals)) // two scalars ride along
+      .groupBy(col("doc_id"), col("lang"))
+      .agg(count(lit(1)).as("n_feats"),
+        round(sum(logRatio), 4).as("log_weight"))
+      .withColumn("selected", (col("log_weight") > 0).cast("int"))
   }
 
   val dsirWeightsSql: String =
@@ -1050,7 +1024,6 @@ object Text {
         regexp_count(col("text"), lit("[0-9]+")).as("n_redactions"),
         length(redacted).as("redacted_len"),
         md5(redacted.cast("binary")).as("redacted_md5"))
-      .transform(graft.Present.sortSmall(_, col("doc_id")))
   }
 
   val redactSql: String =
@@ -1086,7 +1059,6 @@ object Text {
         count(lit(1)).as("n_docs"),
         round(avg(col("quality_score")), 4).as("avg_quality"),
         round(avg(length(col("text"))), 4).as("avg_chars"))
-      .transform(graft.Present.sortSmall(_, col("lang")))
   }
 
   val pipelineSampleSql: String =
@@ -1135,13 +1107,11 @@ object Text {
     val gTot = gt.agg(sum(col("c_t")).as("n"))
     val p = col("c_st").cast("double") / col("n_s")
     val q = col("c_t").cast("double") / col("n")
-    graft.Present.sortSmall(
-      st.join(gt, Seq("token"))
-        .join(broadcast(sTot), Seq("source"))
-        .crossJoin(broadcast(gTot)) // scalar corpus size rides along
-        .groupBy(col("source"), col("n_s").as("n_tokens"))
-        .agg(round(sum(p * log(p / q)), 4).as("kl_corpus")),
-      col("source"))
+    st.join(gt, Seq("token"))
+      .join(broadcast(sTot), Seq("source"))
+      .crossJoin(broadcast(gTot)) // scalar corpus size rides along
+      .groupBy(col("source"), col("n_s").as("n_tokens"))
+      .agg(round(sum(p * log(p / q)), 4).as("kl_corpus"))
   }
 
   val sourceKlSql: String =
@@ -1182,12 +1152,10 @@ object Text {
     val p99 = docs
       .agg(dd_quantiles(n.cast("double"), gamma, Seq(0.99)).as("qv"))
       .select(round(element_at(col("qv"), 1), 4).as("p99"))
-    graft.Present.sortSmall(
-      docs.select(col("doc_id"), n.as("n_tokens"))
-        .crossJoin(broadcast(p99)) // one scalar cutoff rides along
-        .filter(col("n_tokens") > col("p99"))
-        .select(col("doc_id"), col("n_tokens"), col("p99").as("p99_tokens")),
-      col("doc_id"))
+    docs.select(col("doc_id"), n.as("n_tokens"))
+      .crossJoin(broadcast(p99)) // one scalar cutoff rides along
+      .filter(col("n_tokens") > col("p99"))
+      .select(col("doc_id"), col("n_tokens"), col("p99").as("p99_tokens"))
   }
 
   val lengthOutliersSql: String = {
@@ -1232,17 +1200,15 @@ object Text {
     val w = Window.partitionBy(col("source"))
       .orderBy(col("c").desc, col("token").asc)
     val lnR = log(col("r").cast("double"))
-    graft.Present.sortSmall(
-      freq.withColumn("r", row_number().over(w))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("vocab_size"),
-          round(covar_pop(lnR, log(col("c").cast("double"))) / var_pop(lnR), 4)
-            .as("zipf_slope"))
-        // a single-token vocabulary has var_pop = 0 → 0/0 NaN; a slope
-        // needs ≥ 2 points, so such degenerate sources are excluded
-        // (mirrored by the oracle's HAVING)
-        .filter(col("vocab_size") > 1),
-      col("source"))
+    freq.withColumn("r", row_number().over(w))
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("vocab_size"),
+        round(covar_pop(lnR, log(col("c").cast("double"))) / var_pop(lnR), 4)
+          .as("zipf_slope"))
+      // a single-token vocabulary has var_pop = 0 → 0/0 NaN; a slope
+      // needs ≥ 2 points, so such degenerate sources are excluded
+      // (mirrored by the oracle's HAVING)
+      .filter(col("vocab_size") > 1)
   }
 
   val zipfSlopeSql: String =
@@ -1289,10 +1255,8 @@ object Text {
       lit(qmWStop) * (stopwordHits(t, stopwords("en")).cast("double") / n) +
       lit(qmWWordLen) * (length(col("text")).cast("double") / n / 10.0)
     val score = round(lit(1.0) / (lit(1.0) + exp(-z)), 4)
-    graft.Present.sortSmall(
-      Tables.table(spark, sfDir, "documents")
-        .select(col("doc_id"), score.as("score"), (score >= 0.5).as("keep")),
-      col("doc_id"))
+    Tables.table(spark, sfDir, "documents")
+      .select(col("doc_id"), score.as("score"), (score >= 0.5).as("keep"))
   }
 
   val qualityModelSql: String = {

@@ -169,16 +169,29 @@ final case class ParquetUpsertSink(
 
   /** Rewrite `df`'s partitions in place via per-writer dynamic
     * partition overwrite (no session-conf mutation — concurrent upsert
-    * streams in one session must not race each other's conf).
-    * `observed` wraps the distributed frame the write task reads.
+    * streams in one session must not race each other's conf). The one
+    * base-file write of this sink: every commit and layout rewrite
+    * lands through here, so `filesPerPartition` and the record-key
+    * blooms hold for all of them (a layout rewrite that lost the blooms
+    * would silently disable point-lookup file pruning on exactly the
+    * tables someone bothered to optimize). `sortKeys` order the rows of
+    * each file after the partition column — partition column FIRST: the
+    * partitioned write requires tasks sorted by partition expressions
+    * and would otherwise inject its own partition-cols-only sort,
+    * destroying the clustering order. `observed` wraps the frame the
+    * write task reads.
     */
   private def writeFinal(df: DataFrame,
+      sortKeys: Seq[org.apache.spark.sql.Column] = Nil,
       observed: DataFrame => DataFrame = identity): Unit = {
     val distributed =
       if (filesPerPartition == 1) df.repartition(col(partitionCol))
       else df.repartition(col(partitionCol),
         pmod(xxhash64(recordKeys.map(col): _*), lit(filesPerPartition)))
-    observed(distributed)
+    val ordered =
+      if (sortKeys.isEmpty) distributed
+      else distributed.sortWithinPartitions(col(partitionCol) +: sortKeys: _*)
+    observed(ordered)
       .write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic") // per-writer, race-free
@@ -189,8 +202,26 @@ final case class ParquetUpsertSink(
 
   private def partDir(v: String): Path = new Path(s"$path/$partitionCol=${dirName(v)}")
 
-  /** The copy-on-write commit of every partition rewrite (upsert merge,
-    * DELETE, MOR compaction): `rows` is the complete new content of the
+  /** The distinct partition values of `df` in STRING form — the
+    * dir-name basis every partition set in this sink compares by (a
+    * read-back table may type the column DATE where a batch carries
+    * STRING; value-typed compares would silently never match). A
+    * per-task local distinct, then a driver-side one over at most
+    * tasks × partitions values: one job, no distinct shuffle.
+    */
+  private def partitionValues(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.Encoders
+    df.select(col(partitionCol).cast("string")).as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+      .collect().distinct.toSeq
+  }
+
+  /** The copy-on-write commit of every timeline partition rewrite:
+    * upsert's merge ([[upsertScreened]]), DELETE ([[deleteLocked]]), MOR
+    * compaction ([[compactMorLocked]]), and through [[replaceGroupsLocked]]
+    * UPDATE / MERGE INTO / subquery DELETE ([[replaceGroups]]), INSERT
+    * OVERWRITE ([[overwriteWhere]], [[overwriteDynamic]]) and RESTORE
+    * ([[restoreTo]]). `rows` is the complete new content of the
     * `touched` partitions. In order — the crash-safe order every replay
     * relies on: verify the lock, archive the pre-images, persist the
     * schema additively, write `rows` ONCE with dynamic overwrite, delete
@@ -226,7 +257,7 @@ final case class ParquetUpsertSink(
     // with an empty relation, and an observation inside that stage
     // would report no metrics at all
     val obs = org.apache.spark.sql.Observation()
-    writeFinal(rows, _.observe(obs, collect_set(
+    writeFinal(rows, observed = _.observe(obs, collect_set(
       coalesce(col(partitionCol).cast("string"), lit(nullDir))).as("parts")))
     val surviving = obs.get.get("parts") match {
       case Some(ps: scala.collection.Seq[_]) => ps.map(_.toString).toSet
@@ -1453,18 +1484,8 @@ final case class ParquetUpsertSink(
     val deduped = Precombine.latest(batch, recordKeys, precombine)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // partition identity is the STRING form (basis of the dir name); the
-      // read-back table infers the partition column's type (e.g. DATE
-      // where the batch carries STRING) — value-typed set compares would
-      // silently never match. A per-task local distinct over the
-      // persisted batch: no distinct shuffle, and this job is the one
-      // that fills the cache the merge reads
-      val parts: Array[String] = {
-        import org.apache.spark.sql.Encoders
-        deduped.select(col(partitionCol).cast("string")).as(Encoders.STRING)
-          .mapPartitions(_.toSet.iterator)(Encoders.STRING)
-          .collect().distinct
-      }
+      // this job is the one that fills the cache the merge reads
+      val parts = partitionValues(deduped)
       if (parts.isEmpty) return
 
       // ONE glob round-trip discovers every live data file; the previous
@@ -1530,7 +1551,7 @@ final case class ParquetUpsertSink(
       // the same commit: there are no pre-images to read, and its
       // touched-partition manifest still lets [[readAsOf]] tell that
       // these partitions did not exist before this commit
-      rewritePartitions(spark, fs, merged, parts.toSeq, batchId, "upsert")()
+      rewritePartitions(spark, fs, merged, parts, batchId, "upsert")()
       persistWriteConfig(fs)
       if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
         compactPartitions(spark)
@@ -1591,17 +1612,13 @@ final case class ParquetUpsertSink(
       .getOrElse(return (Seq.empty, Seq.empty))
     // matched partitions first (metadata-scale result): the full-table
     // pass decodes only cond's columns + the partition column
-    val matched: Array[String] =
-      readWithSchema(spark, allLiveDirs, schema)
-        .filter(cond)
-        .select(col(partitionCol)).distinct()
-        .collect().map(_.getString(0))
+    val matched = partitionValues(readWithSchema(spark, allLiveDirs, schema).filter(cond))
     if (matched.isEmpty) return (Seq.empty, Seq.empty)
     // survivors: rows where cond is FALSE or NULL (SQL DELETE keeps
     // NULL-condition rows), written back exactly like upsert's merge
-    val survivors = readWithSchema(spark, matched.toSeq.map(partDir), schema)
+    val survivors = readWithSchema(spark, matched.map(partDir), schema)
       .filter(!coalesce(cond, lit(false)))
-    (matched.toSeq, rewritePartitions(spark, fs, survivors, matched.toSeq, batchId, "delete")())
+    (matched, rewritePartitions(spark, fs, survivors, matched, batchId, "delete")())
   }
 
   /** Group-replacement commit for SQL row-level operations (UPDATE /
@@ -1612,17 +1629,19 @@ final case class ParquetUpsertSink(
     * operation's full output for them (survivors + updates + inserts).
     *
     * Placement honors group semantics, not blanket overwrite:
-    *  - a REPLACED partition with rows → dynamically overwritten;
+    *  - a REPLACED partition with rows → rewritten with exactly them;
     *  - a replaced partition with no surviving rows → directory removed;
-    *  - rows landing in a partition the scan did NOT plan (a MERGE
-    *    insert into an existing partition with no matches) → APPENDED,
-    *    because that partition's existing files were never read and
-    *    must survive.
+    *  - rows landing in an existing partition the scan did NOT plan (a
+    *    MERGE insert into a partition with no matches) → that
+    *    partition's live rows, never read by the scan, join the rows
+    *    and the partition is rewritten — upsert's copy-on-write cost,
+    *    and one file per partition stays one file.
     *
-    * Pre-images of every touched partition archive under keepVersions —
-    * an UPDATE/MERGE is time-travel visible like any upsert commit.
-    * Scale: all sets here are partition-value lists (metadata), the
-    * data I/O is exactly the staged output plus the rewritten groups.
+    * One [[rewritePartitions]] commit: pre-images of every touched
+    * partition archive under keepVersions — an UPDATE/MERGE is
+    * time-travel visible like any upsert commit. Scale: all sets here
+    * are partition-value lists (metadata), the data I/O is exactly the
+    * staged output plus the rewritten groups.
     */
   def replaceGroups(spark: org.apache.spark.sql.SparkSession, replaced: Seq[String],
       rows: DataFrame, batchId: Long = 0L): Unit = {
@@ -1635,53 +1654,30 @@ final case class ParquetUpsertSink(
     warmStatsManifests(fs, warm)
   }
 
-  /** Returns the written partition dirs (callers warm after unlock). */
+  /** Returns the written partition dirs (callers warm after unlock).
+    * `rowParts`, when the caller already knows it, is a superset of the
+    * partitions `rows` lands in; otherwise it is collected from `rows`.
+    */
   private def replaceGroupsLocked(spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, replaced: Seq[String],
-      rows: DataFrame, batchId: Long, op: String = "replace"): Seq[Path] = {
+      rows: DataFrame, batchId: Long, op: String = "replace",
+      rowParts: Option[Seq[String]] = None): Seq[Path] = {
     // string partition identity (dir-name basis), like every sink path
     val norm = rows.withColumn(partitionCol, col(partitionCol).cast("string"))
-    val rowParts: Array[String] = norm
-      .select(col(partitionCol)).distinct().collect().map(_.getString(0))
-    val touched = (replaced ++ rowParts).distinct.toArray
-    if (touched.isEmpty) return Seq.empty
-    verifyLockOwnership(fs)
-    val commit =
-      if (keepVersions > 1)
-        Some(archivePreImages(fs, touched, batchId, op)) else None
     val replacedDirs = replaced.map(dirName).toSet
-    val (ovwParts, appParts) = rowParts.partition(v => replacedDirs.contains(dirName(v)))
-    // ADDITIVE persist BEFORE the writes (persistSchema's documented
-    // crash-safe order): landing files that carry a new column and
-    // crashing before the persist leaves `_schema.json` NARROWER than
-    // the live files — every read then silently omits the column and
-    // the next rewrite erases it. A crash after the persist but before
-    // the writes leaves a harmless superset schema. Additive, not
-    // plain: a row-level rewrite plans only the touched groups, so
-    // `norm` may itself be narrower than untouched partitions' files.
-    persistSchemaAdditive(spark, fs, norm.schema)
-    // dir-name-normalized key: null partitions compare via the Hive
-    // default-partition token, so the splits below cover them too
-    def normKey = coalesce(col(partitionCol), lit(nullDir))
-    if (ovwParts.nonEmpty)
-      writeFinal(norm.filter(normKey.isin(ovwParts.map(v =>
-        if (v == null) nullDir else v).toIndexedSeq: _*)))
-    if (appParts.nonEmpty)
-      norm.filter(normKey.isin(appParts.map(v =>
-          if (v == null) nullDir else v).toIndexedSeq: _*))
-        .repartition(col(partitionCol))
-        .write.mode(SaveMode.Append)
-        .options(bloomWriteOptions) // new-partition files bloom too
-        .partitionBy(partitionCol)
-        .parquet(path)
-    val rowPartDirs = rowParts.map(dirName).toSet
-    replaced.filterNot(v => rowPartDirs.contains(dirName(v))).foreach { v =>
-      val p = partDir(v)
-      fs.delete(p, true)
-      UpsertStatsManifest.invalidate(fs, p)
-    }
-    markCommitComplete(fs, commit)
-    rowParts.toSeq.map(partDir)
+    val unplanned = rowParts.getOrElse(partitionValues(norm))
+      .filterNot(v => replacedDirs.contains(dirName(v)))
+    val touched = (replaced ++ unplanned).distinct
+    if (touched.isEmpty) return Seq.empty
+    // an unplanned partition's existing files were never read: fold its
+    // live rows in, so the rewrite keeps them
+    val unplannedLive = unplanned.map(partDir).filter(hasDataFiles(fs, _))
+    val content =
+      if (unplannedLive.isEmpty) norm
+      else SchemaWidening.alignForMerge(
+          Seq(norm, readStringPartitioned(spark, unplannedLive)), "row-level rewrite")
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+    rewritePartitions(spark, fs, content, touched, batchId, op)()
   }
 
   /** RESTORE the table to its state as of archive commit `asOf` (the
@@ -1769,10 +1765,11 @@ final case class ParquetUpsertSink(
       }
     // one replace commit: pre-images archive first (the pre-restore
     // head), touched partitions overwrite with their as-of content,
-    // created-after-asOf partitions delete (no rows for them)
-    val warm = replaceGroupsLocked(spark, fs,
-      touched.map(UpsertTableSource.dirValue), rows, batchId = 0L,
-      op = "restore")
+    // created-after-asOf partitions delete (no rows for them). The rows
+    // come from touched dirs only, so no partition discovery is needed
+    val values = touched.map(UpsertTableSource.dirValue)
+    val warm = replaceGroupsLocked(spark, fs, values, rows, batchId = 0L,
+      op = "restore", rowParts = Some(values))
     (touched, warm)
   }
 
@@ -1814,7 +1811,7 @@ final case class ParquetUpsertSink(
   }
 
   private def archivePreImages(fs: org.apache.hadoop.fs.FileSystem,
-      parts: Array[String], batchId: Long, op: String = "upsert"): String = {
+      parts: Array[String], batchId: Long, op: String): String = {
     // the token in the COMMIT name too: two writers replaying the same
     // batch id in the same millisecond must not rename into one dir
     // (rename-into-existing nests silently on most FileSystems)
@@ -1874,8 +1871,8 @@ final case class ParquetUpsertSink(
   // ——— compaction (Hudi inline-compact analog) ———
 
   /** Coalesce partitions whose live file count exceeds
-    * `filesPerPartition` by rewriting just those partitions (staged
-    * first, then the same dynamic partition overwrite as an upsert —
+    * `filesPerPartition` by rewriting just those partitions (the same
+    * dynamic partition overwrite as an upsert, off the timeline —
     * replay-safe: a crash before the overwrite leaves the table
     * untouched, after it leaves the same rows in fewer files). Returns
     * the partition directory names compacted. A maintenance entry
@@ -1938,13 +1935,13 @@ final case class ParquetUpsertSink(
     }.map(_.getPath)
     if (oversized.isEmpty) return Seq.empty
     // the oversized dirs ARE the read set (path-level pruning; string
-    // partition identity preserved by readStringPartitioned); checkpoint
-    // severs lineage from the files the overwrite replaces — replay-safe
-    // like upsert: a crash before the overwrite leaves the table
-    // untouched, after it leaves the same rows in fewer files
-    val mat = readStringPartitioned(spark, oversized.toSeq).localCheckpoint(true)
-    try { verifyLockOwnership(fs); writeFinal(mat) }
-    finally Checkpoints.release(mat)
+    // partition identity preserved by readStringPartitioned), read by
+    // the write itself — no materialization, for the reason
+    // [[rewritePartitions]] gives. Replay-safe like upsert: a crash
+    // before the overwrite leaves the table untouched, after it leaves
+    // the same rows in fewer files
+    verifyLockOwnership(fs)
+    writeFinal(readStringPartitioned(spark, oversized.toSeq))
     oversized.toSeq
   }
 
@@ -1955,8 +1952,8 @@ final case class ParquetUpsertSink(
     * skipping: parquet keeps min/max per row group, and Morton order
     * makes both columns' per-row-group ranges tight 2-D tiles, so a
     * selective predicate on EITHER column skips most of each file.
-    * Same replay-safe shape as compaction (checkpoint, then dynamic
-    * overwrite). Returns the rewritten partition dir names.
+    * Same replay-safe shape as compaction (one dynamic overwrite that
+    * reads what it replaces). Returns the rewritten partition dir names.
     */
   def optimizeZorder(spark: org.apache.spark.sql.SparkSession,
       x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column): Seq[String] = {
@@ -1996,28 +1993,11 @@ final case class ParquetUpsertSink(
   private def clusterRewriteLocked(spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
       sortKeys: Seq[org.apache.spark.sql.Column]): Seq[Path] = {
-    val partDirs = fs.listStatus(new Path(path)).map(_.getPath)
-      .filter(p => p.getName.startsWith(s"$partitionCol=") && hasDataFiles(fs, p))
+    val partDirs = livePartDirs(fs, new Path(path))
     if (partDirs.isEmpty) return Seq.empty
-    val mat = readStringPartitioned(spark, partDirs.toSeq).localCheckpoint(true)
-    try {
-      verifyLockOwnership(fs)
-      // partition column FIRST: the partitioned write requires tasks
-      // sorted by partition expressions and would otherwise inject its
-      // own partition-cols-only sort, destroying the clustering order
-      mat.repartition(col(partitionCol))
-        .sortWithinPartitions(col(partitionCol) +: sortKeys: _*)
-        .write
-        .mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        // the layout rewrite must keep the record-key blooms: losing
-        // them here would silently disable point-lookup file pruning
-        // on exactly the tables someone bothered to optimize
-        .options(bloomWriteOptions)
-        .partitionBy(partitionCol)
-        .parquet(path)
-    } finally Checkpoints.release(mat)
-    partDirs.toSeq
+    verifyLockOwnership(fs)
+    writeFinal(readStringPartitioned(spark, partDirs), sortKeys)
+    partDirs
   }
 
   /** `INSERT OVERWRITE` executor: replace every live partition
@@ -2038,9 +2018,7 @@ final case class ParquetUpsertSink(
     val warm = try withCommitLock(fs) {
       requireNoLiveDeltas(fs, "the overwrite")
       persistWriteConfig(fs)
-      val rowParts: Seq[String] = clean
-        .withColumn(partitionCol, col(partitionCol).cast("string"))
-        .select(col(partitionCol)).distinct().collect().map(_.getString(0)).toSeq
+      val rowParts = partitionValues(clean)
       if (enforceRowsMatch) {
         val bad = rowParts.filterNot(matches)
         require(bad.isEmpty,
@@ -2052,7 +2030,7 @@ final case class ParquetUpsertSink(
           p.getName.stripPrefix(s"$partitionCol=")))
         .filter(matches)
       replaceGroupsLocked(spark, fs, (live ++ rowParts).distinct, clean, batchId,
-        op = "overwrite")
+        op = "overwrite", rowParts = Some(rowParts))
     } finally done()
     warmStatsManifests(fs, warm)
   }
@@ -2068,10 +2046,9 @@ final case class ParquetUpsertSink(
     val warm = try withCommitLock(fs) {
       requireNoLiveDeltas(fs, "the overwrite")
       persistWriteConfig(fs)
-      val rowParts: Seq[String] = clean
-        .withColumn(partitionCol, col(partitionCol).cast("string"))
-        .select(col(partitionCol)).distinct().collect().map(_.getString(0)).toSeq
-      replaceGroupsLocked(spark, fs, rowParts, clean, batchId, op = "overwrite")
+      val rowParts = partitionValues(clean)
+      replaceGroupsLocked(spark, fs, rowParts, clean, batchId, op = "overwrite",
+        rowParts = Some(rowParts))
     } finally done()
     warmStatsManifests(fs, warm)
   }
@@ -2123,23 +2100,13 @@ final case class ParquetUpsertSink(
       if (partDirs.nonEmpty) {
         // readStringPartitioned alias-normalizes: old-name files come
         // back under the NEW name already
-        val mat = readStringPartitioned(spark, partDirs).localCheckpoint(true)
-        try {
-          verifyLockOwnership(fs)
-          mat.repartition(col(partitionCol))
-            .sortWithinPartitions(col(partitionCol))
-            .write
-            .mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .options(bloomWriteOptions)
-            .partitionBy(partitionCol)
-            .parquet(path)
-        } finally Checkpoints.release(mat)
+        verifyLockOwnership(fs)
+        writeFinal(readStringPartitioned(spark, partDirs))
       }
       partDirs
     }
-    warmStatsManifests(fs, warm.toSeq)
-    warm.map(_.getName).toSeq
+    warmStatsManifests(fs, warm)
+    warm.map(_.getName)
   }
 
   /** Read-modify-write `_table.properties` — the shared crash-safe

@@ -21,7 +21,6 @@ object Advanced {
       .groupBy(to_date(col("activity_timestamp")).as("activity_date"), col("activity_type"))
       .agg(exact_count_distinct(col("employee_id")).as("unique_employees"),
         count(lit(1)).as("n"))
-      .transform(graft.Present.sortSmall(_, col("activity_date"), col("activity_type")))
 
   val exactDistinctSql: String = Oracles.withActivities(
     """SELECT CAST(activity_timestamp AS DATE) AS activity_date, activity_type,
@@ -41,7 +40,6 @@ object Advanced {
       .groupBy(date_trunc("hour", col("activity_timestamp")).as("hour"), col("employee_id"))
       .agg(array_join(bounded_collect_set(col("page_url"), 3), ",").as("top_pages"),
         count(lit(1)).as("n"))
-      .transform(graft.Present.sortSmall(_, col("hour"), col("employee_id")))
 
   val boundedPagesSql: String = Oracles.withActivities(
     """SELECT date_trunc('hour', activity_timestamp) AS hour, employee_id,
@@ -113,7 +111,6 @@ object Advanced {
       .agg(count(lit(1)).as("freq"))
       .filter(col("freq") * (mgK + 1) > col("n_total"))
       .select(col("token"), col("freq"))
-      .transform(graft.Present.sortSmall(_, col("freq").desc, col("token")))
   }
 
   val tokenFreqMgSql: String =
@@ -133,7 +130,6 @@ object Advanced {
     Tables.table(spark, sfDir, "documents")
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "token")))
       .filter(col("pos") < 5)
-      .transform(graft.Present.sortSmall(_, col("doc_id"), col("pos")))
 
   val posexplodeTokensSql: String =
     """SELECT doc_id, CAST(pos AS INTEGER) AS pos, toks[pos + 1] AS token
@@ -162,7 +158,6 @@ object Advanced {
         array_contains(parts, "page").as("has_page"),
         array_position(parts, "page").cast("int").as("page_pos"),
         size(array_distinct(parts)).as("n_distinct_parts"))
-      .transform(graft.Present.sortSmall(_, col("id").cast("long")))
   }
 
   val collectionFuncsSql: String = Oracles.withActivities(
@@ -200,7 +195,6 @@ object Advanced {
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("total_value"))
-      .transform(graft.Present.sortSmall(_, col("c_mktsegment")))
   }
 
   val saltedJoinSql: String =
@@ -230,7 +224,6 @@ object Advanced {
         round(log(col("value") + 1), 4).as("ln_v"),
         greatest(col("value"), lit(100.0)).as("g"),
         sha2(col("event_type"), 256).as("sha"))
-      .transform(graft.Present.sortSmall(_, col("event_id")))
 
   val scalarFuncsSql: String =
     """SELECT event_id,
@@ -262,8 +255,6 @@ object Advanced {
       Seq(col("o_custkey")),
       Seq(col("o_totalprice").desc, col("o_orderkey").asc),
       3)
-      .transform(graft.Present.sortSmall(_,
-        col("o_custkey"), col("o_totalprice").desc, col("o_orderkey")))
   }
 
   val topKNativeSql: String =
@@ -305,7 +296,6 @@ object Advanced {
       .filter(col("is_event") === 1)
       .select(col("event_id"), col("uid").as("user_id"), col("t").as("ts"),
         col("asof_orderkey"))
-      .transform(graft.Present.sortSmall(_, col("event_id")))
   }
 
   val asofJoinSql: String =
@@ -329,7 +319,6 @@ object Advanced {
         round(percentile(col("o_totalprice"), lit(0.9)), 4).as("p90"),
         round(percentile(col("o_totalprice"), lit(0.99)), 4).as("p99"),
         count(lit(1)).as("n"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus")))
 
   val percentilesSql: String =
     """SELECT o_orderstatus,
@@ -351,7 +340,6 @@ object Advanced {
       .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
       .agg(count(lit(1)))
       .na.fill(0L)
-      .transform(graft.Present.sortSmall(_, col("user_id")))
 
   val pivotEventsSql: String =
     """SELECT user_id,
@@ -386,7 +374,6 @@ object Advanced {
         min(col("ts")).as("session_start"),
         max(col("ts")).as("session_end"),
         round(sum(col("value")), 2).as("session_value"))
-      .transform(graft.Present.sortSmall(_, col("user_id"), col("session_id")))
   }
 
   /** Native session windows in BATCH (ST5 extension, declarative twin of
@@ -407,7 +394,6 @@ object Advanced {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("employee_id"), col("n_events"), col("total_duration"))
-      .transform(graft.Present.sortSmall(_, col("employee_id"), col("session_start")))
 
   // new session when the inactivity gap is >= 30 min (session_window
   // merges strictly-inside events only); session_end = last + gap
@@ -455,7 +441,6 @@ object Advanced {
         col("window.start").as("window_start"),
         col("window.end").as("window_end"),
         col("activity_type"), col("n_events"), col("total_duration"))
-      .transform(graft.Present.sortSmall(_, col("window_start"), col("activity_type")))
 
   // the two 30-min-aligned starts covering each event: bucket(ts) - k·30'
   val slidingWindowSql: String = Oracles.withActivities(
@@ -490,8 +475,6 @@ object Advanced {
       .withColumn("is_current", col("valid_to").isNull)
       .select(col("employee_id"), col("id"), col("valid_from"), col("valid_to"),
         col("prev_duration"), col("is_current"))
-      .transform(graft.Present.sortSmall(_,
-        col("employee_id"), col("valid_from"), col("id").cast("long")))
   }
 
   val scd2IntervalsSql: String = Oracles.withActivities(
@@ -530,7 +513,6 @@ object Advanced {
           (col("tb") > col("ta") || col("second_event") > col("first_event")))
       .select(col("first_event"), col("second_event"), col("user_id"),
         (col("tb") - col("ta")).as("gap_us"))
-      .transform(graft.Present.sortSmall(_, col("first_event"), col("second_event")))
   }
 
   /** Oracle: the naive quadratic formulation (ground truth the banding
@@ -575,7 +557,6 @@ object Advanced {
         round(element_at(col("qv"), 1), 4).as("p50"),
         round(element_at(col("qv"), 2), 4).as("p90"),
         round(element_at(col("qv"), 3), 4).as("p99"))
-      .transform(graft.Present.sortSmall(_, col("event_type")))
   }
 
   /** Oracle: the sketch's log-bucket math replayed in SQL — bucket
@@ -640,9 +621,7 @@ object Advanced {
       .groupBy(col("step")).agg(count(lit(1)).as("n_reached"))
     val conv = round(col("n_reached").cast("double") /
       max(col("n_reached")).over(Window.partitionBy()), 4)
-    graft.Present.sortSmall(
-      reached.select(col("step"), col("n_reached"), conv.as("conv_from_first")),
-      col("step"))
+    reached.select(col("step"), col("n_reached"), conv.as("conv_from_first"))
   }
 
   val funnelSql: String = {
@@ -691,13 +670,11 @@ object Advanced {
     val gTot = gt.agg(sum(col("c_t")).as("n"))
     val p = col("c_dt").cast("double") / col("n_d")
     val q = col("c_t").cast("double") / col("n")
-    graft.Present.sortSmall(
-      dt.join(broadcast(gt), Seq("event_type"))
-        .join(broadcast(dTot), Seq("day"))
-        .crossJoin(broadcast(gTot)) // scalar log size rides along
-        .groupBy(col("day"), col("n_d").as("n_events"))
-        .agg(round(sum(p * log(p / q)), 4).as("kl_overall")),
-      col("day"))
+    dt.join(broadcast(gt), Seq("event_type"))
+      .join(broadcast(dTot), Seq("day"))
+      .crossJoin(broadcast(gTot)) // scalar log size rides along
+      .groupBy(col("day"), col("n_d").as("n_events"))
+      .agg(round(sum(p * log(p / q)), 4).as("kl_overall"))
   }
 
   val eventDriftSql: String =
@@ -748,9 +725,7 @@ object Advanced {
       .agg(count(lit(1)).as("n_users"))
     val base = max(when(col("week_offset") === 0, col("n_users")))
       .over(Window.partitionBy(col("cohort_week")))
-    graft.Present.sortSmall(
-      counts.withColumn("retention", round(col("n_users").cast("double") / base, 4)),
-      col("cohort_week"), col("week_offset"))
+    counts.withColumn("retention", round(col("n_users").cast("double") / base, 4))
   }
 
   /** DuckDB twin of [[cohortRetention]] (`//` keeps the offset
@@ -790,7 +765,6 @@ object Advanced {
   def eventAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
     flagAnomalies(ev, anomalyStats(ev))
-      .transform(graft.Present.sortSmall(_, col("event_id")))
   }
 
   /** The per-type model: one partial-agged groupBy on the tiny
@@ -887,7 +861,6 @@ object Advanced {
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
     s.table(qn)
-      .transform(graft.Present.sortSmall(_, col("employee_id"), col("session_start")))
       .localCheckpoint(true) // detach from the stopped stream's plan
   }
 
@@ -977,7 +950,6 @@ object Advanced {
     s.read.format("graft-upsert").load(tblDir)
       .select(col("employee_id"), col("session_start"), col("session_end"),
         col("n_events"), col("total_duration"))
-      .transform(graft.Present.sortSmall(_, col("employee_id"), col("session_start")))
       .localCheckpoint(true)
   }
 

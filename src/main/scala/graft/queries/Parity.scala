@@ -97,7 +97,6 @@ object Parity {
     Debezium
       .parseWire(wire, Schemas.activity, headerOpCol = Some("op_header"))
       .drop("processing_timestamp") // wall-clock; excluded from oracle compare
-      .transform(graft.Present.sortSmall(_, col("id").cast("long")))
   }
 
   val cdcParseSql: String = graft.Oracles.withActivities(
@@ -111,7 +110,7 @@ object Parity {
 
   /** F6-F8, F10-F13: full activity enrichment. */
   def enrichActivity(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Present.sortSmall(enrichedActivities(spark, sfDir), col("id").cast("long"))
+    enrichedActivities(spark, sfDir)
 
   val enrichActivitySql: String = graft.Oracles.withEnriched(
     """SELECT id, employee_id, activity_type, page_url, duration_seconds,
@@ -125,7 +124,6 @@ object Parity {
   /** F4-F5, F10-F11: employee enrichment. */
   def enrichEmployee(spark: SparkSession, sfDir: String): DataFrame =
     Enrichments.enrichEmployees(Tables.employees(spark, sfDir), fixedNow)
-      .transform(graft.Present.sortSmall(_, col("id")))
 
   val enrichEmployeeSql: String = graft.Oracles.withEmployees(
     """SELECT id, name, email, department, created_at,
@@ -154,8 +152,6 @@ object Parity {
         round(col("avg_duration"), 4).as("avg_duration"),
         array_join(col("unique_pages"), ",").as("unique_pages"),
         col("primary_device"), col("aggregation_type"))
-      .transform(graft.Present.sortSmall(_,
-        col("window_start"), col("employee_id"), col("activity_type")))
 
   val aggHourlySql: String = graft.Oracles.withEnriched(
     """SELECT date_trunc('hour', activity_timestamp) AS window_start,
@@ -183,8 +179,6 @@ object Parity {
         col("activity_count"), col("unique_employees"),
         round(col("avg_duration"), 4).as("avg_duration"),
         col("aggregation_type"))
-      .transform(graft.Present.sortSmall(_,
-        col("window_start"), col("activity_type"), col("device_category")))
 
   val aggDailySql: String = graft.Oracles.withEnriched(
     """SELECT date_trunc('day', activity_timestamp) AS window_start,
@@ -213,7 +207,6 @@ object Parity {
         col("id"), col("employee_id"), col("activity_type"),
         col("device_category"), col("duration_seconds"))
       .join(broadcast(emp), Seq("employee_id"), "left")
-      .transform(graft.Present.sortSmall(_, col("id").cast("long")))
   }
 
   // NOTE: concatenation, not interpolation+stripMargin — the CTE bodies
@@ -250,7 +243,6 @@ object Parity {
       .agg(
         count(lit(1)).as("activity_count"),
         sum(col("duration_seconds")).as("total_duration"))
-      .transform(graft.Present.sortSmall(_, col("data_source"), col("activity_type")))
   }
 
   val unionSourcesSql: String = graft.Oracles.withActivities(
@@ -280,7 +272,6 @@ object Parity {
       .select(
         col("employee_id"), col("activity_type"), col("id"),
         col("activity_timestamp"), col("duration_seconds"))
-      .transform(graft.Present.sortSmall(_, col("employee_id"), col("activity_type")))
   }
 
   val upsertPrecombineSql: String = graft.Oracles.withActivities(
@@ -319,7 +310,6 @@ object Parity {
       .agg(count(lit(1)).as("n"),
         round(sum(col("o_totalprice")), 2).as("total"),
         max(col("o_orderdate")).as("last_date"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus")))
   }
 
   /** Residual-predicate DATA SKIPPING through the DSv2 scan, on a
@@ -347,7 +337,6 @@ object Parity {
       .agg(count(lit(1)).as("n"),
         round(sum(col("o_totalprice")), 2).as("total"),
         min(col("o_custkey")).as("first_cust"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus")))
   }
 
   /** COLUMN RENAME as schema evolution, end to end: seed an orders
@@ -375,7 +364,6 @@ object Parity {
       .agg(count(lit(1)).as("n"),
         round(sum(col("price")), 2).as("total"),
         sum(col("seq")).as("remerged"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus")))
   }
 
   val sqlRenameEvolutionSql: String =
@@ -466,7 +454,6 @@ object Parity {
       .agg(count(lit(1)).as("n"),
         round(sum(col("o_totalprice")), 2).as("total"),
         sum(col("seq")).as("restored_seq"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus")))
   }
 
   val sqlRestoreSql: String =
@@ -520,7 +507,6 @@ object Parity {
       .agg(count(lit(1)).as("n"),
         sum(col("o_custkey")).as("cust_sum"),
         round(sum(col("o_totalprice")), 2).as("total"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus")))
   }
 
   val schemaWideningReadSql: String =
@@ -582,7 +568,6 @@ object Parity {
       .withColumn("snap", lit(view))
     agg(spark.sql(s"SELECT * FROM graft.`$dir` VERSION AS OF '${commits(0)}'"), "asof")
       .unionByName(agg(spark.read.format("graft-upsert").load(dir), "live"))
-      .transform(graft.Present.sortSmall(_, col("snap"), col("o_orderstatus")))
   }
 
   val renameSkippingScanSql: String =
@@ -670,7 +655,6 @@ object Parity {
       spark.read.format("graft-upsert").load(dir)
         .where(col("v") > 50.0)
         .select(col("p"), col("v"), col("id"))
-        .transform(graft.Present.sortSmall(_, col("p")))
         .localCheckpoint(true)
     }
   }
@@ -739,7 +723,6 @@ object Parity {
       spark.read.format("graft-upsert").load(dir)
         .where(col("v") > 50.0)
         .select(col("p"), col("v"), col("id"))
-        .transform(graft.Present.sortSmall(_, col("p")))
         .localCheckpoint(true)
     }
   }
@@ -770,7 +753,6 @@ object Parity {
         round(sum(col("o_totalprice")), 2).as("total"),
         min(col("o_custkey")).as("first_cust"),
         max(col("o_custkey")).as("last_cust"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus")))
   }
 
   val sortLayoutScanSql: String =
@@ -822,7 +804,6 @@ object Parity {
       .agg(count(lit(1)).as("n"),
         round(sum(col("l_quantity")), 2).as("sum_qty"),
         round(sum(col("l_extendedprice")), 2).as("sum_price"))
-      .transform(graft.Present.sortSmall(_, col("l_returnflag")))
   }
 
   val splitScanSql: String =
@@ -860,7 +841,6 @@ object Parity {
     spark.read.format("graft-upsert").load(dir)
       .filter(col("doc_key").isin("doc_3", "doc_41", "doc_97", "doc_404"))
       .select(col("doc_key"), col("lang"), col("source"), col("n_chars"))
-      .transform(graft.Present.sortSmall(_, col("doc_key")))
   }
 
   val bloomPointLookupSql: String =
@@ -891,7 +871,6 @@ object Parity {
       .agg(count(lit(1)).as("n"),
         round(sum(col("l_extendedprice")), 2).as("revenue"))
       .filter(col("n") > 500)
-      .transform(graft.Present.sortSmall(_, col("s_name")))
   }
 
   val statsBroadcastJoinSql: String =
@@ -962,7 +941,6 @@ object Parity {
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
     spark.table(qn)
-      .transform(graft.Present.sortSmall(_, col("day"), col("segment")))
       .localCheckpoint(true) // detach from the stopped stream's plan
   }
 
@@ -1045,7 +1023,6 @@ object Parity {
       q.processAllAvailable()
     } finally q.stop()
     spark.table(qn)
-      .transform(graft.Present.sortSmall(_, col("day")))
       .localCheckpoint(true)
   }
 
@@ -1105,7 +1082,6 @@ object Parity {
       .agg(count(lit(1)).as("n"),
         round(sum(col("o_totalprice")), 2).as("total"),
         min(col("o_orderkey")).as("first_key"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus")))
   }
 
   val streamReadFoldSql: String =
@@ -1149,7 +1125,6 @@ object Parity {
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("o_totalprice")), 2).as("total"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus")))
   }
 
   val morParitySql: String =
@@ -1192,7 +1167,6 @@ object Parity {
       .select(col("key"), col("row.id").as("id"), col("row.activity_type").as("activity_type"),
         col("row.duration_seconds").as("duration_seconds"),
         col("row.activity_timestamp").as("activity_timestamp"))
-      .transform(graft.Present.sortSmall(_, col("id").cast("long")))
   }
 
   val kafkaRoundtripSql: String = graft.Oracles.withActivities(
@@ -1224,7 +1198,6 @@ object Parity {
       .groupBy(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("o_totalprice")), 2).as("total"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus"), col("o_orderpriority")))
   }
 
   val sqlDeleteSql: String =
@@ -1263,7 +1236,6 @@ object Parity {
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("o_totalprice")), 2).as("total"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus")))
   }
 
   val sqlVersionAsOfSql: String =
@@ -1295,7 +1267,6 @@ object Parity {
       .agg(count(lit(1)).as("n"),
         round(sum(col("o_totalprice")), 2).as("total"),
         sum(col("seq")).as("updated"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus")))
   }
 
   val sqlUpdateSql: String =
@@ -1332,7 +1303,6 @@ object Parity {
       .agg(count(lit(1)).as("n"),
         round(sum(col("o_totalprice")), 2).as("total"),
         sum(col("seq")).as("replaced"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus")))
   }
 
   val sqlOverwriteSql: String =
@@ -1387,7 +1357,6 @@ object Parity {
       .groupBy(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("o_totalprice")), 2).as("total"))
-      .transform(graft.Present.sortSmall(_, col("o_orderstatus"), col("o_orderpriority")))
   }
 
   /** Row-level change feed (Delta CDF analog) between two commits of
@@ -1418,7 +1387,6 @@ object Parity {
     sink.changeFeed(spark, commits(0), commits(1))
       .groupBy(col("_change_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("total"))
-      .transform(graft.Present.sortSmall(_, col("_change_type")))
   }
 
   val changeFeedSql: String =
@@ -1459,7 +1427,6 @@ object Parity {
       .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("total"))
       .select(lit("quarantined").as("bucket"), col("n"), col("total"))
     merged.unionByName(quarantined)
-      .transform(graft.Present.sortSmall(_, col("bucket")))
   }
 
   val upsertExpectationsSql: String =
@@ -1529,7 +1496,6 @@ object Parity {
     require(footerDelta == 0,
       s"warm aggregate pass must be manifest-served, read $footerDelta footers")
     cold.unionByName(warm)
-      .transform(graft.Present.sortSmall(_, col("pass"), col("o_orderpriority")))
   }
 
   val aggPushdownSql: String =

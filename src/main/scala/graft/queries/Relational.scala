@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Present, Tables}
+import graft.Tables
 
 /** General relational capability: aggregation pipelines, shuffle joins,
   * broadcast joins, analytic windows, semi/anti joins, rollup, top-k.
@@ -39,7 +39,6 @@ object Relational {
         round(avg(col("l_extendedprice")), 4).as("avg_price"),
         round(avg(col("l_discount")), 4).as("avg_disc"),
         count(lit(1)).as("count_order"))
-      .transform(Present.sortSmall(_, col("l_returnflag"), col("l_linestatus")))
 
   val pricingSummarySql: String =
     """SELECT l_returnflag, l_linestatus,
@@ -110,7 +109,6 @@ object Relational {
         round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
           .as("revenue"),
         count(lit(1)).as("n_items"))
-      .transform(Present.sortSmall(_, col("r_name"), col("n_name")))
   }
 
   val supplierVolumeByNationSql: String =
@@ -134,7 +132,6 @@ object Relational {
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
-      .transform(Present.sortSmall(_, col("o_custkey"), col("rn")))
   }
 
   val topOrdersPerCustomerSql: String =
@@ -159,8 +156,6 @@ object Relational {
         col("l_shipdate"), col("l_extendedprice"))
       .withColumn("running_revenue", round(sum(col("l_extendedprice")).over(w), 2))
       .filter(col("l_suppkey") <= 3)
-      .transform(Present.sortSmall(_,
-        col("l_suppkey"), col("l_shipdate"), col("l_orderkey"), col("l_linenumber")))
   }
 
   val runningSupplierRevenueSql: String =
@@ -184,7 +179,6 @@ object Relational {
     Tables.table(spark, sfDir, "customer")
       .join(bigOrders, col("c_custkey") === col("o_custkey"), "left_semi")
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-      .transform(Present.sortSmall(_, col("c_custkey")))
   }
 
   val semiJoinCustomersSql: String =
@@ -212,7 +206,6 @@ object Relational {
     Tables.table(spark, sfDir, "customer")
       .join(ord, col("c_custkey") === col("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_name"))
-      .transform(Present.sortSmall(_, col("c_custkey")))
   }
 
   val antiJoinCustomersSql: String =
@@ -235,8 +228,6 @@ object Relational {
         count(lit(1)).as("n_orders"),
         grouping(col("o_orderstatus")).cast("int").as("g_status"),
         grouping(col("o_orderpriority")).cast("int").as("g_priority"))
-      .transform(Present.sortSmall(_, col("g_status"), col("g_priority"),
-        col("o_orderstatus"), col("o_orderpriority")))
 
   val rollupOrdersSql: String =
     """SELECT o_orderstatus, o_orderpriority,
@@ -261,7 +252,6 @@ object Relational {
       .select(col("c_custkey"), col("c_nationkey"),
         round(col("c_acctbal"), 2).as("c_acctbal"),
         round(col("nation_avg"), 4).as("nation_avg"))
-      .transform(Present.sortSmall(_, col("c_custkey")))
   }
 
   val aboveNationAvgCustomersSql: String =
@@ -284,7 +274,7 @@ object Relational {
     val highValue = Tables.table(spark, sfDir, "orders")
       .filter(col("o_totalprice") > 250000)
       .select(col("o_custkey").as("c_custkey"))
-    Present.sortSmall(building.intersect(highValue), col("c_custkey"))
+    building.intersect(highValue)
   }
 
   val intersectCustomersSql: String =
@@ -302,7 +292,7 @@ object Relational {
     val highValue = Tables.table(spark, sfDir, "orders")
       .filter(col("o_totalprice") > 250000)
       .select(col("o_custkey").as("c_custkey"))
-    Present.sortSmall(building.except(highValue), col("c_custkey"))
+    building.except(highValue)
   }
 
   val exceptCustomersSql: String =
@@ -356,7 +346,6 @@ object Relational {
         round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
           .as("urgent_revenue"),
         count(lit(1)).as("n_items"))
-      .transform(Present.sortSmall(_, col("order_year")))
 
   val sortMergeJoinSql: String =
     """SELECT CAST(year(o_orderdate) AS INTEGER) AS order_year,
@@ -383,8 +372,6 @@ object Relational {
         |FROM orders_v
         |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
         |                        (o_orderpriority), ())""".stripMargin)
-      .transform(Present.sortSmall(_, col("g_status"), col("g_priority"),
-        col("o_orderstatus"), col("o_orderpriority")))
   }
 
   val groupingSetsOrdersSql: String =
@@ -408,8 +395,6 @@ object Relational {
         count(lit(1)).as("n_orders"),
         grouping(col("o_orderstatus")).cast("int").as("g_status"),
         grouping(col("o_orderpriority")).cast("int").as("g_priority"))
-      .transform(Present.sortSmall(_, col("g_status"), col("g_priority"),
-        col("o_orderstatus"), col("o_orderpriority")))
 
   val cubeOrdersSql: String =
     """SELECT o_orderstatus, o_orderpriority,

@@ -354,6 +354,11 @@ class GraftCatalogSpec extends SparkSpec {
     val hr = spark.sql(s"SELECT id FROM $t WHERE dept = 'hr' ORDER BY id")
       .as[Long].collect().toSeq
     assert(hr == Seq(4L, 9L)) // pre-existing row 4 survived the insert of 9
+    // the partition was rewritten with its live rows, not appended to
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/dept=hr"))
+      .count(f => f.getPath.getName.startsWith("part-") && f.getLen > 0) == 1)
   }
 
   test("SQL DELETE with a subquery routes through the row-level rewrite") {

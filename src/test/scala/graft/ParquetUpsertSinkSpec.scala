@@ -571,6 +571,16 @@ class ParquetUpsertSinkSpec extends SparkSpec {
     val sink = ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date")
     sink.upsert((1 to 200).map(i => Rec(i, s"v$i", 1, "2024-01-01")).toDF(), 0)
     val batch = (150 to 250).map(i => Rec(i, s"w$i", 2, "2024-01-01")).toDF()
+    val (_, jobs) = jobsDuring(sink.upsert(batch, 1))
+    assert(jobs <= 6, s"the commit ran $jobs Spark jobs")
+    assert(spark.read.parquet(dir).count() == 250)
+    assert(liveDataFiles(dir).size == 1)
+  }
+
+  /** `body`'s result and the Spark jobs started while it ran (the
+    * listener bus drained on both sides, so the count is exact).
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -579,12 +589,41 @@ class ParquetUpsertSinkSpec extends SparkSpec {
     val sc = spark.sparkContext
     org.apache.spark.GraftListenerBusBridge.drain(sc)
     sc.addSparkListener(listener)
-    try {
-      sink.upsert(batch, 1)
-      org.apache.spark.GraftListenerBusBridge.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get <= 6, s"the commit ran ${jobs.get} Spark jobs")
-    assert(spark.read.parquet(dir).count() == 250)
+    val result =
+      try {
+        val r = body
+        org.apache.spark.GraftListenerBusBridge.drain(sc)
+        r
+      } finally sc.removeSparkListener(listener)
+    (result, jobs.get)
+  }
+
+  // ——— layout rewrites and INSERT OVERWRITE through the one write ———
+
+  test("optimizeZorder rewrites a partition in one write, rows unchanged, one file") {
+    val dir = Files.createTempDirectory("zorder").toString + "/t"
+    val sink = ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date")
+    sink.upsert((1 to 200).map(i => Rec(i, s"v$i", (i * 37) % 101, "2024-01-01")).toDF(), 0)
+    val before = spark.read.parquet(dir).orderBy($"id").collect().toSeq
+    val (rewritten, jobs) = jobsDuring(sink.optimizeZorder(spark, $"id", $"precombine"))
+    // the read feeds the write directly: no eager materialization job
+    assert(jobs <= 2, s"the Z-order rewrite ran $jobs Spark jobs")
+    assert(rewritten == Seq("processing_date=2024-01-01"))
+    assert(spark.read.parquet(dir).orderBy($"id").collect().toSeq == before)
     assert(liveDataFiles(dir).size == 1)
+  }
+
+  test("overwriteDynamic replaces the batch's partitions, collecting them once") {
+    val dir = Files.createTempDirectory("ovwdyn").toString + "/t"
+    val sink = ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date")
+    sink.upsert((1 to 40).map(i => Rec(i, s"v$i", 1, s"2024-01-0${i % 2 + 1}")).toDF(), 0)
+    val batch = Seq(Rec(100, "n100", 1, "2024-01-01"), Rec(101, "n101", 1, "2024-01-01")).toDF()
+    val (_, jobs) = jobsDuring(sink.overwriteDynamic(spark, batch, 1))
+    assert(jobs <= 3, s"the overwrite ran $jobs Spark jobs")
+    val rows = spark.read.parquet(dir).select($"id", $"processing_date".cast("string"))
+      .as[(Int, String)].collect().toSet
+    assert(rows == Set((100, "2024-01-01"), (101, "2024-01-01")) ++
+      (1 to 40).filter(_ % 2 == 1).map(i => (i, "2024-01-02")))
+    assert(liveDataFiles(dir).size == 2)
   }
 }

@@ -58,8 +58,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("chunking pipelines with the scan — only the presentation exchange") {
     val p = plan("x_chunk_docs")
-    // the chunk explode is per-row expression work; the single Exchange
-    // is Present.sortSmall's repartition(1)
+    // the chunk explode is per-row expression work and adds no Exchange
     assert("Exchange".r.findAllIn(p).size <= 1, s"chunking must not shuffle:\n$p")
     assert(!p.contains("Window"), "chunking must not need a window")
   }
