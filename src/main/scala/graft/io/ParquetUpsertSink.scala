@@ -13,15 +13,24 @@ import org.apache.spark.sql.functions._
   * `processing_date`).
   *
   * Per micro-batch:
-  *  1. dedup the batch by record key ([[Precombine.latest]]: highest
-  *     precombine wins, content-hash tie-break → deterministic replays);
-  *  2. read ONLY the partitions the batch touches (partition pruning —
-  *     at 100 TB reading the whole table per batch is a non-starter);
-  *     "table exists" means partition directories exist, not just the
-  *     root (a fully-tombstoned table must act like a fresh one), and
-  *     read errors propagate rather than masquerading as "first batch"
-  *     and dropping history;
-  *  3. merge old+new, precombine again, apply delete tombstones;
+  *  1. persist the batch and find the partitions its rows name (a row
+  *     the batch itself supersedes included) in one narrow job, which
+  *     also fills the cache; read ONLY those
+  *     partitions (partition pruning — at 100 TB reading the whole
+  *     table per batch is a non-starter); "table exists" means
+  *     partition directories exist, not just the root (a
+  *     fully-tombstoned table must act like a fresh one), and read
+  *     errors propagate rather than masquerading as "first batch" and
+  *     dropping history;
+  *  2. choose the plan once ([[fitsOneTask]]): when the cached batch
+  *     plus the touched partitions' files fit one task's worth of bytes
+  *     (the scan's split target) and `filesPerPartition` is 1, every
+  *     step below runs in a single partition with no shuffle, and the
+  *     merge and write are one job; otherwise they are distributed;
+  *  3. dedup the batch by record key ([[Precombine.latest]]: highest
+  *     precombine wins, content-hash tie-break → deterministic
+  *     replays), merge old+new, precombine again, apply delete
+  *     tombstones — the same steps and order in both plans;
   *  4. rewrite just the touched partitions in ONE write via the
   *     per-writer dynamic-overwrite option (no session-conf mutation —
   *     concurrent upsert streams in one session must not race each
@@ -180,12 +189,21 @@ final case class ParquetUpsertSink(
     * and would otherwise inject its own partition-cols-only sort,
     * destroying the clustering order. `observed` wraps the frame the
     * write task reads.
+    *
+    * Two plans. Distributed: a `repartition` by the partition column
+    * (plus a record-key hash bucket when `filesPerPartition > 1`), so
+    * each partition's rows meet in one task per file. One-task
+    * (`oneTask`, from [[fitsOneTask]]): `coalesce(1)` and no shuffle —
+    * the single task sorts by the partition column and writes each
+    * partition's one file, and the write is one job.
     */
   private def writeFinal(df: DataFrame,
       sortKeys: Seq[org.apache.spark.sql.Column] = Nil,
-      observed: DataFrame => DataFrame = identity): Unit = {
+      observed: DataFrame => DataFrame = identity,
+      oneTask: Boolean = false): Unit = {
     val distributed =
-      if (filesPerPartition == 1) df.repartition(col(partitionCol))
+      if (oneTask) df.coalesce(1)
+      else if (filesPerPartition == 1) df.repartition(col(partitionCol))
       else df.repartition(col(partitionCol),
         pmod(xxhash64(recordKeys.map(col): _*), lit(filesPerPartition)))
     val ordered =
@@ -216,6 +234,45 @@ final case class ParquetUpsertSink(
       .collect().distinct.toSeq
   }
 
+  /** The one plan choice of a small rewrite: whether its inputs — the
+    * live files it merges (`fileBytes`) plus, when given, a persisted
+    * batch already filled by its discovery job — fit one task's worth
+    * of bytes, the bound the table's scan splits files by
+    * ([[UpsertTableSource.SplitTargetConfKey]]; `0` = never). If they
+    * do, the merge runs in a single partition: a `coalesce(1)` before
+    * each precombine leaves the window's clustered distribution
+    * satisfied with no `Exchange`, and [[writeFinal]] skips its
+    * shuffle, so the whole rewrite is one job. At Spark's per-job and
+    * per-task floor, that is most of a small commit's cost. A batch
+    * whose cached size is unknown, or `filesPerPartition > 1`, keeps
+    * the distributed plan.
+    */
+  private def fitsOneTask(spark: org.apache.spark.sql.SparkSession, fileBytes: Long,
+      batch: Option[DataFrame] = None): Boolean = {
+    val batchBytes = batch.fold(Option(0L))(b =>
+      cachedData(b).map(_.cachedRepresentation.cacheBuilder)
+        .filter(_.isCachedColumnBuffersLoaded).map(_.sizeInBytesStats.value.longValue))
+    val target = UpsertTableSource.splitTargetBytes(spark)
+    filesPerPartition == 1 && target > 0 && batchBytes.exists(fileBytes + _ <= target)
+  }
+
+  /** `body` over `df` persisted: a batch feeds two actions (partition
+    * discovery, which fills the cache, and the write), so the lineage
+    * upstream of the sink runs once per batch, not once per action. A
+    * cache the caller already holds on the same plan is reused and left
+    * in place.
+    */
+  private def withPersisted[T](df: DataFrame)(body: DataFrame => T): T = {
+    val owned = cachedData(df).isEmpty
+    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(cached) finally if (owned) cached.unpersist(false)
+  }
+
+  private def cachedData(df: DataFrame): Option[org.apache.spark.sql.execution.CachedData] = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+  }
+
   /** The copy-on-write commit of every timeline partition rewrite:
     * upsert's merge ([[upsertScreened]]), DELETE ([[deleteLocked]]), MOR
     * compaction ([[compactMorLocked]]), and through [[replaceGroupsLocked]]
@@ -227,6 +284,7 @@ final case class ParquetUpsertSink(
     * schema additively, write `rows` ONCE with dynamic overwrite, delete
     * the touched partitions the write left empty, run `beforeMark`,
     * mark the commit complete. Returns the surviving partition dirs.
+    * `oneTask` picks [[writeFinal]]'s plan ([[fitsOneTask]]).
     *
     * No materialization: only the write job reads the pre-images, and
     * every read (a retried shuffle map stage included) finishes before
@@ -244,7 +302,8 @@ final case class ParquetUpsertSink(
     */
   private def rewritePartitions(spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, rows: DataFrame, touched: Seq[String],
-      batchId: Long, op: String)(beforeMark: => Unit = ()): Seq[Path] = {
+      batchId: Long, op: String, oneTask: Boolean = false)(
+      beforeMark: => Unit = ()): Seq[Path] = {
     verifyLockOwnership(fs)
     val commit =
       if (keepVersions > 1) Some(archivePreImages(fs, touched.toArray, batchId, op))
@@ -252,12 +311,13 @@ final case class ParquetUpsertSink(
     // ADDITIVE: the touched-partition content may lack columns that
     // exist only in untouched partitions — the schema must never narrow
     persistSchemaAdditive(spark, fs, rows.schema)
-    // observed ABOVE the shuffle, in the write's own stage: an empty
-    // shuffle output lets adaptive execution replace the stage below
-    // with an empty relation, and an observation inside that stage
-    // would report no metrics at all
+    // observed in the write's own stage. Distributed, that is ABOVE the
+    // shuffle: an empty shuffle output lets adaptive execution replace
+    // the stage below with an empty relation, and an observation inside
+    // that stage would report no metrics at all. One-task, the plan has
+    // no shuffle, so the write's only stage is the one observed
     val obs = org.apache.spark.sql.Observation()
-    writeFinal(rows, observed = _.observe(obs, collect_set(
+    writeFinal(rows, oneTask = oneTask, observed = _.observe(obs, collect_set(
       coalesce(col(partitionCol).cast("string"), lit(nullDir))).as("parts")))
     val surviving = obs.get.get("parts") match {
       case Some(ps: scala.collection.Seq[_]) => ps.map(_.toString).toSet
@@ -1249,9 +1309,14 @@ final case class ParquetUpsertSink(
       batch0.sparkSession.sparkContext.hadoopConfiguration)
     withCommitLock(fs) {
       val (batch, screenDone) = screen(batch0, batchId)
-      try {
-        if (writeMode == ParquetUpsertSink.ModeMor) morAppend(batch, batchId)
-        else upsertScreened(batch, batchId)
+      // the screened batch itself is persisted, not its precombine: the
+      // first job over it is then a narrow one that fills the whole
+      // cache (no window shuffle), and the cache's size then chooses
+      // the plan of the merge (Hudi caches its workload profile input
+      // the same way)
+      try withPersisted(batch) { cached =>
+        if (writeMode == ParquetUpsertSink.ModeMor) morAppend(cached, batchId)
+        else upsertScreened(cached, batchId)
       } finally screenDone()
     }
   }
@@ -1276,25 +1341,14 @@ final case class ParquetUpsertSink(
     * dir renames into place atomically, so a crash mid-write leaves
     * only a `._tmp` dir for the sweeper. At-least-once replay appends
     * a second, content-identical delta commit; the read merge's
-    * precombine dedup makes that harmless.
+    * precombine dedup makes that harmless. `batch` is persisted
+    * ([[upsert]]): the emptiness probe fills the cache, and a batch
+    * that fits one task ([[fitsOneTask]]) is deduped and written by a
+    * single task, with no shuffle.
     */
   private def morAppend(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // persisted: the batch feeds two actions (the emptiness probe and
-    // the delta write) — unpersisted, the precombine shuffle AND the
-    // caller's upstream lineage execute twice per micro-batch, on
-    // exactly the high-frequency small-upsert workloads MOR exists for
-    // (same discipline as upsertScreened)
-    val deduped = Precombine.latest(batch, recordKeys, precombine)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try morAppendBody(spark, fs, deduped, batchId)
-    finally { deduped.unpersist(false); () }
-  }
-
-  private def morAppendBody(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, deduped: DataFrame,
-      batchId: Long): Unit = {
     // inline-compaction cadence is positional (every Nth BATCH), so it
     // must fire even when this batch carries no rows — an empty batch
     // landing on the compaction slot would otherwise push the fold a
@@ -1309,18 +1363,21 @@ final case class ParquetUpsertSink(
     // empty micro-batch (routine under streaming triggers, or a batch
     // fully quarantined by expectations): no delta commit — an empty
     // delta dir would make every real-time read's per-commit
-    // readStringPartitioned throw on zero paths
-    if (deduped.isEmpty) { maybeInlineCompact(); return }
+    // readStringPartitioned throw on zero paths. The probe is one
+    // narrow job that fills the whole cache, so its size is known
+    if (partitionValues(batch).isEmpty) { maybeInlineCompact(); return }
+    val oneTask = fitsOneTask(spark, 0L, Some(batch))
+    val deduped = Precombine.latest(if (oneTask) batch.coalesce(1) else batch,
+      recordKeys, precombine)
+      .withColumn(partitionCol, col(partitionCol).cast("string"))
     val commit = f"${System.currentTimeMillis()}%013d_$batchId%06d" + s"_$stagingToken"
     val tmpDir = new Path(deltaRoot,
       commit + s".$stagingToken${ParquetUpsertSink.ArchiveTmpSuffix}")
-    deduped
-      .withColumn(partitionCol, col(partitionCol).cast("string"))
-      .repartition(col(partitionCol))
+    (if (oneTask) deduped else deduped.repartition(col(partitionCol)))
       .write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCol)
       .parquet(tmpDir.toString)
-    persistSchemaAdditive(spark, fs, deduped.schema)
+    persistSchemaAdditive(spark, fs, batch.schema)
     verifyLockOwnership(fs)
     if (!fs.rename(tmpDir, new Path(deltaRoot, commit)))
       throw new java.io.IOException(
@@ -1474,95 +1531,94 @@ final case class ParquetUpsertSink(
     persistSchema(fs, union)
   }
 
+  /** COW commit of a persisted, screened batch (see [[upsert]]). */
   private def upsertScreened(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the batch feeds two actions (partition discovery, then the merge
-    // write) — persist it once (Hudi caches its workload profile input
-    // the same way) so assignment/transform lineage upstream of the
-    // sink runs once per batch, not once per action
-    val deduped = Precombine.latest(batch, recordKeys, precombine)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // this job is the one that fills the cache the merge reads
-      val parts = partitionValues(deduped)
-      if (parts.isEmpty) return
+    // one narrow job (no window shuffle): it fills the cache the merge
+    // reads, and the cache's size sizes the merge plan
+    val parts = partitionValues(batch)
+    if (parts.isEmpty) return
 
-      // ONE glob round-trip discovers every live data file; the previous
-      // per-dir exists+listStatus pair cost 2×|touched| namenode RPCs per
-      // batch — measured as the dominant per-upsert cost as the partition
-      // count grows (and far worse against an object store). Partition
-      // values are Hive-escaped on disk, which percent-escapes every glob
-      // metacharacter, so the pattern below is literal-safe.
-      // A dir that exists but holds no data files (a crashed tombstone
-      // delete removed the files but not the dir) counts as absent:
-      // schema inference over zero files throws, and the replay would
-      // crash-loop where the correct answer is "no existing rows"
-      val liveDataDirs: Set[String] =
-        ParquetUpsertSink.liveDataFileStatuses(fs, path, partitionCol)
-          .map(_.getPath.getParent.getName)
-          .toSet
+    // ONE glob round-trip discovers every live data file; the previous
+    // per-dir exists+listStatus pair cost 2×|touched| namenode RPCs per
+    // batch — measured as the dominant per-upsert cost as the partition
+    // count grows (and far worse against an object store). Partition
+    // values are Hive-escaped on disk, which percent-escapes every glob
+    // metacharacter, so the pattern below is literal-safe.
+    // A dir that exists but holds no data files (a crashed tombstone
+    // delete removed the files but not the dir) counts as absent:
+    // schema inference over zero files throws, and the replay would
+    // crash-loop where the correct answer is "no existing rows"
+    val liveFiles = ParquetUpsertSink.liveDataFileStatuses(fs, path, partitionCol)
+      .groupBy(_.getPath.getParent.getName)
+    val liveDataDirs: Set[String] = liveFiles.keySet
 
-      // the touched partitions ARE the read set: path-level pruning, no
-      // reading of the rest of the table. A batch touching only absent
-      // dirs (fresh table, or fully tombstoned away) reads nothing;
-      // transient READ failures below propagate (streaming retry), they
-      // must not masquerade as first-batch
-      val touchedDirs = parts
-        .filter(v => liveDataDirs.contains(s"$partitionCol=${dirName(v)}"))
-        .map(partDir)
-      // metadata-schema read: no per-batch footer-inference job (the
-      // lazy liveDirs fallback lists only legacy tables that predate
-      // `_schema.json`, once per sink lifetime)
-      def allLiveDirs: Seq[Path] =
-        liveDataDirs.toSeq.sorted.map(d => new Path(s"$path/$d"))
-      val existing =
-        if (touchedDirs.nonEmpty)
-          mergeReadSchema(spark, fs, allLiveDirs).map(schema =>
-            readWithSchema(spark, touchedDirs.toSeq, schema)
-              // align the string partition column back to the batch's type
-              .withColumn(partitionCol,
-                col(partitionCol).cast(batch.schema(partitionCol).dataType)))
-        else None
-      val mergedAll = existing match {
-        // allowMissingColumns = Hudi-style additive schema evolution: a
-        // batch may carry columns the table lacks (old rows null-fill)
-        // and vice versa after an evolution (new rows null-fill the
-        // legacy column). TYPE changes go through [[SchemaWidening]]:
-        // exact promotions (int→long, float→double) merge at the wide
-        // type — metadata-only evolution, the untouched narrow files
-        // promote on read — and anything lossy fails loudly BEFORE the
-        // union, never falling through to union type-coercion's silent
-        // common types (long+double→double would corrupt keys > 2^53).
-        case Some(old) =>
-          val aligned = SchemaWidening.alignForMerge(
-            Seq(old, deduped), "upsert batch")
-          Precombine.latest(
-            aligned(0).unionByName(aligned(1), allowMissingColumns = true),
-            recordKeys, precombine)
-        case None => deduped
-      }
-      val merged = deleteCol match {
-        case Some(d) => mergedAll.filter(!coalesce(col(d), lit(false)))
-        case None => mergedAll
-      }
+    // the touched partitions ARE the read set: path-level pruning, no
+    // reading of the rest of the table. A batch touching only absent
+    // dirs (fresh table, or fully tombstoned away) reads nothing;
+    // transient READ failures below propagate (streaming retry), they
+    // must not masquerade as first-batch
+    val touchedNames = parts.map(v => s"$partitionCol=${dirName(v)}")
+      .filter(liveDataDirs.contains)
+    val touchedDirs = touchedNames.map(d => new Path(s"$path/$d"))
+    // the merge's inputs are the batch plus the touched files: when
+    // they fit one task, every step below runs in one partition
+    val oneTask = fitsOneTask(spark,
+      touchedNames.map(liveFiles(_).map(_.getLen).sum).sum, Some(batch))
+    def planned(df: DataFrame): DataFrame = if (oneTask) df.coalesce(1) else df
+    val deduped = Precombine.latest(planned(batch), recordKeys, precombine)
+    // metadata-schema read: no per-batch footer-inference job (the
+    // lazy liveDirs fallback lists only legacy tables that predate
+    // `_schema.json`, once per sink lifetime)
+    def allLiveDirs: Seq[Path] =
+      liveDataDirs.toSeq.sorted.map(d => new Path(s"$path/$d"))
+    val existing =
+      if (touchedDirs.nonEmpty)
+        mergeReadSchema(spark, fs, allLiveDirs).map(schema =>
+          readWithSchema(spark, touchedDirs, schema)
+            // align the string partition column back to the batch's type
+            .withColumn(partitionCol,
+              col(partitionCol).cast(batch.schema(partitionCol).dataType)))
+      else None
+    val mergedAll = existing match {
+      // allowMissingColumns = Hudi-style additive schema evolution: a
+      // batch may carry columns the table lacks (old rows null-fill)
+      // and vice versa after an evolution (new rows null-fill the
+      // legacy column). TYPE changes go through [[SchemaWidening]]:
+      // exact promotions (int→long, float→double) merge at the wide
+      // type — metadata-only evolution, the untouched narrow files
+      // promote on read — and anything lossy fails loudly BEFORE the
+      // union, never falling through to union type-coercion's silent
+      // common types (long+double→double would corrupt keys > 2^53).
+      case Some(old) =>
+        val aligned = SchemaWidening.alignForMerge(
+          Seq(old, deduped), "upsert batch")
+        Precombine.latest(
+          planned(aligned(0).unionByName(aligned(1), allowMissingColumns = true)),
+          recordKeys, precombine)
+      case None => deduped
+    }
+    val merged = deleteCol match {
+      case Some(d) => mergedAll.filter(!coalesce(col(d), lit(false)))
+      case None => mergedAll
+    }
 
-      // a batch touching only absent partitions (creation-only) takes
-      // the same commit: there are no pre-images to read, and its
-      // touched-partition manifest still lets [[readAsOf]] tell that
-      // these partitions did not exist before this commit
-      rewritePartitions(spark, fs, merged, parts, batchId, "upsert")()
-      persistWriteConfig(fs)
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactPartitions(spark)
-      // sync the PERSISTED superset schema, not this batch's merge
-      // shape: a creation-only commit's merged.schema is just the batch
-      // — syncing it would drop and recreate the catalog entry WITHOUT
-      // columns living only in untouched partitions (the same narrowing
-      // compactMorLocked's sync was fixed for)
-      syncTable.foreach(registerAndSync(spark, _,
-        mergeReadSchema(spark, fs, Seq.empty).getOrElse(merged.schema)))
-    } finally deduped.unpersist(false)
+    // a batch touching only absent partitions (creation-only) takes
+    // the same commit: there are no pre-images to read, and its
+    // touched-partition manifest still lets [[readAsOf]] tell that
+    // these partitions did not exist before this commit
+    rewritePartitions(spark, fs, merged, parts, batchId, "upsert", oneTask)()
+    persistWriteConfig(fs)
+    if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+      compactPartitions(spark)
+    // sync the PERSISTED superset schema, not this batch's merge
+    // shape: a creation-only commit's merged.schema is just the batch
+    // — syncing it would drop and recreate the catalog entry WITHOUT
+    // columns living only in untouched partitions (the same narrowing
+    // compactMorLocked's sync was fixed for)
+    syncTable.foreach(registerAndSync(spark, _,
+      mergeReadSchema(spark, fs, Seq.empty).getOrElse(merged.schema)))
   }
 
   /** Row-level DELETE over the table, copy-on-write: removes every row
@@ -1601,13 +1657,11 @@ final case class ParquetUpsertSink(
   private def deleteLocked(spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, cond: org.apache.spark.sql.Column,
       batchId: Long): (Seq[String], Seq[Path]) = {
-    val liveDataDirs: Set[String] =
-      ParquetUpsertSink.liveDataFileStatuses(fs, path, partitionCol)
-        .map(_.getPath.getParent.getName)
-        .toSet
-    if (liveDataDirs.isEmpty) return (Seq.empty, Seq.empty)
+    val liveFiles = ParquetUpsertSink.liveDataFileStatuses(fs, path, partitionCol)
+      .groupBy(_.getPath.getParent.getName)
+    if (liveFiles.isEmpty) return (Seq.empty, Seq.empty)
     def allLiveDirs: Seq[Path] =
-      liveDataDirs.toSeq.sorted.map(d => new Path(s"$path/$d"))
+      liveFiles.keys.toSeq.sorted.map(d => new Path(s"$path/$d"))
     val schema = mergeReadSchema(spark, fs, allLiveDirs)
       .getOrElse(return (Seq.empty, Seq.empty))
     // matched partitions first (metadata-scale result): the full-table
@@ -1615,10 +1669,14 @@ final case class ParquetUpsertSink(
     val matched = partitionValues(readWithSchema(spark, allLiveDirs, schema).filter(cond))
     if (matched.isEmpty) return (Seq.empty, Seq.empty)
     // survivors: rows where cond is FALSE or NULL (SQL DELETE keeps
-    // NULL-condition rows), written back exactly like upsert's merge
+    // NULL-condition rows), written back exactly like upsert's merge —
+    // by one task when the matched partitions' files fit one
     val survivors = readWithSchema(spark, matched.map(partDir), schema)
       .filter(!coalesce(cond, lit(false)))
-    (matched, rewritePartitions(spark, fs, survivors, matched, batchId, "delete")())
+    val matchedBytes = matched.map(v => liveFiles.get(s"$partitionCol=${dirName(v)}")
+      .fold(0L)(_.map(_.getLen).sum)).sum
+    (matched, rewritePartitions(spark, fs, survivors, matched, batchId, "delete",
+      fitsOneTask(spark, matchedBytes))())
   }
 
   /** Group-replacement commit for SQL row-level operations (UPDATE /

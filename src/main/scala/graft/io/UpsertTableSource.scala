@@ -1096,6 +1096,16 @@ object UpsertTableSource {
   val SplitTargetConfKey = "spark.graft.upsert.split.targetBytes"
   val DefaultSplitTargetBytes: Long = 128L * 1024 * 1024
 
+  /** One task's worth of input bytes in `spark`'s conf
+    * ([[SplitTargetConfKey]]; `0` = splitting off). The scan slices
+    * files by it, and the sink plans a rewrite no larger than it as one
+    * task.
+    */
+  private[io] def splitTargetBytes(spark: SparkSession): Long =
+    scala.util.Try(spark.conf
+      .get(SplitTargetConfKey, DefaultSplitTargetBytes.toString).toLong)
+      .getOrElse(DefaultSplitTargetBytes)
+
   /** Slice planned whole-file partitions at the configured target
     * size (driver-side; reads the active session conf). SPJ never
     * routes through this — its planning unit is the partition VALUE.
@@ -1103,9 +1113,7 @@ object UpsertTableSource {
   private[io] def splitBySize(parts: Array[InputPartition],
       overrideTarget: Option[Long] = None): Array[InputPartition] = {
     val target = overrideTarget.getOrElse(
-      scala.util.Try(SparkSession.active.conf
-        .get(SplitTargetConfKey, DefaultSplitTargetBytes.toString).toLong)
-        .getOrElse(DefaultSplitTargetBytes))
+      scala.util.Try(splitTargetBytes(SparkSession.active)).getOrElse(DefaultSplitTargetBytes))
     if (target <= 0) parts
     else parts.flatMap {
       case p: UpsertFilePartition if p.length > target =>

@@ -566,15 +566,134 @@ class ParquetUpsertSinkSpec extends SparkSpec {
     assert(rows == Seq((3, "x3")))
   }
 
-  test("a steady-state commit on an existing partition runs at most 6 Spark jobs") {
+  test("a steady-state commit on an existing partition runs at most 2 Spark jobs") {
     val dir = Files.createTempDirectory("cowjobs").toString + "/t"
     val sink = ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date")
     sink.upsert((1 to 200).map(i => Rec(i, s"v$i", 1, "2024-01-01")).toDF(), 0)
     val batch = (150 to 250).map(i => Rec(i, s"w$i", 2, "2024-01-01")).toDF()
+    // partition discovery (which fills the batch's cache), then the
+    // one-task merge and write
     val (_, jobs) = jobsDuring(sink.upsert(batch, 1))
-    assert(jobs <= 6, s"the commit ran $jobs Spark jobs")
+    assert(jobs <= 2, s"the commit ran $jobs Spark jobs")
     assert(spark.read.parquet(dir).count() == 250)
     assert(liveDataFiles(dir).size == 1)
+  }
+
+  /** `body` with the session conf `key` set to `value`, restored after. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** One COW sequence over a null partition, a key move, an
+    * all-tombstoned partition and precombine ties. Returns the rows
+    * read back, each partition dir's data-file count, and the Spark jobs
+    * the commits ran.
+    */
+  private def cowSequence(dir: String): (Seq[(Int, String, Option[String])], Map[String, Int], Int) = {
+    val sink = ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date",
+      deleteCol = Some("is_delete"))
+    def commit(batchId: Long, rows: (Int, String, Long, String, Boolean)*): Unit =
+      sink.upsert(rows.toDF("id", "v", "precombine", "processing_date", "is_delete"), batchId)
+    val (_, jobs) = jobsDuring {
+      commit(0, (1, "a", 10, "2024-01-01", false), (2, "b", 10, "2024-01-02", false),
+        (3, "c", 10, null, false), (4, "d", 10, "2024-01-03", false),
+        (5, "e", 10, "2024-01-03", false))
+      // the null partition again, with a tie inside the batch (id 6)
+      commit(1, (3, "c2", 20, null, false), (6, "x", 30, null, false),
+        (6, "y", 30, null, false))
+      // id 1 moves to 2024-01-02; a stale id 2 touches 2024-01-01, so
+      // 2024-01-01 is merged and left empty
+      commit(2, (1, "a-moved", 20, "2024-01-02", false), (2, "b-stale", 5, "2024-01-01", false))
+      // every key of 2024-01-03 tombstoned
+      commit(3, (4, "gone", 20, "2024-01-03", true), (5, "gone", 20, "2024-01-03", true))
+      // a tie with the stored version of id 2
+      commit(4, (2, "b-tie", 10, "2024-01-02", false))
+    }
+    val rows = spark.read.parquet(dir)
+      .select($"id", $"v", $"processing_date".cast("string"))
+      .as[(Int, String, Option[String])].collect().sortBy(_._1).toSeq
+    val files = liveDataFiles(dir).groupBy(_.takeWhile(_ != '/')).map { case (d, fs) => d -> fs.size }
+    (rows, files, jobs)
+  }
+
+  test("one-task and distributed merge plans commit the same table, one file per partition") {
+    val base = Files.createTempDirectory("cowplans").toString
+    val (oneRows, oneFiles, oneJobs) = cowSequence(s"$base/one")
+    // a 1-byte split target: no rewrite fits one task
+    val (distRows, distFiles, distJobs) =
+      withConf(graft.io.UpsertTableSource.SplitTargetConfKey, "1")(cowSequence(s"$base/dist"))
+    assert(oneRows == distRows)
+    assert(oneFiles == distFiles)
+    assert(oneFiles == Map("processing_date=2024-01-02" -> 1,
+      "processing_date=__HIVE_DEFAULT_PARTITION__" -> 1))
+    assert(oneRows.map(r => (r._1, r._3)) == Seq(
+      (1, Some("2024-01-02")), (2, Some("2024-01-02")), (3, None), (6, None)))
+    assert(oneRows.find(_._1 == 3).map(_._2).contains("c2"))
+    // the plans really differ: the distributed one shuffles, in extra jobs
+    assert(distJobs > oneJobs, s"distributed $distJobs jobs, one-task $oneJobs")
+  }
+
+  test("a key that moves partitions within one batch leaves no copy where it was") {
+    val dir = Files.createTempDirectory("cowmove1").toString + "/t"
+    val sink = ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date")
+    sink.upsert(Seq(Rec(1, "a", 10, "2024-01-01"), Rec(2, "b", 10, "2024-01-01")).toDF(), 0)
+    // both of id 1's versions are in the batch: every partition the
+    // batch names is merged, so the superseded one's partition loses
+    // the key too
+    sink.upsert(Seq(Rec(1, "a2", 20, "2024-01-01"), Rec(1, "a3", 30, "2024-01-02")).toDF(), 1)
+    val rows = spark.read.parquet(dir)
+      .select($"id", $"v", $"processing_date".cast("string"))
+      .as[(Int, String, String)].collect().sortBy(_._1).toSeq
+    assert(rows == Seq((1, "a3", "2024-01-02"), (2, "b", "2024-01-01")))
+  }
+
+  test("filesPerPartition = 2 keeps two files per partition for a small commit") {
+    val dir = Files.createTempDirectory("cowfpp").toString + "/t"
+    val sink = ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date",
+      filesPerPartition = 2)
+    // adaptive execution would fold this small shuffle into one task,
+    // and one task writes one file per partition
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      sink.upsert((1 to 100).map(i => Rec(i, s"v$i", 1, "2024-01-01")).toDF(), 0)
+      sink.upsert((90 to 110).map(i => Rec(i, s"w$i", 2, "2024-01-01")).toDF(), 1)
+    }
+    assert(liveDataFiles(dir).size == 2)
+    assert(spark.read.parquet(dir).count() == 110)
+  }
+
+  test("a MOR append of a small batch runs at most 2 Spark jobs") {
+    val dir = Files.createTempDirectory("morjobs").toString + "/t"
+    val sink = ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date",
+      writeMode = ParquetUpsertSink.ModeMor)
+    sink.upsert((1 to 200).map(i => Rec(i, s"v$i", 1, "2024-01-01")).toDF(), 0)
+    val batch = (150 to 250).map(i => Rec(i, s"w$i", 2, s"2024-01-0${i % 2 + 1}")).toDF()
+    // the emptiness probe (which fills the batch's cache), then the
+    // one-task dedup and delta write
+    val (_, jobs) = jobsDuring(sink.upsert(batch, 1))
+    assert(jobs <= 2, s"the MOR append ran $jobs Spark jobs")
+    val rows = sink.readMor(spark).select($"id", $"v").as[(Int, String)].collect()
+    // merge keys are partition-scoped: the 26 even ids in 150..200 update
+    // their 2024-01-01 rows, the other 75 batch rows are new
+    assert(rows.length == 275)
+    assert(rows.filter(_._1 == 150).map(_._2).toSeq == Seq("w150"))
+  }
+
+  test("a DELETE on a small table rewrites its matched partition in at most 2 Spark jobs") {
+    val dir = Files.createTempDirectory("deljobs").toString + "/t"
+    val sink = ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date")
+    sink.upsert((1 to 200).map(i => Rec(i, s"v$i", 1, s"2024-01-0${i % 2 + 1}")).toDF(), 0)
+    // the matched-partition discovery, then the one-task survivor rewrite
+    val (matched, jobs) = jobsDuring(sink.delete(spark, $"id" <= 10, 1))
+    assert(jobs <= 2, s"the DELETE ran $jobs Spark jobs")
+    assert(matched.sorted == Seq("2024-01-01", "2024-01-02"))
+    assert(spark.read.parquet(dir).count() == 190)
+    assert(liveDataFiles(dir).size == 2)
   }
 
   /** `body`'s result and the Spark jobs started while it ran (the
