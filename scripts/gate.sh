@@ -25,4 +25,6 @@ fi
 echo "[gate] bench regression list" && python3 scripts/bench_regressions.py
 # net Scala line count of the engine, a tracked number (ROADMAP aim 2)
 echo "[gate] src/main Scala lines: $(find src/main -name '*.scala' | xargs cat | wc -l)"
+# distinct session conf keys the engine reads, a tracked number (ROADMAP aim 2)
+echo "[gate] src/main spark.graft.* conf keys: $(grep -rhoE '"spark\.graft\.[A-Za-z0-9_.]+"' src/main | sort -u | wc -l)"
 echo "[gate] GREEN"

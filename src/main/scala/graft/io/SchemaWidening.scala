@@ -13,11 +13,11 @@ import org.apache.spark.sql.types._
   * both accept these as metadata-only evolution, because the parquet
   * files already on disk stay valid — readers promote the narrow
   * physical values on read (Spark 4's parquet readers do int32→
-  * long/double and float→double natively, and the format's own Group
-  * reader mirrors that in [[UpsertTableSource.readValue]]). At 100 TB
-  * that distinction is the whole feature: a type change that forced a
-  * table rewrite would be a full-table write job; a widening is a
-  * `_schema.json` update.
+  * long/double and float→double natively, and the format's scan reads
+  * through Spark's vectorized reader, [[UpsertColumnarPartitionReader]]).
+  * At 100 TB that distinction is the whole feature: a type change that
+  * forced a table rewrite would be a full-table write job; a widening
+  * is a `_schema.json` update.
   *
   * The lattice admits only EXACT promotions — every value of the
   * narrow type must be representable in the wide one:

@@ -1,5 +1,7 @@
 package graft.io
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -325,10 +327,10 @@ final class UpsertAggReader(part: UpsertFilePartition, tableSchema: StructType,
     val sumL = new java.util.HashMap[String, java.lang.Long]()
     val sumD = new java.util.HashMap[String, java.lang.Double]()
     var rowCount = 0L
-    val reader = new UpsertPartitionReader(part, projected, None, conf)
+    val reader = new UpsertColumnarPartitionReader(part, projected, None, conf,
+      skipFilters = Array.empty)
     try {
-      while (reader.next()) {
-        val row = reader.get()
+      while (reader.next()) reader.get().rowIterator().asScala.foreach { row =>
         rowCount += 1
         for (c <- needed; i = idx(c) if !row.isNullAt(i)) {
           counts.merge(c, 1L, (a, b) => a + b)

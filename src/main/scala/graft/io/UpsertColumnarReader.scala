@@ -15,16 +15,14 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Columnar (vectorized) read path for the `graft-upsert` scan.
+/** The read path of the `graft-upsert` scan, and the format's type rule.
   *
-  * The row path ([[UpsertPartitionReader]]) decodes through parquet-mr's
-  * example Group API: one boxed object per value, one [[InternalRow]]
-  * per row. Correct, but at 100 TB the scan IS the workload — so the
-  * default read path hands Spark [[ColumnarBatch]]es produced by
-  * Spark's own `VectorizedParquetRecordReader` (a public Java class of
-  * spark-sql): bulk-decoded column vectors that whole-stage codegen
-  * consumes directly, exactly what `spark.read.parquet` uses. The
-  * format-specific behaviors ride along unchanged:
+  * Every scan hands Spark [[ColumnarBatch]]es produced by Spark's own
+  * `VectorizedParquetRecordReader` (a public Java class of spark-sql):
+  * bulk-decoded column vectors that whole-stage codegen consumes
+  * directly, exactly what `spark.read.parquet` uses. The writer side is
+  * Spark's parquet writer too ([[UpsertDataWriter]]), so one codec owns
+  * the row↔parquet mapping. The format-specific behaviors:
   *
   *  - **partition column**: served as a [[ConstantColumnVector]]
   *    spliced into the batch at its projected position (the value is a
@@ -33,17 +31,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    constant-null vector (Spark's reader handles clipped schemas);
   *  - **type widening**: int32→long/double and float→double files
   *    promote natively (Spark 4's widening reads);
-  *  - **skipping**: the same translated [[UpsertDataSkipping]]
-  *    predicate rides the Hadoop conf (`ParquetInputFormat`), so
-  *    row-group stats/dictionary/column-index skipping match the row
-  *    path.
+  *  - **skipping**: the translated [[UpsertDataSkipping]] predicate
+  *    rides the Hadoop conf (`ParquetInputFormat`), so whole row groups
+  *    whose stats/dictionary/column index exclude it never decode;
+  *    Spark re-applies the residual filter to the rows served.
   *
   * SPJ's grouped per-partition-value file sets ride the same path
-  * (batches served file by file). Kept OFF the columnar path (row
-  * reader serves them): column types beyond flat atomics and
-  * single-level arrays of atomics.
-  * `spark.graft.upsert.columnar.enabled=false` forces rows for
-  * debugging/measurement.
+  * (batches served file by file).
   */
 object UpsertColumnar {
 
@@ -54,17 +48,19 @@ object UpsertColumnar {
     case _ => false
   }
 
-  /** Types the columnar path serves: flat atomics plus single-level
-    * arrays of atomics (embedding columns — Spark's vectorized reader
-    * grew nested column vectors in 3.3, SPARK-34863). Deeper nesting
-    * falls back to the row reader.
+  /** The table format's one type rule, for reads and writes: flat
+    * atomics plus single-level arrays of atomics (embedding columns —
+    * Spark's vectorized reader grew nested column vectors in 3.3,
+    * SPARK-34863). Checked on the driver, on a scan's required columns
+    * and on a write's schema.
     */
-  def supportedSchema(required: StructType): Boolean =
-    required.fields.forall(f => f.dataType match {
-      case dt if atomic(dt) => true
-      case ArrayType(et, _) if atomic(et) => true
-      case _ => false
-    })
+  def requireSupported(schema: StructType): Unit =
+    schema.fields.map(_.dataType).find {
+      case dt if atomic(dt) => false
+      case ArrayType(et, _) if atomic(et) => false
+      case _ => true
+    }.foreach(dt => throw new UnsupportedOperationException(
+      s"graft-upsert: column type $dt not supported by this table format"))
 }
 
 /** Sequential columnar reader over one partition value's file set

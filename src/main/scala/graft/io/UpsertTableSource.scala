@@ -4,15 +4,7 @@ import java.util.{Map => JMap}
 
 import scala.collection.JavaConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Type => PType, Types}
-import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -56,17 +48,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale notes: planning does one directory listing per surviving
   * partition dir (after pruning — under a partition predicate the
-  * listing is O(selected partitions), never the whole table). Row
-  * decode uses parquet-mr's record materialization; for the flat CDC
-  * row shapes this table format stores, decode cost is dominated by
-  * page decompression either way. Residual (non-partition) predicates
-  * stay with Spark and evaluate in whole-stage codegen above the scan.
+  * listing is O(selected partitions), never the whole table). Decode
+  * is Spark's vectorized parquet reader ([[UpsertColumnar]]). Residual
+  * (non-partition) predicates stay with Spark and evaluate in
+  * whole-stage codegen above the scan.
   *
-  * Supported column types: the flat-row set the sink writes — boolean,
-  * int, long, float, double, string, date, timestamp (INT64
-  * micros/millis and legacy INT96 both decode). Nested columns are out
-  * of scope for this table format (CDC rows are flattened upstream —
-  * SURVEY P3).
+  * Supported column types ([[UpsertColumnar.requireSupported]]): flat
+  * atomics — boolean, byte, short, int, long, float, double, string,
+  * binary, date, timestamp (INT64 micros/millis and legacy INT96 both
+  * decode) — and single-level arrays of them (embedding columns).
+  * Deeper nesting is out of scope for this table format (CDC rows are
+  * flattened upstream — SURVEY P3).
   *
   * Writes: `mode("append")` is UPSERT — task files stage under the
   * table path and the driver-side commit runs them through
@@ -799,8 +791,6 @@ final class UpsertScan(path: String, tableSchema: StructType,
   override def createReaderFactory(): PartitionReaderFactory =
     new UpsertReaderFactory(required, partitionCol,
       UpsertTableSource.serializableConf(), skipFilters,
-      columnarEnabled = SparkSession.active.conf
-        .get(UpsertTableSource.ColumnarConfKey, "true") == "true",
       // column-rename lineage: archived (time-travel) files may store a
       // required column under a historical name — readers resolve
       // through this map (driver-side props read, shipped per task)
@@ -869,12 +859,14 @@ private[io] final case class GraftTaskMetric(metricName: String, v: Long)
   override def value(): Long = v
 }
 
+/** Every graft-upsert scan reads through Spark's vectorized parquet
+  * reader ([[UpsertColumnarPartitionReader]]). Built on the driver, it
+  * checks the required columns against the format's type rule there,
+  * so an unsupported column fails the query before any task runs.
+  */
 final class UpsertReaderFactory(required: StructType, partitionCol: Option[String],
     conf: org.apache.spark.util.SerializableConfiguration,
     skipFilters: Array[Filter] = Array.empty,
-    // resolved DRIVER-side at factory construction (executors have no
-    // session): columnar unless the session conf opts out
-    columnarEnabled: Boolean = true,
     // current column name (lower-cased) → historical names, newest
     // first ([[ColumnAliases]]) — empty unless the table ever renamed
     aliases: Map[String, List[String]] = Map.empty,
@@ -882,12 +874,11 @@ final class UpsertReaderFactory(required: StructType, partitionCol: Option[Strin
     fileMetaCol: Option[String] = None)
   extends PartitionReaderFactory {
 
-  // Spark requires a uniform answer across a scan's partitions (it
-  // checks every one); supported types go columnar on both partition
-  // shapes — single files, and SPJ's grouped per-partition-value file
-  // sets (batches served file by file)
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnarEnabled && UpsertColumnar.supportedSchema(required)
+  UpsertColumnar.requireSupported(required)
+
+  // both partition shapes serve batches: single files, and SPJ's
+  // grouped per-partition-value file sets (batches served file by file)
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[ColumnarBatch] =
@@ -901,156 +892,7 @@ final class UpsertReaderFactory(required: StructType, partitionCol: Option[Strin
     }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case f: UpsertFilePartition =>
-        new UpsertPartitionReader(f, required, partitionCol, conf.value,
-          skipFilters, aliases, fileMetaCol)
-      case g: UpsertFilesPartition =>
-        new UpsertMultiFileReader(g, required, partitionCol, conf.value,
-          skipFilters, aliases, fileMetaCol)
-    }
-}
-
-/** Sequential reader over one partition value's file set (SPJ mode). */
-final class UpsertMultiFileReader(part: UpsertFilesPartition,
-    required: StructType, partitionCol: Option[String],
-    conf: Configuration, skipFilters: Array[Filter] = Array.empty,
-    aliases: Map[String, List[String]] = Map.empty,
-    fileMetaCol: Option[String] = None)
-  extends PartitionReader[InternalRow] {
-
-  private val files = part.files.iterator
-  private var current: UpsertPartitionReader = _
-
-  override def next(): Boolean = {
-    while (true) {
-      if (current == null) {
-        if (!files.hasNext) return false
-        current = new UpsertPartitionReader(
-          UpsertFilePartition(files.next(), part.partValue), required, partitionCol,
-          conf, skipFilters, aliases, fileMetaCol)
-      }
-      if (current.next()) return true
-      current.close()
-      current = null
-    }
-    false
-  }
-
-  override def get(): InternalRow = current.get()
-
-  override def close(): Unit = if (current != null) current.close()
-}
-
-/** Executor-side reader: parquet-mr record materialization of exactly
-  * the required data columns (projection pushed into the parquet read
-  * schema), partition column filled from the directory value, columns
-  * the file predates null-filled.
-  */
-final class UpsertPartitionReader(part: UpsertFilePartition,
-    required: StructType, partitionCol: Option[String],
-    // the SESSION's Hadoop configuration, shipped from the driver —
-    // a bare `new Configuration()` would drop every spark.hadoop.*
-    // setting (s3a credentials, endpoints) on real filesystems
-    baseConf: Configuration = new Configuration(),
-    // residual predicates for row-group skipping ([[UpsertDataSkipping]])
-    // — advisory: Spark re-evaluates them above the scan; plus the
-    // rename lineage for resolving current names against old files
-    skipFilters: Array[Filter] = Array.empty,
-    aliases: Map[String, List[String]] = Map.empty,
-    // the `_file` metadata column, when requested AND unclaimed by a
-    // real data column: a per-file constant, never a parquet read
-    fileMetaCol: Option[String] = None)
-  extends PartitionReader[InternalRow] {
-
-  private val conf = new Configuration(baseConf)
-  private val file = new Path(part.filePath)
-
-  // data columns this FILE can serve (projection must be a subset of
-  // the file schema; evolved-in columns the file lacks null-fill)
-  private val fileSchema: MessageType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
-
-  private val dataFields: Array[StructField] =
-    required.fields.filter(f => !partitionCol.exists(_.equalsIgnoreCase(f.name)) &&
-      !fileMetaCol.exists(_.equalsIgnoreCase(f.name)))
-
-  // the name THIS file stores the field under: the current name, else
-  // (archived pre-rename files) the newest historical alias present
-  private def fileNameOf(f: StructField): Option[String] =
-    if (fileSchema.containsField(f.name)) Some(f.name)
-    else aliases.getOrElse(f.name.toLowerCase(java.util.Locale.ROOT), Nil)
-      .find(fileSchema.containsField)
-
-  private val presentFields: Array[(StructField, String)] =
-    dataFields.flatMap(f => fileNameOf(f).map(f -> _))
-
-  private val reader: ParquetReader[Group] = {
-    val projection: MessageType = {
-      val b = Types.buildMessage()
-      presentFields.foreach { case (_, fileName) =>
-        b.addField(fileSchema.getType(fileSchema.getFieldIndex(fileName))) }
-      b.named(fileSchema.getName)
-    }
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      projection.toString)
-    val builder = ParquetReader.builder(new GroupReadSupport(), file).withConf(conf)
-    // row-group min/max skipping (plus dictionary and record filtering):
-    // translated only over columns present in THIS file's projection, so
-    // evolved tables and filter-shape gaps degrade to a plain scan.
-    // parquet-mr validates predicate columns against the read schema,
-    // hence the restriction to fields present UNDER THEIR CURRENT NAME
-    // — a filter column outside the projection cannot occur (Spark
-    // includes every residual filter's references in the required
-    // schema) but must not throw; alias-resolved (renamed) columns
-    // skip predicates conservatively (Spark re-evaluates above).
-    val withFilter = UpsertDataSkipping.parquetPredicate(
-      skipFilters.toSeq, projection,
-      StructType(presentFields.collect { case (f, n) if n == f.name => f })) match {
-      case Some(pred) => builder.withFilter(
-        org.apache.parquet.filter2.compat.FilterCompat.get(pred))
-      case None => builder
-    }
-    // planner-issued byte-range slice: serve only the row groups whose
-    // midpoint falls in [start, start+length) — composes with the
-    // row-group stats/dictionary filtering above
-    val ranged =
-      if (part.length >= 0) withFilter.withFileRange(part.start, part.start + part.length)
-      else withFilter
-    ranged.build()
-  }
-
-  private var current: Group = _
-
-  override def next(): Boolean = {
-    current = reader.read()
-    current != null
-  }
-
-  private val presentNames: Set[String] = presentFields.map(_._1.name).toSet
-
-  override def get(): InternalRow = {
-    val values = new Array[Any](required.length)
-    var pi = 0 // index into the projected group
-    var i = 0
-    while (i < required.length) {
-      val f = required.fields(i)
-      if (partitionCol.exists(_.equalsIgnoreCase(f.name))) {
-        values(i) = if (part.partValue == null) null else UTF8String.fromString(part.partValue)
-      } else if (fileMetaCol.exists(_.equalsIgnoreCase(f.name))) {
-        values(i) = UTF8String.fromString(part.filePath)
-      } else if (presentNames.contains(f.name)) {
-        values(i) = UpsertTableSource.readValue(current, pi, f.dataType)
-        pi += 1
-      } // else: evolved-in column absent from this file -> null
-      i += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  override def close(): Unit = reader.close()
+    throw new UnsupportedOperationException("graft-upsert: scans are columnar only")
 }
 
 object UpsertTableSource {
@@ -1131,12 +973,6 @@ object UpsertTableSource {
       case other => Seq(other)
     }
   }
-
-  /** Session conf gating the vectorized [[ColumnarBatch]] read path
-    * ([[UpsertColumnarPartitionReader]]) — default ON; off forces the
-    * row-at-a-time Group reader (debugging/measurement).
-    */
-  val ColumnarConfKey = "spark.graft.upsert.columnar.enabled"
 
   /** Session conf gating filter-aware statistics reporting
     * ([[UpsertScan.estimateStatistics]]) — default ON. Off, a
@@ -1384,80 +1220,6 @@ object UpsertTableSource {
           if (f.name == c) f.copy(dataType = StringType) else f))
         case None => inferred
       }
-    }
-  }
-
-  private val JulianDayOfEpoch = 2440588L
-  private val MicrosPerDay = 86400000000L
-
-  /** Decode one projected field into Spark's internal representation.
-    * `pi` indexes the PROJECTED group (file order of present fields).
-    */
-  private[io] def readValue(g: Group, pi: Int, dt: DataType): Any = {
-    if (g.getFieldRepetitionCount(pi) == 0) return null
-    // single-level arrays of atomics (embedding columns): the standard
-    // 3-level LIST layout — optional group (LIST) { repeated group list
-    // { <optional|required> element } } — exactly what the sink (a
-    // Spark parquet write) emits. Element nulls surface as nulls.
-    dt match {
-      case ArrayType(et, _) =>
-        val lg = g.getGroup(pi, 0)
-        val n = lg.getFieldRepetitionCount(0)
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          out(i) = readValue(lg.getGroup(0, i), 0, et)
-          i += 1
-        }
-        return new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-      case _ => ()
-    }
-    val prim = g.getType.getType(pi).asPrimitiveType()
-    dt match {
-      // the widened-type reads (INT32-as-long/double, FLOAT-as-double)
-      // serve files written BEFORE an exact type widening — the
-      // metadata-only evolution depends on them (matches what Spark 4's
-      // own parquet readers promote natively)
-      case LongType => prim.getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT32 => g.getInteger(pi, 0).toLong
-        case _ => g.getLong(pi, 0)
-      }
-      case IntegerType => g.getInteger(pi, 0)
-      case DoubleType => prim.getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT32 => g.getInteger(pi, 0).toDouble
-        case PrimitiveTypeName.FLOAT => g.getFloat(pi, 0).toDouble
-        case _ => g.getDouble(pi, 0)
-      }
-      case FloatType => g.getFloat(pi, 0)
-      case BooleanType => g.getBoolean(pi, 0)
-      case StringType => UTF8String.fromBytes(g.getBinary(pi, 0).getBytes)
-      case BinaryType => g.getBinary(pi, 0).getBytes
-      case DateType => g.getInteger(pi, 0) // days since epoch, as written
-      case TimestampType | TimestampNTZType =>
-        prim.getPrimitiveTypeName match {
-          case PrimitiveTypeName.INT96 =>
-            // legacy layout: 8B nanos-of-day LE + 4B julian day LE
-            val b = java.nio.ByteBuffer.wrap(g.getInt96(pi, 0).getBytes)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            val nanosOfDay = b.getLong
-            val julianDay = b.getInt
-            (julianDay - JulianDayOfEpoch) * MicrosPerDay + nanosOfDay / 1000L
-          case PrimitiveTypeName.INT64 =>
-            val v = g.getLong(pi, 0)
-            prim.getLogicalTypeAnnotation match {
-              case t: TimestampLogicalTypeAnnotation
-                  if t.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS => v * 1000L
-              case t: TimestampLogicalTypeAnnotation
-                  if t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS => v / 1000L
-              case _ => v // micros
-            }
-          case other =>
-            throw new UnsupportedOperationException(
-              s"graft-upsert: timestamp stored as $other not supported")
-        }
-      case other =>
-        throw new UnsupportedOperationException(
-          s"graft-upsert: column type $other not supported by this table format")
     }
   }
 }

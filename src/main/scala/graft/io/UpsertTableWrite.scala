@@ -1,18 +1,16 @@
 package graft.io
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type => PType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.datasources.OutputWriter
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 WRITE path for upsert tables — the standard
   * `df.write.format("graft-upsert").mode("append")` API routed through
@@ -244,65 +242,73 @@ final class UpsertStreamingWrite(path: String, schema: StructType,
 
 final case class UpsertWriteCommit(file: String) extends WriterCommitMessage
 
+/** Spark's parquet writer prepared on the driver for one write schema:
+  * the serializable factory `ParquetFileFormat.prepareWrite` returns,
+  * plus the job conf it configured (write support, parquet schema,
+  * codec), shipped to the tasks. Preparing it checks the schema against
+  * the format's type rule ([[UpsertColumnar.requireSupported]]).
+  */
+final class UpsertParquetOutput(val schema: StructType) extends Serializable {
+  UpsertColumnar.requireSupported(schema)
+
+  @transient private val job =
+    Job.getInstance(SparkSession.active.sessionState.newHadoopConf())
+  private val writers =
+    new ParquetFileFormat().prepareWrite(SparkSession.active, job, Map.empty, schema)
+  val conf = new SerializableConfiguration(job.getConfiguration)
+
+  /** Executor side: a writer of one task file. */
+  def open(file: String): OutputWriter =
+    writers.newInstance(file, schema, new TaskAttemptContextImpl(conf.value,
+      new TaskAttemptID(new TaskID(new JobID("graft-upsert", 0), TaskType.MAP, 0), 0)))
+}
+
 final class UpsertDataWriterFactory(stagingDir: String, schema: StructType,
     // true for ReplaceData (row-level operation) writes: Spark 4.x
     // prepends RowDeltaUtils.OPERATION_COLUMN (an int tag) to each row
     // of a group-based rewrite, and only strips it for connectors that
     // declare metadata attributes — writers here are positional, so the
     // leading tag must be skipped explicitly
-    dropOperationColumn: Boolean = false,
-    conf: org.apache.spark.util.SerializableConfiguration =
-      UpsertTableSource.serializableConf())
+    dropOperationColumn: Boolean = false)
   extends DataWriterFactory {
+  private val out = new UpsertParquetOutput(schema)
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new UpsertDataWriter(s"$stagingDir/task-$partitionId-$taskId.parquet", schema,
-      if (dropOperationColumn) 1 else 0, conf.value)
+    new UpsertDataWriter(s"$stagingDir/task-$partitionId-$taskId.parquet", out,
+      dropOperationColumn)
 }
 
 final class UpsertStreamingDataWriterFactory(stagingBase: String,
-    schema: StructType,
-    conf: org.apache.spark.util.SerializableConfiguration =
-      UpsertTableSource.serializableConf()) extends StreamingDataWriterFactory {
+    schema: StructType) extends StreamingDataWriterFactory {
+  private val out = new UpsertParquetOutput(schema)
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new UpsertDataWriter(
-      s"$stagingBase/e$epochId/task-$partitionId-$taskId.parquet", schema,
-      baseConf = conf.value)
+      s"$stagingBase/e$epochId/task-$partitionId-$taskId.parquet", out)
 }
 
-/** Executor-side task writer: Spark internal rows → parquet Groups
-  * (the reverse mapping of [[UpsertPartitionReader]]; same flat type
-  * set). One file per task, removed on abort. `rowOffset` skips
-  * leading non-data fields (the ReplaceData operation tag).
+/** Executor-side task writer: Spark internal rows through Spark's own
+  * parquet writer, the codec the scan reads back with. One file per
+  * task, removed on abort. `dropOperationColumn` skips the leading
+  * ReplaceData operation tag.
   */
-final class UpsertDataWriter(file: String, schema: StructType,
-    rowOffset: Int = 0,
-    // session Hadoop conf from the driver (bare `new Configuration()`
-    // would drop spark.hadoop.* on real filesystems)
-    baseConf: Configuration = new Configuration()) extends DataWriter[InternalRow] {
+final class UpsertDataWriter(file: String, out: UpsertParquetOutput,
+    dropOperationColumn: Boolean = false) extends DataWriter[InternalRow] {
 
-  private val conf = new Configuration(baseConf)
-  private val parquetSchema: MessageType = UpsertTableWrite.toParquetSchema(schema)
-  GroupWriteSupport.setSchema(parquetSchema, conf)
-  private val writer = ExampleParquetWriter.builder(new Path(file))
-    .withConf(conf).build()
-  private val factory = new SimpleGroupFactory(parquetSchema)
+  private val schema = out.schema
+  private val writer = out.open(file)
+  private val dataRow = ProjectingInternalRow(schema, 1 to schema.length)
 
-  override def write(row: InternalRow): Unit = {
-    if (rowOffset > 0 && row.numFields != schema.length + rowOffset)
-      throw new IllegalStateException(
-        s"graft-upsert ReplaceData row has ${row.numFields} fields, expected " +
-          s"${schema.length + rowOffset} (operation tag + data) — Spark's " +
-          "row-level write layout changed; adjust UpsertDataWriterFactory")
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i + rowOffset))
-        UpsertTableWrite.appendValue(g, i, schema(i).dataType, row, i + rowOffset)
-      i += 1
+  override def write(row: InternalRow): Unit =
+    if (!dropOperationColumn) writer.write(row)
+    else {
+      if (row.numFields != schema.length + 1)
+        throw new IllegalStateException(
+          s"graft-upsert ReplaceData row has ${row.numFields} fields, expected " +
+            s"${schema.length + 1} (operation tag + data) — Spark's " +
+            "row-level write layout changed; adjust UpsertDataWriterFactory")
+      dataRow.project(row)
+      writer.write(dataRow)
     }
-    writer.write(g)
-  }
 
   override def commit(): WriterCommitMessage = {
     writer.close()
@@ -311,7 +317,8 @@ final class UpsertDataWriter(file: String, schema: StructType,
 
   override def abort(): Unit = {
     writer.close()
-    new Path(file).getFileSystem(conf).delete(new Path(file), false)
+    val p = new Path(file)
+    p.getFileSystem(out.conf.value).delete(p, false)
   }
 
   override def close(): Unit = ()
@@ -351,60 +358,5 @@ object UpsertTableWrite {
     val fs = new Path(dir)
       .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
     fs.delete(new Path(dir), true)
-  }
-
-  /** Spark flat schema → parquet message type (all fields optional;
-    * nested types are out of scope for this table format).
-    */
-  def toParquetSchema(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      val fb = f.dataType match {
-        case LongType => Types.optional(PrimitiveTypeName.INT64)
-        case IntegerType => Types.optional(PrimitiveTypeName.INT32)
-          .as(LogicalTypeAnnotation.intType(32, true))
-        case DoubleType => Types.optional(PrimitiveTypeName.DOUBLE)
-        case FloatType => Types.optional(PrimitiveTypeName.FLOAT)
-        case BooleanType => Types.optional(PrimitiveTypeName.BOOLEAN)
-        case StringType => Types.optional(PrimitiveTypeName.BINARY)
-          .as(LogicalTypeAnnotation.stringType())
-        case BinaryType => Types.optional(PrimitiveTypeName.BINARY)
-        case DateType => Types.optional(PrimitiveTypeName.INT32)
-          .as(LogicalTypeAnnotation.dateType())
-        case TimestampType => Types.optional(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS))
-        case TimestampNTZType => Types.optional(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.timestampType(false,
-            LogicalTypeAnnotation.TimeUnit.MICROS))
-        case other => throw new UnsupportedOperationException(
-          s"graft-upsert: column type $other not supported by this table format")
-      }
-      b.addField(fb.named(f.name))
-    }
-    b.named("spark_schema")
-  }
-
-  /** Append one non-null field of a Spark internal row to a Group;
-    * `ri` is the row ordinal (it can lead the group field index `i` by
-    * the ReplaceData operation-tag offset).
-    */
-  def appendValue(g: Group, i: Int, dt: DataType, row: InternalRow,
-      ri: Int): Unit = dt match {
-    case LongType => g.append(g.getType.getFieldName(i), row.getLong(ri))
-    case IntegerType => g.append(g.getType.getFieldName(i), row.getInt(ri))
-    case DoubleType => g.append(g.getType.getFieldName(i), row.getDouble(ri))
-    case FloatType => g.append(g.getType.getFieldName(i), row.getFloat(ri))
-    case BooleanType => g.append(g.getType.getFieldName(i), row.getBoolean(ri))
-    case StringType => g.append(g.getType.getFieldName(i),
-      org.apache.parquet.io.api.Binary.fromReusedByteArray(
-        row.getUTF8String(ri).getBytes))
-    case BinaryType => g.append(g.getType.getFieldName(i),
-      org.apache.parquet.io.api.Binary.fromReusedByteArray(row.getBinary(ri)))
-    case DateType => g.append(g.getType.getFieldName(i), row.getInt(ri))
-    case TimestampType | TimestampNTZType =>
-      g.append(g.getType.getFieldName(i), row.getLong(ri))
-    case other => throw new UnsupportedOperationException(
-      s"graft-upsert: column type $other not supported by this table format")
   }
 }

@@ -9,10 +9,11 @@ import org.apache.spark.sql.types._
 import graft.io.{ParquetUpsertSink, UpsertTableSource}
 
 /** The vectorized ColumnarBatch read path of the `graft-upsert` scan:
-  * same answers as the row-at-a-time Group reader on every
-  * format-specific behavior (partition constants, evolution null-fill,
-  * type widening, nulls, binary, multi-row-group skipping), with the
-  * executed plan proving batches actually flow (ColumnarToRow).
+  * the rows the spec wrote (or `spark.read.parquet` of the same live
+  * files) on every format-specific behavior (partition constants,
+  * evolution null-fill, type widening, nulls, binary, multi-row-group
+  * skipping), with the executed plan proving batches actually flow
+  * (ColumnarToRow).
   */
 class ColumnarReadSpec extends SparkSpec {
   import spark.implicits._
@@ -29,22 +30,18 @@ class ColumnarReadSpec extends SparkSpec {
       case x => String.valueOf(x)
     }.mkString("|")).toSet
 
-  /** Evaluate `mk` under both read paths; assert identical rows AND
-    * that the columnar run really went columnar.
-    */
-  private def parity(mk: => DataFrame): Set[String] = {
-    val colRows = rowsOf(mk)
+  /** Evaluate `mk`; assert the run really went columnar. */
+  private def columnar(mk: => DataFrame): Set[String] = {
     assert(planOf(mk).contains("ColumnarToRow"),
       "columnar path not active — expected ColumnarToRow in the plan")
-    spark.conf.set(UpsertTableSource.ColumnarConfKey, "false")
-    try {
-      val rowRows = rowsOf(mk)
-      assert(!planOf(mk).contains("ColumnarToRow"),
-        "row path still columnar with the switch off")
-      assert(colRows == rowRows, "columnar and row reads disagree")
-    } finally spark.conf.unset(UpsertTableSource.ColumnarConfKey)
-    colRows
+    rowsOf(mk)
   }
+
+  /** Spark's own parquet read of the table's live files (the partition
+    * column from the `p=` dirs), projected like the table.
+    */
+  private def liveFiles(dir: String, cols: Seq[String]): Set[String] =
+    rowsOf(spark.read.parquet(dir).select(cols.map(col): _*))
 
   test("basic read parity, all flat types, with nulls") {
     val dir = tmp("colbasic")
@@ -59,8 +56,10 @@ class ColumnarReadSpec extends SparkSpec {
         s"p${n % 3}")
     }
     sink.upsert(rows.toDF("id", "seq", "s", "d", "b", "dt", "ts", "p"), 0)
-    val got = parity(spark.read.format("graft-upsert").load(dir))
+    val table = spark.read.format("graft-upsert").load(dir)
+    val got = columnar(table)
     assert(got.size == 500)
+    assert(got == liveFiles(dir, table.columns.toSeq))
   }
 
   test("partition constant, projection order, and null partition value") {
@@ -70,7 +69,7 @@ class ColumnarReadSpec extends SparkSpec {
       .toDF("id", "seq", "v", "p"), 0)
     // partition column projected FIRST (the constant vector must splice
     // at its projected position, not append at the end)
-    val got = parity(spark.read.format("graft-upsert").load(dir)
+    val got = columnar(spark.read.format("graft-upsert").load(dir)
       .select("p", "v", "id"))
     assert(got == Set("a|10|1", "null|20|2"))
   }
@@ -80,7 +79,7 @@ class ColumnarReadSpec extends SparkSpec {
     val sink = ParquetUpsertSink(dir, Seq("id"), "seq", "p")
     sink.upsert(Seq((1L, 1L, "a")).toDF("id", "seq", "p"), 0)
     sink.upsert(Seq((2L, 1L, "new", "b")).toDF("id", "seq", "extra", "p"), 1)
-    val got = parity(spark.read.format("graft-upsert").load(dir)
+    val got = columnar(spark.read.format("graft-upsert").load(dir)
       .select("id", "extra"))
     assert(got == Set("1|null", "2|new"))
   }
@@ -94,7 +93,7 @@ class ColumnarReadSpec extends SparkSpec {
     val table = spark.read.format("graft-upsert").load(dir)
     assert(table.schema("id").dataType == LongType)
     assert(table.schema("v").dataType == DoubleType)
-    val got = parity(spark.read.format("graft-upsert").load(dir)
+    val got = columnar(spark.read.format("graft-upsert").load(dir)
       .select("id", "v"))
     assert(got == Set("1|1.5", "2|2.5"))
   }
@@ -105,7 +104,8 @@ class ColumnarReadSpec extends SparkSpec {
     sink.upsert(Seq((1L, 1L, Array[Byte](1, 2, 3), "a"),
       (2L, 1L, null.asInstanceOf[Array[Byte]], "a"))
       .toDF("id", "seq", "fp", "p"), 0)
-    parity(spark.read.format("graft-upsert").load(dir).select("id", "fp"))
+    val got = columnar(spark.read.format("graft-upsert").load(dir).select("id", "fp"))
+    assert(got == Set(s"1|${Array[Byte](1, 2, 3).toSeq}", "2|null"))
   }
 
   test("row-group skipping predicates apply identically") {
@@ -113,9 +113,9 @@ class ColumnarReadSpec extends SparkSpec {
     val sink = ParquetUpsertSink(dir, Seq("id"), "seq", "p")
     sink.upsert((0L until 200000L).map(n => (n, 1L, n * 3, s"p${n % 2}"))
       .toDF("id", "seq", "v", "p"), 0)
-    val got = parity(spark.read.format("graft-upsert").load(dir)
+    val got = columnar(spark.read.format("graft-upsert").load(dir)
       .where($"id" >= 199990L).select("id", "v"))
-    assert(got.size == 10)
+    assert(got == (199990L until 200000L).map(n => s"$n|${n * 3}").toSet)
   }
 
   test("time travel reads go columnar too") {
@@ -124,7 +124,7 @@ class ColumnarReadSpec extends SparkSpec {
     sink.upsert(Seq((1L, 1L, 10L, "a")).toDF("id", "seq", "v", "p"), 0)
     val c0 = ParquetUpsertSink.listArchivedCommits(spark, dir).last
     sink.upsert(Seq((1L, 2L, 99L, "a")).toDF("id", "seq", "v", "p"), 1)
-    val got = parity(spark.read.format("graft-upsert")
+    val got = columnar(spark.read.format("graft-upsert")
       .option("asOf", c0).load(dir).select("id", "v"))
     assert(got == Set("1|10"))
   }
@@ -138,9 +138,9 @@ class ColumnarReadSpec extends SparkSpec {
       .toDF("id", "seq", "v", "p"), 0)
     spark.conf.set(UpsertTableSource.SpjConfKey, "true")
     try {
-      val got = parity(spark.read.format("graft-upsert").load(dir)
+      val got = columnar(spark.read.format("graft-upsert").load(dir)
         .select("p", "v", "id"))
-      assert(got.size == 100)
+      assert(got == (0L until 100L).map(n => s"p${n % 2}|${n * 3}|$n").toSet)
     } finally spark.conf.unset(UpsertTableSource.SpjConfKey)
   }
 
@@ -152,9 +152,10 @@ class ColumnarReadSpec extends SparkSpec {
       (2L, 1L, null.asInstanceOf[Seq[Float]], Seq.empty[String], "a"),
       (3L, 1L, Seq(3.5f), null.asInstanceOf[Seq[String]], "b"))
       .toDF("id", "seq", "emb", "tags", "p"), 0)
-    val got = parity(spark.read.format("graft-upsert").load(dir)
+    val got = columnar(spark.read.format("graft-upsert").load(dir)
       .select("id", "emb", "tags"))
     assert(got.size == 3)
+    assert(got == liveFiles(dir, Seq("id", "emb", "tags")))
     // and the values are right, not merely consistent
     assert(spark.read.format("graft-upsert").load(dir)
       .where($"id" === 1L).select("emb").as[Seq[Float]].head() == Seq(1.0f, 2.0f))

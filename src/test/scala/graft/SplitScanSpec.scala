@@ -64,16 +64,12 @@ class SplitScanSpec extends SparkSpec {
     }
   }
 
-  test("split read parity on BOTH read paths (columnar and row)") {
+  test("split and unsplit reads serve the closed-form checksum") {
     val dir = tmp("splitpar")
     writeBig(dir, 20000)
-    withSplitTarget(32 * 1024) {
-      val expected = checksum(table(dir))
-      spark.conf.set(UpsertTableSource.ColumnarConfKey, "false")
-      try assert(checksum(table(dir)) == expected)
-      finally spark.conf.unset(UpsertTableSource.ColumnarConfKey)
-      assert(expected._1 == 20000L)
-    }
+    val expected = (20000L, 20000L, 20000L * 19999 / 2)
+    withSplitTarget(32 * 1024)(assert(checksum(table(dir)) == expected))
+    withSplitTarget(0)(assert(checksum(table(dir)) == expected))
   }
 
   test("splits compose with residual-predicate filtering and the partition constant") {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -104,10 +105,9 @@ class UpsertStreamReadSpec extends SparkSpec {
     assert(parts.nonEmpty)
     val factory = stream.createReaderFactory()
     val rows = parts.flatMap { p =>
-      val r = factory.createReader(p)
+      val r = factory.createColumnarReader(p)
       val buf = mutable.Buffer.empty[(Long, Double)]
-      try while (r.next()) {
-        val row = r.get()
+      try while (r.next()) r.get().rowIterator().asScala.foreach { row =>
         buf += ((row.getLong(schema.fieldIndex("id")),
           row.getDouble(schema.fieldIndex("price"))))
       } finally r.close()

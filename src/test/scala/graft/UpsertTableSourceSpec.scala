@@ -453,27 +453,21 @@ class UpsertTableSourceSpec extends SparkSpec {
     assert(agg.as[(Double, Double, Long)].collect().head == ((2.0, 200.0, 100L)))
   }
 
-  test("_file metadata column serves the source path on both read paths") {
+  test("_file metadata column serves the source path") {
     val (dir, _) = mkTable("dsv2file")
     val t = spark.read.format("graft-upsert").load(dir)
-    def check(): Unit = {
-      val rows = t.select($"id", col("_file")).collect()
-      assert(rows.length == 3)
-      rows.foreach { r =>
-        val f = r.getString(1)
-        assert(f.contains(dir) && f.contains("part-") && f.endsWith(".parquet"), f)
-        // the path is REAL — the named file exists and sits in the
-        // partition dir the row belongs to
-        assert(new java.io.File(new java.net.URI(f).getPath).isFile ||
-          new java.io.File(f.stripPrefix("file:")).isFile, f)
-      }
-      // rows in different partitions come from different files
-      assert(rows.map(_.getString(1)).distinct.length > 1)
+    val rows = t.select($"id", col("_file")).collect()
+    assert(rows.length == 3)
+    rows.foreach { r =>
+      val f = r.getString(1)
+      assert(f.contains(dir) && f.contains("part-") && f.endsWith(".parquet"), f)
+      // the path is REAL — the named file exists and sits in the
+      // partition dir the row belongs to
+      assert(new java.io.File(new java.net.URI(f).getPath).isFile ||
+        new java.io.File(f.stripPrefix("file:")).isFile, f)
     }
-    check() // columnar path (default)
-    spark.conf.set(graft.io.UpsertTableSource.ColumnarConfKey, "false")
-    try check() // row path
-    finally spark.conf.unset(graft.io.UpsertTableSource.ColumnarConfKey)
+    // rows in different partitions come from different files
+    assert(rows.map(_.getString(1)).distinct.length > 1)
     // absent unless asked for: schema of a plain read is the table schema
     assert(!t.schema.fieldNames.contains("_file"))
     // composes with pruning + time travel machinery (asOf read)
