@@ -235,8 +235,9 @@ tier) are explicitly calibration surfaces; their production twins
 
 TRIAGE_R18 = """## Round-18 stage decompositions (idle box, isolated-to-isolated)
 
-Measured with the dedicated triage mains (`graft.PqStages`,
-`graft.IvfIncStages`) and DuckDB class counts; every number below is a
+Measured with two stage-wall triage mains for the PQ and MOR
+incremental-IVF pipelines (since deleted; the one span API of ROADMAP
+item 3 replaces them) and DuckDB class counts; every number below is a
 fresh-JVM isolated run, compared only to its isolated twin at the other
 scale point (the variance protocol).
 

@@ -31,22 +31,6 @@ object Clustering {
 
   val iterations = 2
 
-  // assignment is [[Similarity.assignNearest]] — ONE definition shared
-  // with annIvf so tie-breaking can never drift between the operator
-  // that produces centroids and the one that consumes them
-
-  /** Mean of the members per centroid, rebuilt as a float array in
-    * dimension order.
-    */
-  private def update(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("cent_id"), posexplode(col("embedding")).as(Seq("d", "v")))
-      .groupBy(col("cent_id"), col("d"))
-      .agg(avg(col("v")).as("m"))
-      .groupBy(col("cent_id"))
-      .agg(transform(array_sort(collect_list(struct(col("d"), col("m")))),
-        s => s.getField("m").cast("float")).as("cv"))
-
   /** k-means summary after [[iterations]] refinements: per final
     * cluster, its size and cohesion (mean member-to-centroid cosine).
     */
@@ -62,20 +46,10 @@ object Clustering {
     // FIXED k (vec_id < 800 caps seeds at 32 however big the corpus):
     // unlike IVF's nlist, k must not scale with n or the centroid
     // broadcast and the k×|v| assignment stop being the cheap side
-    var cents = Tables.table(spark, sfDir, "embeddings")
+    val seeds = Tables.table(spark, sfDir, "embeddings")
       .filter(col("vec_id") % 25 === 0 && col("vec_id") < 800)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
-    for (_ <- 1 to iterations) {
-      val next = update(Similarity.assignNearest(emb, cents, keepEmbedding = true))
-      // materialize the k centroids on the driver between rounds — the
-      // canonical Lloyd shape (k×dim floats is metadata-scale at ANY
-      // corpus size; MLlib's KMeans keeps centers driver-side too).
-      // Without this each round's broadcast carries the whole previous
-      // rounds' plan as its subtree and the planner re-optimizes a
-      // deeper DAG per iteration.
-      cents = spark.createDataFrame(
-        spark.sparkContext.parallelize(next.collect().toIndexedSeq, 1), next.schema)
-    }
+    val cents = Quantizer.train(Quantizer.Coarse, emb, seeds, iterations)
     // the summary needs only (cent_id, sim): slim the assignment so
     // the exchange ships ~20 bytes/vector, not the 256-byte embedding
     Similarity.assignNearest(emb, cents, keepEmbedding = false)
@@ -175,13 +149,7 @@ object Clustering {
   def labelOutliers(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val emb = Tables.table(spark, sfDir, "embeddings")
-    val cents = emb
-      .select(col("label"), posexplode(col("embedding")).as(Seq("d", "v")))
-      .groupBy(col("label"), col("d"))
-      .agg(avg(col("v")).as("m"))
-      .groupBy(col("label"))
-      .agg(transform(array_sort(collect_list(struct(col("d"), col("m")))),
-        s => s.getField("m").cast("float")).as("cv"))
+    val cents = Quantizer.means(emb, Seq("label"), "embedding")
     val scored = emb.resplit(spark)
       .join(broadcast(cents), Seq("label"))
       .select(col("label"), col("vec_id"),
@@ -197,15 +165,8 @@ object Clustering {
   }
 
   val labelOutliersSql: String =
-    s"""WITH cells AS (
-       |  SELECT label, generate_subscripts(embedding, 1) AS d,
-       |         unnest(embedding) AS v
-       |  FROM embeddings),
-       |cent AS (
-       |  SELECT label, list(CAST(m AS FLOAT4) ORDER BY d) AS cv FROM (
-       |    SELECT label, d, avg(v) AS m FROM cells GROUP BY 1, 2)
-       |  GROUP BY label),
-       |scored AS (
+    "WITH " + Quantizer.meansSql("cent", "embeddings", Seq("label"), "embedding") + ",\n" +
+    s"""scored AS (
        |  SELECT e.label, e.vec_id,
        |         round(${Similarity.cosineSql("e.embedding", "c.cv")}, 4) AS cos_centroid
        |  FROM embeddings e JOIN cent c USING (label))
@@ -298,39 +259,15 @@ object Clustering {
     * assign→average→float-cast iterations as CTEs, then the final
     * assignment summary.
     */
-  val kmeansSql: String = {
-    def assignCte(name: String, cents: String): String =
-      s"""$name AS (
-         |  SELECT vec_id, embedding, cent_id, sim FROM (
-         |    SELECT e.vec_id, e.embedding, c.cent_id,
-         |           ${Similarity.cosineSql("e.embedding", "c.cv")} AS sim,
-         |           row_number() OVER (PARTITION BY e.vec_id
-         |             ORDER BY ${Similarity.cosineSql("e.embedding", "c.cv")} DESC,
-         |                      c.cent_id) AS rn
-         |    FROM embeddings e, $cents c)
-         |  WHERE rn = 1)""".stripMargin
-    // generated from `iterations` so the Spark loop and the oracle can
-    // never silently desynchronize when the count changes
-    def iterCtes(i: Int): String =
-      s"""${assignCte(s"a$i", s"cent${i - 1}")},
-         |m$i AS (
-         |  SELECT cent_id, d, avg(v) AS m FROM (
-         |    SELECT cent_id, generate_subscripts(embedding, 1) AS d,
-         |           unnest(embedding) AS v
-         |    FROM a$i) t
-         |  GROUP BY cent_id, d),
-         |cent$i AS (
-         |  SELECT cent_id, list(CAST(m AS FLOAT4) ORDER BY d) AS cv
-         |  FROM m$i GROUP BY cent_id)""".stripMargin
-    s"""WITH cent0 AS (
-       |  SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
-       |  WHERE vec_id % 25 = 0 AND vec_id < 800),
-       |${(1 to iterations).map(iterCtes).mkString(",\n")},
-       |${assignCte(s"a${iterations + 1}", s"cent$iterations")}
-       |SELECT cent_id, count(*) AS n_members,
-       |       round(avg(sim), 4) AS cohesion
-       |FROM a${iterations + 1}
-       |GROUP BY cent_id
-       |ORDER BY cent_id""".stripMargin
-  }
+  val kmeansSql: String =
+    "WITH cent0 AS (\n" +
+    "  SELECT vec_id AS cent_id, embedding AS cv FROM embeddings\n" +
+    "  WHERE vec_id % 25 = 0 AND vec_id < 800),\n" +
+    Quantizer.trainSql(Quantizer.Coarse, "embeddings", "cent", iterations) +
+    Quantizer.assignSql(Quantizer.Coarse, "fin", "embeddings", s"cent$iterations") + "\n" +
+    "SELECT cent_id, count(*) AS n_members,\n" +
+    "       round(avg(sim), 4) AS cohesion\n" +
+    "FROM fin\n" +
+    "GROUP BY cent_id\n" +
+    "ORDER BY cent_id"
 }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * unchanged while recall halves (see the gate below, where skew moves
   * 1.2→1.4 but recall drops 1.0→0.59).
   *
-  * On trigger, [[retrain]] runs one deterministic Lloyd round over the
+  * On trigger, [[maintain]] runs one deterministic Lloyd round over the
   * index's own contents and rewrites every cell assignment THROUGH THE
   * COMMIT PATH (a fresh [[StreamIvf.sink]] table — centroid re-train
   * changes the cell namespace, so readers swap index versions
@@ -36,51 +36,7 @@ import org.apache.spark.sql.functions._
   */
 object IvfDrift {
 
-  /** One Lloyd round, µ-exact mirror of the DuckDB twin: assign each
-    * vector to its nearest centroid (cosine desc, cent_id tie-break),
-    * then per-cell per-dimension DOUBLE mean, cast to float. Cells
-    * that captured no vectors vanish (their centroid has nothing to
-    * re-fit to) — standard Lloyd-on-data semantics.
-    */
-  def lloydRound(vectors: DataFrame, cents: DataFrame): DataFrame =
-    cellMeans(Similarity.assignNearest(vectors, cents, keepEmbedding = true))
-
-  /** Per-cell mean vector of `assigned` (cent_id, embedding) rows, as
-    * (cent_id, cv float array) — shared by [[lloydRound]] and the
-    * [[displacement]] trigger so the two can never disagree on what a
-    * cell's mass center is.
-    */
-  private def cellMeans(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("cent_id"), posexplode(col("embedding")).as(Seq("d", "v")))
-      .groupBy(col("cent_id"), col("d"))
-      .agg(avg(col("v")).as("m"))
-      .groupBy(col("cent_id"))
-      .agg(expr(
-        "transform(array_sort(collect_list(struct(d, m))), s -> cast(s.m as float))")
-        .as("cv"))
-
-  /** Train a coarse quantizer: `rounds` Lloyd refinements from the
-    * seed centroids. Deterministic (no RNG — seeds are caller-chosen,
-    * ties break on cent_id), so the DuckDB twin reproduces it exactly.
-    */
-  def trainQuantizer(vectors: DataFrame, seeds: DataFrame, rounds: Int): DataFrame =
-    (0 until rounds).foldLeft(seeds)((c, _) => lloydRound(vectors, c))
-
-  /** Per-cell displacement of the index's current contents from its
-    * stored centroids: 1 − cos(cell mean, centroid). The DRIFT
-    * TRIGGER reads `max(disp)` off this (k rows).
-    */
-  def displacement(index: DataFrame, cents: DataFrame): DataFrame =
-    cellMeans(index.select(col("cent_id"), col("embedding")))
-      .withColumnRenamed("cv", "mv")
-      .join(cents, Seq("cent_id"))
-      .select(col("cent_id"), (lit(1.0) - Similarity.cosine(col("mv"), col("cv"))).as("disp"))
-
-  def maxDisplacement(index: DataFrame, cents: DataFrame): Double =
-    displacement(index, cents).agg(max(col("disp"))).head.getDouble(0)
-
-  /** The displacement threshold above which [[retrain]] should run.
+  /** The displacement threshold above which [[maintain]] retrains.
     * Converged quantizers on this corpus family sit ≤ 0.04; the gate's
     * drifted slice lands ≥ 0.3 — an order of magnitude of margin on
     * each side of 0.15.
@@ -104,72 +60,26 @@ object IvfDrift {
   def readCentroids(spark: SparkSession, indexPath: String): DataFrame =
     spark.read.parquet(centroidsPathFor(indexPath))
 
-  /** Re-train the quantizer (one Lloyd round over the index's own
-    * contents) and rewrite every cell assignment through the sink
-    * commit path into `newPath`, persisting the new codebook at
-    * `newPath`'s [[centroidsPathFor]] sibling. Returns the new
-    * centroid table.
-    */
   /** Fused trigger + retrain — the body behind
-    * `CALL graft.system.maintain_ivf`. The displacement trigger's
-    * per-cell means ARE the retrain's new centroids (both are
-    * [[cellMeans]] over the index's stored (cent_id, embedding) rows —
-    * the r20 code ran that corpus-scale aggregation TWICE per fired
-    * call, once in [[maxDisplacement]] and again in [[retrain]]).
-    * Compute the means ONCE, read the trigger off them (k rows joined
-    * to the codebook), and on fire reuse the persisted means as the
-    * retrained codebook (guide §1.2/§5). Bit-identical to the unfused
-    * path: same plan for the means, the persist just materializes it.
-    * Returns (triggered, maxDisplacement).
+    * `CALL graft.system.maintain_ivf`: per-cell displacement of the
+    * index's stored (cent_id, embedding) rows from its stored
+    * centroids; above `threshold` the cell means become the codebook
+    * at `newPath`'s [[centroidsPathFor]] sibling and every vector is
+    * reassigned to them through the sink commit path into `newPath`
+    * ([[Quantizer.maintain]]). Returns (triggered, max displacement).
     */
   def maintain(spark: SparkSession, indexPath: String, newPath: String,
       threshold: Double): (Boolean, Double) = {
     val stored = StreamIvf.readIndex(spark, indexPath)
-    val cents = readCentroids(spark, indexPath)
-    val means = cellMeans(stored.select(col("cent_id"), col("embedding")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val disp = means.withColumnRenamed("cv", "mv")
-        .join(cents, Seq("cent_id"))
-        .select((lit(1.0) - Similarity.cosine(col("mv"), col("cv"))).as("disp"))
-        .agg(max(col("disp"))).head.getDouble(0)
-      val fired = disp > threshold
-      if (fired) {
-        // codebook first, then the cell rewrite (the [[retrain]] swap
-        // ordering)
-        writeCentroids(means, newPath)
-        StreamIvf.sink(newPath).upsert(StreamIvf.indexRows(
-          stored.select(col("vec_id"), col("embedding")), means, seq = 0L),
-          batchId = 0L)
-      }
-      (fired, disp)
-    } finally means.unpersist()
-  }
-
-  def retrain(spark: SparkSession, indexPath: String, newPath: String): DataFrame = {
-    val stored = StreamIvf.readIndex(spark, indexPath)
-    // one Lloyd round over the index's own contents: the stored
-    // assignment IS the round's "assign" half (it was computed against
-    // the stale centroids at write time), so the update half is just
-    // the per-cell means — the same relation the trigger reads
-    val newCents = cellMeans(stored.select(col("cent_id"), col("embedding")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    newCents.count() // materialize once: feeds the reassignment AND the caller
-    // codebook first, then the cell rewrite: a reader that swaps to
-    // `newPath` only after the sink's commit marker appears always
-    // finds its centroids in place
-    writeCentroids(newCents, newPath)
-    val s = StreamIvf.sink(newPath)
-    s.upsert(StreamIvf.indexRows(
-      stored.select(col("vec_id"), col("embedding")), newCents, seq = 0L),
-      batchId = 0L)
-    // both consumers (codebook write + cell rewrite) are materialized —
-    // release the cache before returning, or a pipeline running
-    // scheduled maintain_ivf CALLs pins one block-manager entry per
-    // triggered retrain for the session's lifetime (the returned DF
-    // recomputes from lineage for callers that still read it)
-    newCents.unpersist()
-    newCents
+    Quantizer.maintain("maintain_ivf",
+      Quantizer.means(stored, Seq("cent_id"), "embedding"),
+      readCentroids(spark, indexPath), Seq("cent_id"), threshold,
+      "the index's cells and its centroids share no cent_id rows — empty " +
+        "index, or a codebook from a different index version")(
+      writeCentroids(_, newPath),
+      means => StreamIvf.sink(newPath).upsert(StreamIvf.indexRows(
+        stored.select(col("vec_id"), col("embedding")), means, seq = 0L),
+        batchId = 0L))
   }
 
   /** The oracle-gated drift scenario (`x_ann_ivf_drift`): a quantizer
@@ -199,23 +109,11 @@ object IvfDrift {
     * averages over enough probes).
     */
   def annIvfDrift(spark0: SparkSession, sfDir: String): DataFrame = {
-    // cloned session, small shuffle width: every relation here is
-    // metadata-to-small scale (centroid tables, per-cell means, k-row
-    // top-k frames) but the scenario chains ~15 actions — at the
-    // session's default 32 shuffle partitions the scheduler overhead
-    // dominates the arithmetic several times over
-    val spark = spark0.newSession()
-    spark0.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(spark.conf.set(k, v)) }
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val emb = graft.Tables.table(spark, sfDir, "embeddings")
-      .filter(col("vec_id") % 4 === 1)
-    val base = emb.filter(col("vec_id") % 3 =!= 0).select(col("vec_id"), col("embedding"))
+    val spark = Quantizer.narrowSession(spark0)
+    val (base, drifted) = Quantizer.driftSlices(spark, sfDir)
     val seeds = base.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
-    val cents = trainQuantizer(base, seeds, rounds = 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cents.count()
+    val cents = Quantizer.train(Quantizer.Coarse, base, seeds, rounds = 2)
     val root = java.nio.file.Files.createTempDirectory("graft_ivf_drift").toString
     val path0 = s"$root/v0"; val path1 = s"$root/v1"
     writeCentroids(cents, path0)
@@ -231,14 +129,6 @@ object IvfDrift {
     val (fired0, disp0) = callMaintain()
     require(!fired0 && disp0 < DriftThreshold,
       f"pre-drift displacement $disp0%.4f must sit below the trigger")
-    // the drifted slice: ten tight label clusters on basis axes the
-    // base corpus never occupied (0-based element index = label*6,
-    // mirroring the twin's 1-based label*6+1)
-    val drifted = emb.filter(col("vec_id") % 3 === 0)
-      .select(col("vec_id"),
-        expr("transform(embedding, (x, i) -> " +
-          "cast(cast(x as double) + CASE WHEN i = label * 6 THEN 2.0 ELSE 0.0 END as float))")
-          .as("embedding"))
     s0.upsert(StreamIvf.indexRows(drifted, cents, seq = 1L), batchId = 1L)
     // post-drift: the trigger FIRES and the procedure retrains into v1
     val (fired1, disp1) = callMaintain()
@@ -248,40 +138,18 @@ object IvfDrift {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val corpus = base.unionByName(drifted)
     val queries = corpus.filter(col("vec_id") % 15 === 0)
-    // exact ground truth over the updated corpus (same rounding +
-    // tie-break as every recall eval)
-    import org.apache.spark.sql.expressions.Window
-    val truth = {
-      val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val scored = corpus.join(broadcast(q))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("sim", round(Similarity.cosine(col("qv"), col("embedding")), 4))
-      val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
-      scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val truth = Quantizer.exactTop5(corpus, queries, Similarity.cosine)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nTruth = truth.count()
-    def recallOf(path: String, cs: DataFrame): Long =
-      truth.join(
-        StreamIvf.search(StreamIvf.readIndex(spark, path), queries, cs, k = 5)
-          .select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id"), "left_semi").count()
+    def recallOf(path: String, cs: DataFrame): Long = Quantizer.hits(truth,
+      StreamIvf.search(StreamIvf.readIndex(spark, path), queries, cs, k = 5))
     val staleHits = recallOf(path0, cents)
     val retrainedHits = recallOf(path1, newCents)
     require(retrainedHits >= staleHits,
       s"retrain must not lose recall ($retrainedHits vs $staleHits)")
-    truth.unpersist(); cents.unpersist(); newCents.unpersist()
-    import spark.implicits._
-    // HALF_UP, matching DuckDB's round(x, 4) and every other recall
-    // eval's Spark round() — math.rint's half-even would diverge on an
-    // exact .5 boundary
-    def recall4(hits: Long): Double =
-      BigDecimal(hits.toDouble / nTruth)
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    Seq(
-      ("retrained", retrainedHits, recall4(retrainedHits)),
-      ("stale", staleHits, recall4(staleHits)))
-      .toDF("regime", "n_hits", "recall")
+    truth.unpersist(); newCents.unpersist()
+    Quantizer.recallRows(spark, "regime", nTruth,
+      "retrained" -> retrainedHits, "stale" -> staleHits)
   }
 
   /** DuckDB twin of [[annIvfDrift]] — 2 training rounds + drift +
@@ -289,32 +157,8 @@ object IvfDrift {
     * pre-stripped concatenated parts (generated CTE text must not pass
     * through stripMargin).
     */
-  /** Vector-level argmax-cosine assignment CTE — shared with
-    * [[PqResidual]]'s twin (one definition of the assignment
-    * arithmetic both hash gates replay).
-    */
-  private[ext] def sqlAssignVec(out: String, src: String, cent: String): String =
-    s"$out AS (SELECT vec_id, embedding, cent_id FROM (\n" +
-    s"  SELECT a.vec_id, a.embedding, c.cent_id,\n" +
-    s"         row_number() OVER (PARTITION BY a.vec_id\n" +
-    s"           ORDER BY ${Similarity.cosineSql("a.embedding", "c.cv")} DESC, c.cent_id) AS rn\n" +
-    s"  FROM $src a, $cent c) WHERE rn = 1)"
-
-  /** Per-cell float-cast per-dimension mean CTE (the Lloyd update
-    * half) — shared with [[PqResidual]]'s twin.
-    */
-  private[ext] def sqlMeansVec(out: String, src: String): String =
-    s"$out AS (SELECT cent_id, list(CAST(m AS FLOAT4) ORDER BY d) AS cv FROM (\n" +
-    s"  SELECT cent_id, d, avg(v) AS m FROM (\n" +
-    s"    SELECT cent_id, generate_subscripts(embedding, 1) AS d,\n" +
-    s"           unnest(embedding) AS v FROM $src) x\n" +
-    s"  GROUP BY 1, 2) GROUP BY 1)"
-
   val annIvfDriftSql: String = {
     def cos(a: String, b: String) = Similarity.cosineSql(a, b)
-    def assign(out: String, src: String, cent: String): String =
-      sqlAssignVec(out, src, cent)
-    def means(out: String, src: String): String = sqlMeansVec(out, src)
     def searchCte(out: String, cells: String, cent: String): String =
       s"$out AS (SELECT query_id, neighbor_id FROM (\n" +
       s"  SELECT qq.query_id, e.vec_id AS neighbor_id,\n" +
@@ -327,48 +171,18 @@ object IvfDrift {
       s"          FROM q a, $cent c2) WHERE rn = 1) qq\n" +
       s"  JOIN $cells e USING (cent_id)\n" +
       s"  WHERE e.vec_id <> qq.query_id) WHERE rk <= 5)"
-    "WITH base AS (SELECT vec_id, embedding FROM embeddings\n" +
-    "              WHERE vec_id % 3 <> 0 AND vec_id % 4 = 1),\n" +
-    "drift AS (\n" +
-    "  SELECT e.vec_id, list(CAST(CAST(x.v AS DOUBLE) +\n" +
-    "           CASE WHEN x.d = e.label * 6 + 1 THEN 2.0 ELSE 0.0 END AS FLOAT4)\n" +
-    "         ORDER BY x.d) AS embedding\n" +
-    "  FROM embeddings e,\n" +
-    "  LATERAL (SELECT generate_subscripts(e.embedding, 1) AS d,\n" +
-    "                  unnest(e.embedding) AS v) x\n" +
-    "  WHERE e.vec_id % 3 = 0 AND e.vec_id % 4 = 1 GROUP BY e.vec_id),\n" +
-    "corpus AS (SELECT * FROM base UNION ALL SELECT * FROM drift),\n" +
+    Quantizer.driftCorpusSql +
     "cent0 AS (SELECT vec_id AS cent_id, embedding AS cv FROM base WHERE vec_id % 25 = 0),\n" +
-    assign("t0", "base", "cent0") + ",\n" +
-    means("cent1", "t0") + ",\n" +
-    assign("t1", "base", "cent1") + ",\n" +
-    means("cent2", "t1") + ",\n" +
+    Quantizer.trainSql(Quantizer.Coarse, "base", "cent", rounds = 2) +
     // the maintained (stale) index: corpus assigned to the trained cents
-    assign("cells0", "corpus", "cent2") + ",\n" +
+    Quantizer.assignSql(Quantizer.Coarse, "cells0", "corpus", "cent2") + ",\n" +
     // retrain = means of the stale cells; reassign the corpus to them
-    means("cent3", "cells0") + ",\n" +
-    assign("cells1", "corpus", "cent3") + ",\n" +
+    Quantizer.meansSql("cent3", "cells0", Seq("cent_id"), "embedding") + ",\n" +
+    Quantizer.assignSql(Quantizer.Coarse, "cells1", "corpus", "cent3") + ",\n" +
     "q AS (SELECT vec_id AS query_id, embedding AS qv FROM corpus WHERE vec_id % 15 = 0),\n" +
-    "truth AS (SELECT query_id, neighbor_id FROM (\n" +
-    "  SELECT q.query_id, e.vec_id AS neighbor_id,\n" +
-    s"         row_number() OVER (PARTITION BY q.query_id\n" +
-    s"           ORDER BY round(${cos("q.qv", "e.embedding")}, 4) DESC, e.vec_id) AS rk\n" +
-    "  FROM q, corpus e WHERE e.vec_id <> q.query_id) WHERE rk <= 5),\n" +
+    Quantizer.truthSql(cos) + ",\n" +
     searchCte("s0", "cells0", "cent2") + ",\n" +
     searchCte("s1", "cells1", "cent3") + "\n" +
-    "SELECT 'retrained' AS regime,\n" +
-    "       CAST((SELECT count(s1.neighbor_id) FROM truth\n" +
-    "             LEFT JOIN s1 USING (query_id, neighbor_id)) AS BIGINT) AS n_hits,\n" +
-    "       round((SELECT count(s1.neighbor_id) FROM truth\n" +
-    "              LEFT JOIN s1 USING (query_id, neighbor_id))::DOUBLE\n" +
-    "             / (SELECT count(*) FROM truth), 4) AS recall\n" +
-    "UNION ALL\n" +
-    "SELECT 'stale',\n" +
-    "       CAST((SELECT count(s0.neighbor_id) FROM truth\n" +
-    "             LEFT JOIN s0 USING (query_id, neighbor_id)) AS BIGINT),\n" +
-    "       round((SELECT count(s0.neighbor_id) FROM truth\n" +
-    "              LEFT JOIN s0 USING (query_id, neighbor_id))::DOUBLE\n" +
-    "             / (SELECT count(*) FROM truth), 4)\n" +
-    "ORDER BY regime"
+    Quantizer.sqlRecallRows("retrained", "s1", "stale", "s0", "regime")
   }
 }

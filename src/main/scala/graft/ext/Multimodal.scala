@@ -793,17 +793,9 @@ object Multimodal {
     * all-pairs result must.
     */
   def mediaDedupGroups(spark0: SparkSession, sfDir: String): DataFrame = {
-    // cloned session, small shuffle width: everything past the feature
-    // scan is class-scale (thousands of rows), and CC iterates several
-    // shuffle rounds — at the session default of 32 partitions the
-    // scheduler overhead dominates the tiny per-round work.
-    // newSession() drops the caller's RUNTIME conf (e.g. Verify's
-    // result-dump format) — mirror it first, then apply the override
-    // (static keys refuse the set; skip them)
-    val spark = spark0.newSession()
-    spark0.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(spark.conf.set(k, v)) }
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    // everything past the feature scan is class-scale (thousands of
+    // rows), and CC iterates several shuffle rounds
+    val spark = Quantizer.narrowSession(spark0)
     mediaDedupAssignments(spark, sfDir)
       .withColumn("cluster_size", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window.partitionBy(col("keeper_id"))))

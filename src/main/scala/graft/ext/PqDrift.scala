@@ -22,10 +22,10 @@ import org.apache.spark.sql.functions._
   * code means; after a distribution shift the means run away from the
   * frozen entries.
   *
-  * On trigger, [[retrain]] re-fits each subspace codebook from the
+  * On trigger, [[maintain]] re-fits each subspace codebook from the
   * stored assignment (the stored codes ARE the round's assign half,
   * computed against the stale codebook at write time — the same
-  * update rule as [[IvfDrift.retrain]]), RE-ENCODES every vector
+  * update rule as [[IvfDrift.maintain]]), RE-ENCODES every vector
   * against the new codebook, and writes the code table THROUGH THE
   * COMMIT PATH into a fresh index path with its codebook sibling —
   * version-swap semantics, never in-place: a codebook retrain changes
@@ -66,7 +66,7 @@ object PqDrift {
     * code table has a completed sink commit (`_commit.complete`
     * marker) and the codebook's parquet write finished (`_SUCCESS`).
     * This is the read side of the retrain's atomic swap (r19 judge
-    * task #1): [[retrain]] writes the new codebook FIRST and the code
+    * task #1): [[maintain]] writes the new codebook FIRST and the code
     * table through the commit path LAST, so a reader resolving the
     * current version either sees the complete new pair or stays on
     * the previous one — never fresh codes with a stale codebook or
@@ -143,60 +143,11 @@ object PqDrift {
   def readCodes(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).withColumn("sub_id", col("sub_id").cast("int"))
 
-  /** Per-(subspace, code) mean subvector of `assigned` (sub_id, code,
-    * sv) rows — [[Similarity.subspaceMeans]], the SAME fold the Lloyd
-    * codebook trainer runs (one mass-center definition, so the
-    * trigger, the retrain, and the trainer can never disagree).
-    */
-  private def codeMeans(assigned: DataFrame): DataFrame =
-    Similarity.subspaceMeans(assigned.withColumnRenamed("code", "cent_id"))
-      .withColumnRenamed("cent_id", "code")
-
-  /** Per-(subspace, code) displacement of the corpus's current
-    * subvectors from the stored codebook entry they are coded as:
-    * 1 − cos(code mean, codebook entry). The DRIFT TRIGGER reads
-    * `max(disp)` off this (4×k rows).
-    */
-  def residualDisplacement(vectors: DataFrame, codes: DataFrame,
-      cents: DataFrame): DataFrame =
-    codeMeans(
-        Similarity.pqSubvectors(vectors, "vec_id")
-          .join(codes.select(col("vec_id"), col("sub_id"), col("code")),
-            Seq("vec_id", "sub_id")))
-      .withColumnRenamed("cv", "mv")
-      .join(cents.withColumnRenamed("cent_id", "code"), Seq("sub_id", "code"))
-      .select(col("sub_id"), col("code"),
-        (lit(1.0) - Similarity.cosine(col("mv"), col("cv"))).as("disp"))
-
-  def maxResidualDisplacement(vectors: DataFrame, codes: DataFrame,
-      cents: DataFrame): Double = {
-    val r = residualDisplacement(vectors, codes, cents)
-      .agg(max(col("disp"))).head
-    // fail with the cause, not an opaque NPE from getDouble on the
-    // null max of an empty relation (r19 review): an empty
-    // (vectors ⋈ codes ⋈ codebook) means the inputs don't describe
-    // the same index
-    require(!r.isNullAt(0),
-      "maintain_pq: vectors and the index's codes/codebook share no " +
-        "(vec_id, sub_id, code) rows — wrong vectors path, empty index, " +
-        "or a codebook from a different index version")
-    val disp = r.getDouble(0)
-    // vec_cosine divides by norms, so a zero-norm code mean or codebook
-    // entry yields NaN — and `NaN > threshold` is false, which would
-    // silently report a DEGENERATE index as not-triggered (r19 advice).
-    // Fail with the cause instead, like the empty-join guard above.
-    require(!disp.isNaN,
-      "maintain_pq: residual displacement is NaN — a zero-norm code mean " +
-        "or codebook entry (degenerate index); rebuild the codebook rather " +
-        "than maintaining it")
-    disp
-  }
-
   /** Lloyd refinement rounds for the gate's base-corpus codebook. */
   val trainRounds = 3
 
-  /** The residual-displacement threshold above which [[retrain]] should
-    * run. Margins measured by [[annPqDrift]]'s `[pq-drift]` stderr line
+  /** The residual-displacement threshold above which [[maintain]]
+    * retrains. Margins measured by [[annPqDrift]]'s `[pq-drift]` stderr line
     * and re-certified structurally by its require asserts on every run
     * (sf0.01 corpus, [[trainRounds]] Lloyd rounds): converged codebooks
     * sit well below, the gate's drifted slice lands ~0.4 — comfortable
@@ -204,85 +155,30 @@ object PqDrift {
     */
   val PqDriftThreshold = 0.08
 
-  /** Re-fit the per-subspace codebooks from the index's own stored
-    * assignment (codes ⋈ current subvectors → per-code means), then
-    * RE-ENCODE every vector against the new codebook and write the
-    * code table through the sink commit path into `newPath`, with the
-    * new codebook at its [[codebookPathFor]] sibling. Codebook first,
-    * then the code rewrite: a reader that swaps to `newPath` only
-    * after the sink's commit marker appears always finds its codebook
-    * in place. Returns the new codebook.
-    */
   /** Fused trigger + retrain — the body behind
-    * `CALL graft.system.maintain_pq` and [[StreamPq.processBatch]].
-    * The displacement trigger's per-(subspace, code) means ARE the
-    * retrain's new codebook (both are [[codeMeans]] over the same
-    * (subvectors ⋈ stored codes) relation — the r20 code ran that
-    * corpus-scale join+aggregation TWICE per fired maintenance call,
-    * once in [[maxResidualDisplacement]] and again in [[retrain]]).
-    * Compute the means ONCE, read the trigger's max displacement off
-    * them (k×4 rows joined to the codebook — metadata scale), and on
-    * fire reuse the persisted means as the retrained codebook (guide
-    * §1.2/§5: don't recompute what you already hold). Values are
-    * bit-identical to the unfused path: same plan for the means, the
-    * persist just materializes it. Returns (triggered, maxDisplacement).
+    * `CALL graft.system.maintain_pq` and [[StreamPq.processBatch]]:
+    * per-(subspace, code) displacement of the current subvectors
+    * (vectors ⋈ stored codes) from the stored codebook; above
+    * `threshold` the code means become the codebook at `newPath`'s
+    * [[codebookPathFor]] sibling and every vector is RE-ENCODED against
+    * it through the sink commit path into `newPath`
+    * ([[Quantizer.maintain]]). Returns (triggered, max displacement).
     */
   def maintain(spark: SparkSession, indexPath: String, vectorsPath: String,
       newPath: String, threshold: Double): (Boolean, Double) = {
     val vectors = spark.read.parquet(vectorsPath)
-    val stored = readCodes(spark, indexPath)
-    val cents = readCodebook(spark, indexPath)
-    val means = codeMeans(
-        Similarity.pqSubvectors(vectors, "vec_id")
-          .join(stored.select(col("vec_id"), col("sub_id"), col("code")),
-            Seq("vec_id", "sub_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val r = means.withColumnRenamed("cv", "mv")
-        .join(cents.withColumnRenamed("cent_id", "code"), Seq("sub_id", "code"))
-        .select((lit(1.0) - Similarity.cosine(col("mv"), col("cv"))).as("disp"))
-        .agg(max(col("disp"))).head
-      // same guards as [[maxResidualDisplacement]] — empty join and
-      // degenerate (NaN) indexes fail with the cause
-      require(!r.isNullAt(0),
-        "maintain_pq: vectors and the index's codes/codebook share no " +
-          "(vec_id, sub_id, code) rows — wrong vectors path, empty index, " +
-          "or a codebook from a different index version")
-      val disp = r.getDouble(0)
-      require(!disp.isNaN,
-        "maintain_pq: residual displacement is NaN — a zero-norm code mean " +
-          "or codebook entry (degenerate index); rebuild the codebook rather " +
-          "than maintaining it")
-      val fired = disp > threshold
-      if (fired) {
-        val newCents = means.withColumnRenamed("code", "cent_id")
-        // codebook first, then the code rewrite (the [[retrain]] swap
-        // ordering): a reader that follows the commit marker always
-        // finds its codebook in place
-        writeCodebook(newCents, newPath)
-        sink(newPath).upsert(codeRows(vectors, newCents, seq = 0L), batchId = 0L)
-      }
-      (fired, disp)
-    } finally means.unpersist()
-  }
-
-  def retrain(spark: SparkSession, indexPath: String, vectorsPath: String,
-      newPath: String): DataFrame = {
-    val vectors = spark.read.parquet(vectorsPath)
-    val stored = readCodes(spark, indexPath)
-    val newCents = codeMeans(
-        Similarity.pqSubvectors(vectors, "vec_id")
-          .join(stored.select(col("vec_id"), col("sub_id"), col("code")),
-            Seq("vec_id", "sub_id")))
-      .withColumnRenamed("code", "cent_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    newCents.count() // materialize once: feeds the re-encode AND the caller
-    writeCodebook(newCents, newPath)
-    sink(newPath).upsert(codeRows(vectors, newCents, seq = 0L), batchId = 0L)
-    // both consumers are materialized — release before returning (the
-    // returned DF recomputes from lineage for callers that read it)
-    newCents.unpersist()
-    newCents
+    val assigned = Similarity.pqSubvectors(vectors, "vec_id")
+      .join(readCodes(spark, indexPath)
+        .select(col("vec_id"), col("sub_id"), col("code").as("cent_id")),
+        Seq("vec_id", "sub_id"))
+    Quantizer.maintain("maintain_pq",
+      Quantizer.means(assigned, Quantizer.Product.keys, "sv"),
+      readCodebook(spark, indexPath), Quantizer.Product.keys, threshold,
+      "vectors and the index's codes/codebook share no (vec_id, sub_id, code) " +
+        "rows — wrong vectors path, empty index, or a codebook from a " +
+        "different index version")(
+      writeCodebook(_, newPath),
+      cents => sink(newPath).upsert(codeRows(vectors, cents, seq = 0L), batchId = 0L))
   }
 
   /** Pure-ADC top-5 per query over a (codebook, codes) pair — the
@@ -336,24 +232,9 @@ object PqDrift {
     * exactly once and the retrain recovering recall.
     */
   def annPqDrift(spark0: SparkSession, sfDir: String): DataFrame = {
-    // cloned session, small shuffle width: every relation is metadata-
-    // to-small scale but the scenario chains many actions (the
-    // IvfDrift rationale)
-    val spark = spark0.newSession()
-    spark0.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(spark.conf.set(k, v)) }
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val emb = graft.Tables.table(spark, sfDir, "embeddings")
-      .filter(col("vec_id") % 4 === 1)
-    val base = emb.filter(col("vec_id") % 3 =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val seeds = Similarity.pqSubvectors(
-        base.filter(col("vec_id") % 25 === 0), "vec_id")
-      .select(col("sub_id"), col("vec_id").as("cent_id"), col("sv").as("cv"))
-    val cents = Similarity.pqCodebook(spark,
-        Similarity.pqSubvectors(base, "vec_id"), seeds, rounds = trainRounds)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cents.count()
+    val spark = Quantizer.narrowSession(spark0)
+    val (base, drifted) = Quantizer.driftSlices(spark, sfDir)
+    val cents = trainedCodebook(base)
     val root = java.nio.file.Files.createTempDirectory("graft_pq_drift").toString
     val path0 = s"$root/v0"; val path1 = s"$root/v1"
     val vecPath = s"$root/vectors"
@@ -375,14 +256,7 @@ object PqDrift {
     val (fired0, disp0) = callMaintain()
     require(!fired0 && disp0 < PqDriftThreshold,
       f"pre-drift residual displacement $disp0%.4f must sit below the trigger")
-    // the drifted slice, ENCODED WITH THE STALE CODEBOOK (same label-
-    // axis shift as the IVF gate: 0-based element index = label*6,
-    // mirroring the twin's 1-based label*6+1)
-    val drifted = emb.filter(col("vec_id") % 3 === 0)
-      .select(col("vec_id"),
-        expr("transform(embedding, (x, i) -> " +
-          "cast(cast(x as double) + CASE WHEN i = label * 6 THEN 2.0 ELSE 0.0 END as float))")
-          .as("embedding"))
+    // the drifted slice, ENCODED WITH THE STALE CODEBOOK
     s0.upsert(codeRows(drifted, cents, seq = 1L), batchId = 1L)
     val corpus = base.unionByName(drifted)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -402,20 +276,11 @@ object PqDrift {
     // exact inner-product ground truth over the updated corpus (ADC
     // approximates ⟨q, x̂⟩, so the truth metric is ⟨q, x⟩ — recall then
     // isolates QUANTIZATION error, not metric mismatch)
-    import org.apache.spark.sql.expressions.Window
-    val truth = {
-      val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val scored = corpus.join(broadcast(q))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("sim", round(Similarity.dot(col("qv"), col("embedding")), 4))
-      val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
-      scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val truth = Quantizer.exactTop5(corpus, queries, Similarity.dot)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nTruth = truth.count()
     def recallOf(cs: DataFrame, codes: DataFrame): Long =
-      truth.join(adcTop5(querySubs, cs, codes),
-        Seq("query_id", "neighbor_id"), "left_semi").count()
+      Quantizer.hits(truth, adcTop5(querySubs, cs, codes))
     val staleHits = recallOf(cents, readCodes(spark, path0))
     // the retrained search goes through the SERVING RESOLVER, not a
     // hardcoded path (r19 judge task #1's gate half): the retrain's
@@ -428,17 +293,20 @@ object PqDrift {
     val retrainedHits = recallOf(curCents, curCodes)
     require(retrainedHits >= staleHits,
       s"retrain must not lose recall ($retrainedHits vs $staleHits)")
-    truth.unpersist(); querySubs.unpersist(); corpus.unpersist(); cents.unpersist()
-    import spark.implicits._
-    // HALF_UP, matching DuckDB's round(x, 4) (the IvfDrift rationale)
-    def recall4(hits: Long): Double =
-      BigDecimal(hits.toDouble / nTruth)
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    Seq(
-      ("retrained", retrainedHits, recall4(retrainedHits)),
-      ("stale", staleHits, recall4(staleHits)))
-      .toDF("regime", "n_hits", "recall")
+    truth.unpersist(); querySubs.unpersist(); corpus.unpersist()
+    Quantizer.recallRows(spark, "regime", nTruth,
+      "retrained" -> retrainedHits, "stale" -> staleHits)
   }
+
+  /** The drift gates' base-corpus codebook: [[trainRounds]] Lloyd
+    * rounds over the base subvectors from every 25th base vector's
+    * own subvectors (shared with [[StreamPq.annPqIncremental]]).
+    */
+  private[ext] def trainedCodebook(base: DataFrame): DataFrame =
+    Quantizer.train(Quantizer.Product, Similarity.pqSubvectors(base, "vec_id"),
+      Similarity.pqSubvectors(base.filter(col("vec_id") % 25 === 0), "vec_id")
+        .select(col("sub_id"), col("vec_id").as("cent_id"), col("sv").as("cv")),
+      trainRounds)
 
   // ——— shared DuckDB CTE builders (one definition feeding this twin
   // and [[PqResidual]]'s — a re-typed copy could silently diverge on
@@ -457,31 +325,6 @@ object PqDrift {
   private[ext] def sqlSub(out: String, src: String, id: String): String =
     s"$out AS (" + sqlSubBody(src, id) + ")"
 
-  /** argmin-L2 code assignment of a subvector relation to a codebook. */
-  private[ext] def sqlAssign(out: String, subs: String, cent: String): String =
-    s"$out AS (SELECT vec_id, sub_id, cent_id, sv FROM (\n" +
-    s"  SELECT s.vec_id, s.sub_id, c.cent_id, s.sv,\n" +
-    s"         row_number() OVER (PARTITION BY s.vec_id, s.sub_id\n" +
-    s"           ORDER BY ${Similarity.pqL2Sql("s.sv", "c.cv")} DESC, c.cent_id) AS rn\n" +
-    s"  FROM $subs s JOIN $cent c USING (sub_id)) WHERE rn = 1)"
-
-  /** Per-(sub, cent) float-cast per-dimension means of an assigned
-    * relation carrying (sub_id, cent_id, sv).
-    */
-  private[ext] def sqlMeans(out: String, src: String): String =
-    s"$out AS (\n" +
-    s"  SELECT sub_id, cent_id, list(CAST(m AS FLOAT4) ORDER BY d) AS cv FROM (\n" +
-    s"    SELECT sub_id, cent_id, d, avg(v) AS m FROM (\n" +
-    s"      SELECT sub_id, cent_id, generate_subscripts(sv, 1) AS d,\n" +
-    s"             unnest(sv) AS v FROM $src zz) x\n" +
-    s"    GROUP BY sub_id, cent_id, d) y\n" +
-    s"  GROUP BY sub_id, cent_id)"
-
-  /** DuckDB twin of [[annPqDrift]] — [[trainRounds]] training rounds + stale-coded
-    * drift + assign-half-fixed retrain + re-encode + both pure-ADC
-    * searches + recall arithmetic, built from pre-stripped concatenated
-    * parts (generated CTE text must not pass through stripMargin).
-    */
   /** Flat pure-ADC top-5 search CTE over one (codes, codebook) pair —
     * the [[adcTop5]] mirror, shared with [[StreamPq]]'s twin.
     */
@@ -509,80 +352,59 @@ object PqDrift {
     s"  FROM ${out}_adc) WHERE rk <= 5)"
   }
 
-  /** The recall tail shared with [[StreamPq]]'s twin: two labeled
-    * hit-count/recall rows off `truth` against two search CTEs.
+  /** DuckDB twin of [[annPqDrift]] — [[trainRounds]] training rounds + stale-coded
+    * drift + assign-half-fixed retrain + re-encode + both pure-ADC
+    * searches + recall arithmetic, built from pre-stripped concatenated
+    * parts (generated CTE text must not pass through stripMargin).
     */
-  private[ext] def sqlRecallRows(
-      tierA: String, searchA: String, tierB: String, searchB: String,
-      labelCol: String): String = {
-    def row(tier: String, s: String, withAlias: Boolean): String = {
-      val aliasN = if (withAlias) " AS n_hits" else ""
-      val aliasR = if (withAlias) " AS recall" else ""
-      val aliasT = if (withAlias) s" AS $labelCol" else ""
-      s"SELECT '$tier'$aliasT,\n" +
-      s"       CAST((SELECT count($s.neighbor_id) FROM truth\n" +
-      s"             LEFT JOIN $s USING (query_id, neighbor_id)) AS BIGINT)$aliasN,\n" +
-      s"       round((SELECT count($s.neighbor_id) FROM truth\n" +
-      s"              LEFT JOIN $s USING (query_id, neighbor_id))::DOUBLE\n" +
-      s"             / (SELECT count(*) FROM truth), 4)$aliasR\n"
-    }
-    row(tierA, searchA, withAlias = true) + "UNION ALL\n" +
-      row(tierB, searchB, withAlias = false) + s"ORDER BY $labelCol"
-  }
-
   val annPqDriftSql: String = {
-    def subBody(src: String, id: String): String = sqlSubBody(src, id)
-    def sub(out: String, src: String, id: String): String = sqlSub(out, src, id)
-    def assign(out: String, subs: String, cent: String): String =
-      sqlAssign(out, subs, cent)
-    def means(out: String, src: String): String = sqlMeans(out, src)
-    def searchCte(out: String, codes: String, cent: String): String =
-      sqlAdcSearch(out, codes, cent)
-    "WITH base AS (SELECT vec_id, embedding FROM embeddings\n" +
-    "              WHERE vec_id % 3 <> 0 AND vec_id % 4 = 1),\n" +
-    "drift AS (\n" +
-    "  SELECT e.vec_id, list(CAST(CAST(x.v AS DOUBLE) +\n" +
-    "           CASE WHEN x.d = e.label * 6 + 1 THEN 2.0 ELSE 0.0 END AS FLOAT4)\n" +
-    "         ORDER BY x.d) AS embedding\n" +
-    "  FROM embeddings e,\n" +
-    "  LATERAL (SELECT generate_subscripts(e.embedding, 1) AS d,\n" +
-    "                  unnest(e.embedding) AS v) x\n" +
-    "  WHERE e.vec_id % 3 = 0 AND e.vec_id % 4 = 1 GROUP BY e.vec_id),\n" +
-    "corpus AS (SELECT * FROM base UNION ALL SELECT * FROM drift),\n" +
-    "seedv AS (SELECT * FROM base WHERE vec_id % 25 = 0),\n" +
-    sub("bsub", "base", "vec_id") + ",\n" +
-    sub("dsub", "drift", "vec_id") + ",\n" +
-    sub("csub", "corpus", "vec_id") + ",\n" +
-    // seeds: each seed vector's own subvectors, cent_id = vec_id
-    "cent0 AS (SELECT sub_id, s_id AS cent_id, sv AS cv FROM (" +
-      subBody("seedv", "s_id") + ") sx),\n" +
-    // trainRounds Lloyd rounds on the BASE subvectors
-    (0 until trainRounds).map(i =>
-      assign(s"a$i", "bsub", s"cent$i") + ",\n" +
-        means(s"cent${i + 1}", s"a$i") + ",\n").mkString +
+    Quantizer.driftCorpusSql +
+    sqlTrainedCodebook +
+    sqlSub("dsub", "drift", "vec_id") + ",\n" +
+    sqlSub("csub", "corpus", "vec_id") + ",\n" +
     // the stale index: base codes + drifted vectors coded STALE
-    assign("kb", "bsub", s"cent$trainRounds") + ",\n" +
-    assign("kd", "dsub", s"cent$trainRounds") + ",\n" +
+    Quantizer.assignSql(Quantizer.Product, "kb", "bsub", s"cent$trainRounds") + ",\n" +
+    Quantizer.assignSql(Quantizer.Product, "kd", "dsub", s"cent$trainRounds") + ",\n" +
     "codes0 AS (SELECT vec_id, sub_id, cent_id AS code, sv FROM kb\n" +
     "           UNION ALL SELECT vec_id, sub_id, cent_id, sv FROM kd),\n" +
     // retrain: assign half = the stored codes over the CURRENT corpus
     // subvectors (codes0 already carries each row's sv), update half =
     // per-(sub, code) means; then re-encode the whole corpus
-    means("centR", "(SELECT vec_id, sub_id, code AS cent_id, sv FROM codes0)") + ",\n" +
-    assign("k1", "csub", "centR") + ",\n" +
+    sqlCodeMeans("centR", "codes0") + ",\n" +
+    Quantizer.assignSql(Quantizer.Product, "k1", "csub", "centR") + ",\n" +
     "codes1 AS (SELECT vec_id, sub_id, cent_id AS code FROM k1),\n" +
     "codesS AS (SELECT vec_id, sub_id, code FROM codes0),\n" +
     "q AS (SELECT vec_id AS query_id, embedding AS qv FROM corpus WHERE vec_id % 15 = 0),\n" +
-    sub("qsub", "(SELECT query_id AS vec_id, qv AS embedding FROM q) qq",
+    sqlSub("qsub", "(SELECT query_id AS vec_id, qv AS embedding FROM q) qq",
       "query_id") + ",\n" +
-    "truth AS (SELECT query_id, neighbor_id FROM (\n" +
-    "  SELECT q.query_id, e.vec_id AS neighbor_id,\n" +
-    "         row_number() OVER (PARTITION BY q.query_id\n" +
-    "           ORDER BY round(list_inner_product(CAST(q.qv AS DOUBLE[]),\n" +
-    "                    CAST(e.embedding AS DOUBLE[])), 4) DESC, e.vec_id) AS rk\n" +
-    "  FROM q, corpus e WHERE e.vec_id <> q.query_id) WHERE rk <= 5),\n" +
-    searchCte("s0", "codesS", s"cent$trainRounds") + ",\n" +
-    searchCte("s1", "codes1", "centR") + "\n" +
-    sqlRecallRows("retrained", "s1", "stale", "s0", "regime")
+    Quantizer.truthSql(sqlDot) + ",\n" +
+    sqlAdcSearch("s0", "codesS", s"cent$trainRounds") + ",\n" +
+    sqlAdcSearch("s1", "codes1", "centR") + "\n" +
+    Quantizer.sqlRecallRows("retrained", "s1", "stale", "s0", "regime")
   }
+
+  /** The [[trainedCodebook]] twin: CTEs `bsub` (base subvectors) and
+    * `cent0` … `cent$trainRounds` over a `base` CTE. Trailing comma
+    * included.
+    */
+  private[ext] def sqlTrainedCodebook: String =
+    "seedv AS (SELECT * FROM base WHERE vec_id % 25 = 0),\n" +
+    sqlSub("bsub", "base", "vec_id") + ",\n" +
+    // seeds: each seed vector's own subvectors, cent_id = vec_id
+    "cent0 AS (SELECT sub_id, s_id AS cent_id, sv AS cv FROM (" +
+      sqlSubBody("seedv", "s_id") + ") sx),\n" +
+    Quantizer.trainSql(Quantizer.Product, "bsub", "cent", trainRounds)
+
+  /** Per-(sub, code) means of a stored code relation carrying
+    * (vec_id, sub_id, code, sv) — the retrain's new codebook.
+    */
+  private[ext] def sqlCodeMeans(out: String, codes: String): String =
+    Quantizer.meansSql(out, s"(SELECT vec_id, sub_id, code AS cent_id, sv FROM $codes)",
+      Quantizer.Product.keys, "sv")
+
+  /** Double-precision inner product, the exact-truth score of the PQ
+    * gates.
+    */
+  private[ext] def sqlDot(a: String, b: String): String =
+    s"list_inner_product(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
 }

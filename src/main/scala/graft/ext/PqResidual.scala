@@ -110,12 +110,7 @@ object PqResidual {
     * ≥ raw.
     */
   def annIvfPqResidual(spark0: SparkSession, sfDir: String): DataFrame = {
-    // cloned session, small shuffle width (the IvfDrift rationale:
-    // many chained actions over metadata-to-small relations)
-    val spark = spark0.newSession()
-    spark0.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(spark.conf.set(k, v)) }
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    val spark = Quantizer.narrowSession(spark0)
     val emb = graft.Tables.table(spark, sfDir, "embeddings")
     // CLUSTERED gate corpus — the drift gates' label-axis construction
     // (each vector pulled 2.0 along a per-label basis axis, ten tight
@@ -128,11 +123,7 @@ object PqResidual {
     // exists for corpora WITH coarse structure — the clustered fixture
     // puts the gate in that regime, exactly as the drift gates
     // manufacture their distribution shift.
-    val corpus = emb.filter(col("vec_id") % 4 === 1)
-      .select(col("vec_id"),
-        expr("transform(embedding, (x, i) -> " +
-          "cast(cast(x as double) + CASE WHEN i = label * 6 THEN 2.0 ELSE 0.0 END as float))")
-          .as("embedding"))
+    val corpus = Quantizer.labelShift(emb.filter(col("vec_id") % 4 === 1))
     // TRAINED coarse quantizer (2 Lloyd rounds, the IvfDrift gate's
     // depth): residual encoding pays off exactly when the coarse
     // centroids sit at genuine mass centers — cells then absorb the
@@ -140,9 +131,7 @@ object PqResidual {
     // raw-vector centroids leave residuals as wide as the vectors.
     val seeds0 = corpus.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
-    val cents = IvfDrift.trainQuantizer(corpus, seeds0, rounds = 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cents.count()
+    val cents = Quantizer.train(Quantizer.Coarse, corpus, seeds0, rounds = 2)
     // cell assignment once; the residual transform rides the same
     // broadcast of the centroid metadata
     val resid = Similarity.assignNearest(corpus, cents, keepEmbedding = true)
@@ -154,8 +143,8 @@ object PqResidual {
     val rawSubs = Similarity.pqSubvectors(corpus, "vec_id")
     val resSubs = Similarity.pqSubvectors(
       resid.select(col("vec_id"), col("embedding")), "vec_id")
-    val cbRaw = Similarity.pqCodebook(spark, rawSubs, seedsOf(corpus), rounds = 1)
-    val cbRes = Similarity.pqCodebook(spark, resSubs,
+    val cbRaw = Quantizer.train(Quantizer.Product, rawSubs, seedsOf(corpus), rounds = 1)
+    val cbRes = Quantizer.train(Quantizer.Product, resSubs,
       seedsOf(resid.select(col("vec_id"), col("embedding"))), rounds = 1)
     def codesOf(subs: DataFrame, cb: DataFrame): DataFrame =
       Similarity.pqNearest(subs, cb, keepSv = false)
@@ -176,19 +165,10 @@ object PqResidual {
       .select(col("query_id"), Similarity.dot(col("qv"), col("cv")).as("base"))
     // exact inner-product truth — ADC approximates ⟨q, x⟩, so recall
     // against ⟨q, x⟩ isolates quantization error (the PqDrift metric)
-    import org.apache.spark.sql.expressions.Window
-    val truth = {
-      val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val scored = corpus.join(broadcast(q))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("sim", round(Similarity.dot(col("qv"), col("embedding")), 4))
-      val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
-      scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val truth = Quantizer.exactTop5(corpus, queries, Similarity.dot)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nTruth = truth.count()
-    def hitsOf(top5: DataFrame): Long =
-      truth.join(top5, Seq("query_id", "neighbor_id"), "left_semi").count()
+    def hitsOf(top5: DataFrame): Long = Quantizer.hits(truth, top5)
     val rawHits = hitsOf(
       adcCellTop5(querySubs, cbRaw, codesOf(rawSubs, cbRaw), qcells, None))
     val resHits = hitsOf(
@@ -196,16 +176,9 @@ object PqResidual {
     require(resHits >= rawHits,
       s"residual encoding must not lose recall vs raw at equal bytes " +
         s"($resHits vs $rawHits of $nTruth)")
-    truth.unpersist(); querySubs.unpersist(); resid.unpersist(); cents.unpersist()
-    import spark.implicits._
-    // HALF_UP, matching DuckDB's round(x, 4) (the IvfDrift rationale)
-    def recall4(hits: Long): Double =
-      BigDecimal(hits.toDouble / nTruth)
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    Seq(
-      ("raw", rawHits, recall4(rawHits)),
-      ("residual", resHits, recall4(resHits)))
-      .toDF("encoding", "n_hits", "recall")
+    truth.unpersist(); querySubs.unpersist(); resid.unpersist()
+    Quantizer.recallRows(spark, "encoding", nTruth,
+      "raw" -> rawHits, "residual" -> resHits)
   }
 
   /** DuckDB twin of [[annIvfPqResidual]] — residual arithmetic, both
@@ -244,64 +217,41 @@ object PqResidual {
       s"           ORDER BY ($baseTerm$tSum) DESC, x.vec_id) AS rk\n" +
       s"  FROM ${out}_adc x$baseJoin) WHERE rk <= 5)"
     }
-    def recallSelect(tier: String, s: String): String =
-      s"SELECT '$tier' AS encoding,\n" +
-      s"       CAST((SELECT count($s.neighbor_id) FROM truth\n" +
-      s"             LEFT JOIN $s USING (query_id, neighbor_id)) AS BIGINT) AS n_hits,\n" +
-      s"       round((SELECT count($s.neighbor_id) FROM truth\n" +
-      s"              LEFT JOIN $s USING (query_id, neighbor_id))::DOUBLE\n" +
-      s"             / (SELECT count(*) FROM truth), 4) AS recall\n"
     // the clustered corpus: every slice vector pulled 2.0 along its
     // label axis (0-based Spark index = label*6 ≡ 1-based label*6+1)
-    "WITH corpus AS (\n" +
-    "  SELECT e.vec_id, list(CAST(CAST(x.v AS DOUBLE) +\n" +
-    "           CASE WHEN x.d = e.label * 6 + 1 THEN 2.0 ELSE 0.0 END AS FLOAT4)\n" +
-    "         ORDER BY x.d) AS embedding\n" +
-    "  FROM embeddings e,\n" +
-    "  LATERAL (SELECT generate_subscripts(e.embedding, 1) AS d,\n" +
-    "                  unnest(e.embedding) AS v) x\n" +
-    "  WHERE e.vec_id % 4 = 1 GROUP BY e.vec_id),\n" +
+    "WITH corpus AS (\n" + Quantizer.labelShiftSql("e.vec_id % 4 = 1") + "),\n" +
     // 2-round trained coarse quantizer from the modulo seeds
     "cent0 AS (SELECT vec_id AS cent_id, embedding AS cv FROM corpus\n" +
     "          WHERE vec_id % 25 = 0),\n" +
-    IvfDrift.sqlAssignVec("t0", "corpus", "cent0") + ",\n" +
-    IvfDrift.sqlMeansVec("cent1", "t0") + ",\n" +
-    IvfDrift.sqlAssignVec("t1", "corpus", "cent1") + ",\n" +
-    IvfDrift.sqlMeansVec("cent", "t1") + ",\n" +
-    "asg AS (SELECT vec_id, cent_id FROM (\n" +
-    "  SELECT e.vec_id, c.cent_id,\n" +
-    s"         row_number() OVER (PARTITION BY e.vec_id\n" +
-    s"           ORDER BY ${cos("e.embedding", "c.cv")} DESC, c.cent_id) AS rn\n" +
-    "  FROM corpus e, cent c) WHERE rn = 1),\n" +
+    Quantizer.trainSql(Quantizer.Coarse, "corpus", "cent", rounds = 2) +
+    Quantizer.assignSql(Quantizer.Coarse, "asg", "corpus", "cent2") + ",\n" +
     // the residual corpus: per-dimension double subtraction of the
     // assigned cell's centroid, cast back to float
     "resid AS (\n" +
     "  SELECT e.vec_id, list(CAST(CAST(x.v AS DOUBLE) -\n" +
     "           CAST(c.cv[x.d] AS DOUBLE) AS FLOAT4) ORDER BY x.d) AS embedding\n" +
     "  FROM corpus e JOIN asg a USING (vec_id)\n" +
-    "  JOIN cent c ON c.cent_id = a.cent_id,\n" +
+    "  JOIN cent2 c ON c.cent_id = a.cent_id,\n" +
     "  LATERAL (SELECT generate_subscripts(e.embedding, 1) AS d,\n" +
     "                  unnest(e.embedding) AS v) x\n" +
     "  GROUP BY e.vec_id),\n" +
     PqDrift.sqlSub("csub", "corpus", "vec_id") + ",\n" +
     PqDrift.sqlSub("xsub", "resid", "vec_id") + ",\n" +
     // one seed id slice, two seed codebooks (raw/residual subvectors)
-    s"cent0r AS (SELECT sub_id, s_id AS cent_id, sv AS cv FROM (" +
+    s"cbr0 AS (SELECT sub_id, s_id AS cent_id, sv AS cv FROM (" +
       PqDrift.sqlSubBody(
         s"(SELECT vec_id, embedding FROM corpus WHERE vec_id % $seedMod = $seedRem" +
           s" AND vec_id < $seedCap) sr", "s_id") + ") sx),\n" +
-    s"cent0x AS (SELECT sub_id, s_id AS cent_id, sv AS cv FROM (" +
+    s"cbx0 AS (SELECT sub_id, s_id AS cent_id, sv AS cv FROM (" +
       PqDrift.sqlSubBody(
         s"(SELECT vec_id, embedding FROM resid WHERE vec_id % $seedMod = $seedRem" +
           s" AND vec_id < $seedCap) sx0", "s_id") + ") sy),\n" +
     // one Lloyd round each — the production tier's training depth
-    PqDrift.sqlAssign("ar", "csub", "cent0r") + ",\n" +
-    PqDrift.sqlMeans("cbr", "ar") + ",\n" +
-    PqDrift.sqlAssign("ax", "xsub", "cent0x") + ",\n" +
-    PqDrift.sqlMeans("cbx", "ax") + ",\n" +
-    PqDrift.sqlAssign("kr", "csub", "cbr") + ",\n" +
+    Quantizer.trainSql(Quantizer.Product, "csub", "cbr", rounds = 1) +
+    Quantizer.trainSql(Quantizer.Product, "xsub", "cbx", rounds = 1) +
+    Quantizer.assignSql(Quantizer.Product, "kr", "csub", "cbr1") + ",\n" +
     "codes_raw AS (SELECT vec_id, sub_id, cent_id AS code FROM kr),\n" +
-    PqDrift.sqlAssign("kx", "xsub", "cbx") + ",\n" +
+    Quantizer.assignSql(Quantizer.Product, "kx", "xsub", "cbx1") + ",\n" +
     "codes_res AS (SELECT vec_id, sub_id, cent_id AS code FROM kx),\n" +
     "q AS (SELECT vec_id AS query_id, embedding AS qv FROM corpus\n" +
     "      WHERE vec_id % 15 = 0),\n" +
@@ -309,26 +259,18 @@ object PqResidual {
     "  SELECT a.query_id, c.cent_id AS qcell,\n" +
     s"         row_number() OVER (PARTITION BY a.query_id\n" +
     s"           ORDER BY ${cos("a.qv", "c.cv")} DESC, c.cent_id) AS rn\n" +
-    "  FROM q a, cent c) WHERE rn = 1),\n" +
+    "  FROM q a, cent2 c) WHERE rn = 1),\n" +
     "qbase AS (\n" +
     "  SELECT qc.query_id,\n" +
     "         list_inner_product(CAST(q.qv AS DOUBLE[]), CAST(c.cv AS DOUBLE[])) AS base\n" +
     "  FROM qcell qc JOIN q USING (query_id)\n" +
-    "  JOIN cent c ON c.cent_id = qc.qcell),\n" +
+    "  JOIN cent2 c ON c.cent_id = qc.qcell),\n" +
     PqDrift.sqlSub("qsub",
       "(SELECT query_id AS vec_id, qv AS embedding FROM q) qq", "query_id") + ",\n" +
-    "truth AS (SELECT query_id, neighbor_id FROM (\n" +
-    "  SELECT q.query_id, e.vec_id AS neighbor_id,\n" +
-    "         row_number() OVER (PARTITION BY q.query_id\n" +
-    "           ORDER BY round(list_inner_product(CAST(q.qv AS DOUBLE[]),\n" +
-    "                    CAST(e.embedding AS DOUBLE[])), 4) DESC, e.vec_id) AS rk\n" +
-    "  FROM q, corpus e WHERE e.vec_id <> q.query_id) WHERE rk <= 5),\n" +
-    searchCte("s_raw", "codes_raw", "cbr", "", "") + ",\n" +
-    searchCte("s_res", "codes_res", "cbx",
+    Quantizer.truthSql(PqDrift.sqlDot) + ",\n" +
+    searchCte("s_raw", "codes_raw", "cbr1", "", "") + ",\n" +
+    searchCte("s_res", "codes_res", "cbx1",
       " JOIN qbase b ON b.query_id = x.query_id", "b.base + ") + "\n" +
-    recallSelect("raw", "s_raw") +
-    "UNION ALL\n" +
-    recallSelect("residual", "s_res") +
-    "ORDER BY encoding"
+    Quantizer.sqlRecallRows("raw", "s_raw", "residual", "s_res", "encoding")
   }
 }

@@ -871,39 +871,6 @@ object Similarity {
     pqSearch(spark, sfDir, cents, codes)
   }
 
-  /** Codebook refinement loop: `rounds` Lloyd L2 iterations from the
-    * deterministic seeds, the 4×16×16-float codebook driver-
-    * materialized between rounds (kmeans rationale: cuts the per-round
-    * plan subtree; metadata-scale at ANY corpus size — this collect is
-    * the canonical Lloyd shape, not a data-path collect).
-    */
-  private[ext] def pqCodebook(spark: SparkSession, subs: DataFrame,
-      cents0: DataFrame, rounds: Int): DataFrame = {
-    var cents = cents0
-    for (_ <- 1 to rounds) {
-      val next = subspaceMeans(pqNearest(subs, cents, keepSv = true))
-      cents = spark.createDataFrame(
-        spark.sparkContext.parallelize(next.collect().toIndexedSeq, 1), next.schema)
-    }
-    cents
-  }
-
-  /** Per-(sub_id, cent_id) float-cast per-dimension mean of an
-    * assigned subvector relation — the Lloyd UPDATE half, the ONE
-    * mass-center definition shared by the codebook trainer above and
-    * [[PqDrift]]'s residual-drift trigger/retrain (r19 review: a
-    * second copy of this fold could silently diverge from the trainer
-    * and break the drift gate's bit-exact Spark-vs-oracle parity).
-    */
-  private[ext] def subspaceMeans(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("sub_id"), col("cent_id"), posexplode(col("sv")).as(Seq("d", "v")))
-      .groupBy(col("sub_id"), col("cent_id"), col("d"))
-      .agg(avg(col("v")).as("m"))
-      .groupBy(col("sub_id"), col("cent_id"))
-      .agg(transform(array_sort(collect_list(struct(col("d"), col("m")))),
-        s => s.getField("m").cast("float")).as("cv"))
-
   /** Corpus subvector frame + deterministic codebook seeds. */
   private def pqSeedInputs(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     val emb = Tables.table(spark, sfDir, "embeddings")
@@ -923,7 +890,7 @@ object Similarity {
   def pqCodebookStaged(spark: SparkSession, sfDir: String): DataFrame =
     Shared.memo(spark, sfDir, "pq_codebook") {
       val (subs, cents0) = pqSeedInputs(spark, sfDir)
-      pqCodebook(spark, subs, cents0, rounds = 1)
+      Quantizer.train(Quantizer.Product, subs, cents0, rounds = 1)
     }
 
   /** Staged round-1 PQ code table (vec_id → 4 small ints) — the only
@@ -996,10 +963,9 @@ object Similarity {
   /** ADC stage of [[pqSearch]]: broadcast per-query lookup tables
     * joined to the code scan, quantized dot = the 4 lookups summed in
     * FIXED subspace order (pivot columns, cross-engine deterministic).
-    * Split out so the stage-wall triage ([[pqStageWalls]]) can time
-    * the scan in isolation — its work is |codes| × |queries| pairs,
-    * the one stage of this pipeline whose decade ratio is quadratic
-    * when the bench fixture scales the query set with the corpus.
+    * Its work is |codes| × |queries| pairs, the one stage of this
+    * pipeline whose decade ratio is quadratic when the bench fixture
+    * scales the query set with the corpus.
     */
   private def pqAdcApprox(emb: DataFrame, cents1: DataFrame,
       codes: DataFrame): DataFrame = {
@@ -1161,43 +1127,6 @@ object Similarity {
   // here would capture its pre-init 0 (rn <= 0 = empty oracle)
   lazy val annIvfPqNprobeSql: String = ivfPqSqlWith(ivfNprobe)
 
-  /** Stage-decomposed walls for the [[annPq]] pipeline — the scaling
-    * sweep's triage surface (r17 task #3: attribute the above-linear
-    * sf0.1→sf1 decade to a stage instead of the aggregate number).
-    * Each stage materializes to a localCheckpoint before the next is
-    * timed, so a wall belongs to ITS stage, not its lineage. Run via
-    * `graft.PqStages` on an idle box; findings land in SCALING.md.
-    */
-  def pqStageWalls(spark: SparkSession, sfDir: String): Seq[(String, Double, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer[(String, Double, Long)]()
-    def stage(name: String)(f: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
-      val df = f.localCheckpoint()
-      val n = df.count()
-      out += ((name, (System.nanoTime() - t0) / 1e9, n))
-      df
-    }
-    val emb = Tables.table(spark, sfDir, "embeddings")
-    val (subs0, cents0) = pqSeedInputs(spark, sfDir)
-    val subs = stage("subvector_explode")(subs0)
-    // materialize BEFORE taking the elapsed time (r18 advice: tuple
-    // args evaluate left-to-right, so an inline cb.count() would be
-    // excluded from the stage wall, unlike every stage() above)
-    val t0 = System.nanoTime()
-    val cb = pqCodebook(spark, subs, cents0, 1)
-    val nCb = cb.count()
-    out += (("lloyd_round", (System.nanoTime() - t0) / 1e9, nCb))
-    val codes = stage("code_assign")(
-      pqNearest(subs, cb, keepSv = false)
-        .select(col("vec_id"), col("sub_id"), col("cent_id").as("code")))
-    val approx = stage("adc_scan")(pqAdcApprox(emb, cb, codes))
-    val cands = stage("shortlist_topk")(pqShortlist(approx))
-    val t1 = System.nanoTime()
-    val n = pqRerank(emb, cands).collect().length.toLong
-    out += (("exact_rerank", (System.nanoTime() - t1) / 1e9, n))
-    out.toSeq
-  }
-
   /** DuckDB twin of [[annPq]] — subvector slicing (list_slice is
     * 1-based end-inclusive ≡ Spark's slice(start, len)), the same
     * seeds, one float-cast Lloyd round, argmin-L2 codes, ADC pivot
@@ -1271,37 +1200,14 @@ object Similarity {
     */
   private def pqIndexCteSql(rounds: Int): String = {
     def sub(src: String, id: String): String = pqSubCteSql(src, id)
-    def l2(sv: String, cv: String): String = pqL2Sql(sv, cv)
-    val lloyd = (0 until rounds).map { i =>
-      s"a$i AS (\n" +
-      s"  SELECT vec_id, sub_id, cent_id, sv FROM (\n" +
-      s"    SELECT s.vec_id, s.sub_id, c.cent_id, s.sv,\n" +
-      s"           row_number() OVER (PARTITION BY s.vec_id, s.sub_id\n" +
-      s"             ORDER BY ${l2("s.sv", "c.cv")} DESC, c.cent_id) AS rn\n" +
-      s"    FROM subs s JOIN cent$i c USING (sub_id))\n" +
-      s"  WHERE rn = 1),\n" +
-      s"m${i + 1} AS (\n" +
-      s"  SELECT sub_id, cent_id, d, avg(v) AS m FROM (\n" +
-      s"    SELECT sub_id, cent_id, generate_subscripts(sv, 1) AS d, unnest(sv) AS v\n" +
-      s"    FROM a$i) t\n" +
-      s"  GROUP BY sub_id, cent_id, d),\n" +
-      s"cent${i + 1} AS (\n" +
-      s"  SELECT sub_id, cent_id, list(CAST(m AS FLOAT4) ORDER BY d) AS cv\n" +
-      s"  FROM m${i + 1} GROUP BY sub_id, cent_id),\n"
-    }.mkString
     s"WITH subs AS (${sub("embeddings", "vec_id")}),\n" +
     s"seed AS (SELECT * FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 800),\n" +
     s"cent0 AS (\n" +
     s"  SELECT sub_id, c_id AS cent_id, sv AS cv\n" +
     s"  FROM (${sub("seed", "c_id")})),\n" +
-    lloyd +
-    s"codes AS (\n" +
-    s"  SELECT vec_id, sub_id, cent_id AS code FROM (\n" +
-    s"    SELECT s.vec_id, s.sub_id, c.cent_id,\n" +
-    s"           row_number() OVER (PARTITION BY s.vec_id, s.sub_id\n" +
-    s"             ORDER BY ${l2("s.sv", "c.cv")} DESC, c.cent_id) AS rn\n" +
-    s"    FROM subs s JOIN cent$rounds c USING (sub_id))\n" +
-    s"  WHERE rn = 1),\n" +
+    Quantizer.trainSql(Quantizer.Product, "subs", "cent", rounds) +
+    Quantizer.assignSql(Quantizer.Product, "fin", "subs", s"cent$rounds") + ",\n" +
+    s"codes AS (SELECT vec_id, sub_id, cent_id AS code FROM fin),\n" +
     s"qsub AS (\n" +
     s"  SELECT q_id AS query_id, sub_id, sv\n" +
     s"  FROM (${sub("embeddings", "q_id")})\n" +
@@ -1628,7 +1534,7 @@ object Similarity {
     // per-sweep-point aggregates survive as the result plan
     try {
       // ONE incremental Lloyd chain instead of a from-scratch training
-      // per sweep point (r20): pqCodebook from fixed seeds is
+      // per sweep point (r20): training from fixed seeds is
       // deterministic, so the round-r codebook IS one more refinement
       // of the round-(r-1) codebook — training each point separately
       // ran 1+2+…+max ≈ R²/2 Lloyd rounds where the chain runs R.
@@ -1637,7 +1543,7 @@ object Similarity {
       val centsByRound: Map[Int, DataFrame] = {
         var c = cents0
         (1 to pqRoundsSweep.max).map { r =>
-          c = pqCodebook(spark, subs, c, rounds = 1)
+          c = Quantizer.train(Quantizer.Product, subs, c, rounds = 1)
           r -> c
         }.toMap
       }
@@ -1653,8 +1559,20 @@ object Similarity {
         // lineage back to `subs` so its blocks can be freed below
       }
       rows.reduce(_ unionAll _)
-    } finally graft.io.Checkpoints.release(subs)
+    } finally release(subs)
   }
+
+  /** Release the storage blocks of a `localCheckpoint(true)`-materialized
+    * frame. `Dataset.unpersist` only uncaches CacheManager entries — it
+    * does NOT free checkpoint RDD blocks, which otherwise live until the
+    * driver GCs the RDD reference (ContextCleaner).
+    */
+  private def release(df: DataFrame): Unit =
+    try df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    } catch { case _: Throwable => () }
 
   /** DuckDB twin of [[annPqRounds]] — one [[pqSql]] instantiation per
     * swept round count, nested as derived tables (concatenated

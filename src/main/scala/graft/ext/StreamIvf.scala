@@ -164,41 +164,29 @@ object StreamIvf {
     */
   private def incrementalScenario(spark: SparkSession, sfDir: String,
       tmpPrefix: String, mkSink: String => ParquetUpsertSink,
-      readBack: (SparkSession, String, ParquetUpsertSink) => DataFrame,
-      // phase hook: identity for the gates; [[morStageWalls]] injects a
-      // timer so the triage decomposition measures THIS choreography —
-      // a drifting copy would silently attribute a scenario the bench
-      // no longer runs
-      phase: (String, () => Unit) => Unit = (_, f) => f()): DataFrame = {
+      readBack: (SparkSession, String, ParquetUpsertSink) => DataFrame): DataFrame = {
     val emb = graft.Tables.table(spark, sfDir, "embeddings")
     val centroids = emb.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
     val path = java.nio.file.Files.createTempDirectory(tmpPrefix).toString
     val s = mkSink(path)
-    var slice0: DataFrame = null; var slice1: DataFrame = null
-    phase("slice_build", () => {
-      // ONE full-corpus assign+quantize pass, checkpointed, then two
-      // parity filters over the materialized rows — the r20 profile
-      // showed the previous per-slice mkSlice running assignNearest +
-      // int8 quantization over the WHOLE corpus twice (once per slice,
-      // each filter discarding half), doubling slice_build for no
-      // semantic difference: same rows, same split, same seqs.
-      val rows = indexRows(emb, centroids, seq = 0L).localCheckpoint(true)
-      slice0 = rows.filter(pmod(col("cent_id"), lit(2)) === 0)
-      slice1 = rows.filter(pmod(col("cent_id"), lit(2)) === 1)
-        .withColumn("seq", lit(1L))
-    })
-    phase("ingest_commits", () => {
-      s.upsert(slice0, batchId = 0L)
-      s.upsert(slice1, batchId = 1L)
-    })
-    phase("replay_refresh_commits", () => {
-      // at-least-once replay of slice 1 (same seq — idempotent rewrite) …
-      s.upsert(slice1, batchId = 2L)
-      // … and a refresh of slice 0 at a higher seq (precombine keeps it;
-      // payload unchanged, so the search output stays the rebuilt index's)
-      s.upsert(slice0.withColumn("seq", lit(5L)), batchId = 3L)
-    })
+    // ONE full-corpus assign+quantize pass, checkpointed, then two
+    // parity filters over the materialized rows — the r20 profile
+    // showed the previous per-slice mkSlice running assignNearest +
+    // int8 quantization over the WHOLE corpus twice (once per slice,
+    // each filter discarding half), doubling the slice build for no
+    // semantic difference: same rows, same split, same seqs.
+    val rows = indexRows(emb, centroids, seq = 0L).localCheckpoint(true)
+    val slice0 = rows.filter(pmod(col("cent_id"), lit(2)) === 0)
+    val slice1 = rows.filter(pmod(col("cent_id"), lit(2)) === 1)
+      .withColumn("seq", lit(1L))
+    s.upsert(slice0, batchId = 0L)
+    s.upsert(slice1, batchId = 1L)
+    // at-least-once replay of slice 1 (same seq — idempotent rewrite) …
+    s.upsert(slice1, batchId = 2L)
+    // … and a refresh of slice 0 at a higher seq (precombine keeps it;
+    // payload unchanged, so the search output stays the rebuilt index's)
+    s.upsert(slice0.withColumn("seq", lit(5L)), batchId = 3L)
     val queries = emb.filter(col("vec_id") % 100 === 0)
     search(readBack(spark, path, s), queries, centroids, k = 5)
   }
@@ -222,34 +210,4 @@ object StreamIvf {
         writeMode = ParquetUpsertSink.ModeMor),
       readBack = (spark, _, s) =>
         s.readMor(spark).withColumn("cent_id", col("cent_id").cast("long")))
-
-  /** Phase-decomposed walls for [[annIvfIncrementalMor]]'s scenario —
-    * the scaling sweep's triage surface for the wp tier's steepest
-    * line (r17 task #9): attributes the decade ratio to slice
-    * construction (full-corpus assignment + quantization, the data
-    * term), the four delta commits (the O(delta) write term), and the
-    * merge-on-read search (read term) instead of one aggregate wall.
-    * Run via `graft.IvfIncStages` on an idle box.
-    */
-  def morStageWalls(spark: SparkSession, sfDir: String): Seq[(String, Double, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer[(String, Double, Long)]()
-    def phase(name: String, f: () => Unit): Unit = {
-      val t0 = System.nanoTime()
-      f()
-      out += ((name, (System.nanoTime() - t0) / 1e9, 0L))
-    }
-    // the EXACT gate choreography (one shared body, phase-hooked —
-    // never a copy that can drift from what the bench measures)
-    val result = incrementalScenario(spark, sfDir, "graft_ivf_stages",
-      mkSink = path => ParquetUpsertSink(path, recordKeys = Seq("vec_id"),
-        precombine = "seq", partitionCol = "cent_id",
-        writeMode = ParquetUpsertSink.ModeMor),
-      readBack = (sp, _, s) =>
-        s.readMor(sp).withColumn("cent_id", col("cent_id").cast("long")),
-      phase = phase)
-    val t0 = System.nanoTime()
-    val n = result.collect().length.toLong
-    out += (("mor_read_search", (System.nanoTime() - t0) / 1e9, n))
-    out.toSeq
-  }
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * through the commit path, then run the residual-displacement
   * trigger (one partial-agged pass to 4×k driver rows — metadata
   * scale, cheap enough for EVERY batch); above threshold, retrain
-  * into the next version through [[PqDrift.retrain]]'s commit path.
+  * into the next version through [[PqDrift.maintain]]'s commit path.
   * The next batch — and any concurrent reader — picks up the new
   * version through the resolver, no rebuild, no operator.
   *
@@ -33,13 +33,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Scale shape: per batch — one broadcast of the 4×k×subDim codebook,
   * one map pass over the batch, one partition-pruned upsert, one
-  * partial agg for the trigger; a triggered retrain is [[PqDrift.retrain]]'s
+  * partial agg for the trigger; a triggered retrain is [[PqDrift.maintain]]'s
   * broadcast-join re-encode. Nothing corpus² anywhere.
   */
 object StreamPq {
 
   /** One micro-batch of maintenance; returns (servingVersion,
-    * triggered, maxDisplacement) after the batch.
+    * triggered, max displacement) after the batch.
     */
   def processBatch(spark: SparkSession, root: String, vecPath: String,
       batch: DataFrame, batchId: Long, threshold: Double): (Int, Boolean, Double) = {
@@ -106,22 +106,9 @@ object StreamPq {
     * (v0 → fire at batch 0 → v1 → fire at batch 1 → v2).
     */
   def annPqIncremental(spark0: SparkSession, sfDir: String): DataFrame = {
-    val spark = spark0.newSession()
-    spark0.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(spark.conf.set(k, v)) }
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val emb = graft.Tables.table(spark, sfDir, "embeddings")
-      .filter(col("vec_id") % 4 === 1)
-    val base = emb.filter(col("vec_id") % 3 =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val seeds = Similarity.pqSubvectors(
-        base.filter(col("vec_id") % 25 === 0), "vec_id")
-      .select(col("sub_id"), col("vec_id").as("cent_id"), col("sv").as("cv"))
-    val cents = Similarity.pqCodebook(spark,
-        Similarity.pqSubvectors(base, "vec_id"), seeds,
-        rounds = PqDrift.trainRounds)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cents.count()
+    val spark = Quantizer.narrowSession(spark0)
+    val (base, drifted0) = Quantizer.driftSlices(spark, sfDir)
+    val cents = PqDrift.trainedCodebook(base)
     val root = java.nio.file.Files.createTempDirectory("graft_pq_inc").toString
     val path0 = PqDrift.versionPath(root, 0)
     val vecPath = s"$root/vectors"; val inDir = s"$root/stream_in"
@@ -135,12 +122,7 @@ object StreamPq {
     // into two files = two micro-batches under maxFilesPerTrigger=1
     // (drifted vec_ids are ≡ 9 mod 12, so a mod-2 split would be
     // degenerate; mod-24 cuts them in half)
-    val drifted = emb.filter(col("vec_id") % 3 === 0)
-      .select(col("vec_id"),
-        expr("transform(embedding, (x, i) -> " +
-          "cast(cast(x as double) + CASE WHEN i = label * 6 THEN 2.0 ELSE 0.0 END as float))")
-          .as("embedding"))
-      .localCheckpoint(true)
+    val drifted = drifted0.localCheckpoint(true)
     drifted.filter(col("vec_id") % 24 === 9).coalesce(1).write.parquet(inDir)
     drifted.filter(col("vec_id") % 24 === 21).coalesce(1)
       .write.mode("append").parquet(inDir)
@@ -188,35 +170,20 @@ object StreamPq {
     val querySubs = Similarity.pqSubvectors(queries, "vec_id")
       .withColumnRenamed("vec_id", "query_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    import org.apache.spark.sql.expressions.Window
-    val truth = {
-      val qd = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val scored = corpus.join(broadcast(qd))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("sim", round(Similarity.dot(col("qv"), col("embedding")), 4))
-      val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
-      scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val truth = Quantizer.exactTop5(corpus, queries, Similarity.dot)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nTruth = truth.count()
     def hitsOf(cs: DataFrame, codes: DataFrame): Long =
-      truth.join(PqDrift.adcTop5(querySubs, cs, codes),
-        Seq("query_id", "neighbor_id"), "left_semi").count()
+      Quantizer.hits(truth, PqDrift.adcTop5(querySubs, cs, codes))
     val (liveCodes, liveCents) = PqDrift.currentPair(spark, root)
     val liveHits = hitsOf(liveCents, liveCodes)
     val frozenHits = hitsOf(cents, PqDrift.readCodes(spark, path0))
     require(liveHits >= frozenHits,
       s"in-loop healing must not lose recall vs the frozen v0 pair " +
         s"($liveHits vs $frozenHits of $nTruth)")
-    truth.unpersist(); querySubs.unpersist(); cents.unpersist()
-    import spark.implicits._
-    def recall4(hits: Long): Double =
-      BigDecimal(hits.toDouble / nTruth)
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    Seq(
-      ("retrained_live", liveHits, recall4(liveHits)),
-      ("stale_frozen", frozenHits, recall4(frozenHits)))
-      .toDF("regime", "n_hits", "recall")
+    truth.unpersist(); querySubs.unpersist()
+    Quantizer.recallRows(spark, "regime", nTruth,
+      "retrained_live" -> liveHits, "stale_frozen" -> frozenHits)
   }
 
   /** DuckDB twin of [[annPqIncremental]] — the training chain, the
@@ -226,64 +193,41 @@ object StreamPq {
     */
   val annPqIncrementalSql: String = {
     val R = PqDrift.trainRounds
-    "WITH base AS (SELECT vec_id, embedding FROM embeddings\n" +
-    "              WHERE vec_id % 3 <> 0 AND vec_id % 4 = 1),\n" +
-    "drift AS (\n" +
-    "  SELECT e.vec_id, list(CAST(CAST(x.v AS DOUBLE) +\n" +
-    "           CASE WHEN x.d = e.label * 6 + 1 THEN 2.0 ELSE 0.0 END AS FLOAT4)\n" +
-    "         ORDER BY x.d) AS embedding\n" +
-    "  FROM embeddings e,\n" +
-    "  LATERAL (SELECT generate_subscripts(e.embedding, 1) AS d,\n" +
-    "                  unnest(e.embedding) AS v) x\n" +
-    "  WHERE e.vec_id % 3 = 0 AND e.vec_id % 4 = 1 GROUP BY e.vec_id),\n" +
+    Quantizer.driftCorpusSql +
     "b1 AS (SELECT * FROM drift WHERE vec_id % 24 = 9),\n" +
     "b2 AS (SELECT * FROM drift WHERE vec_id % 24 = 21),\n" +
-    "corpus AS (SELECT * FROM base UNION ALL SELECT * FROM drift),\n" +
-    "seedv AS (SELECT * FROM base WHERE vec_id % 25 = 0),\n" +
-    PqDrift.sqlSub("bsub", "base", "vec_id") + ",\n" +
+    // v0's codebook: trainRounds Lloyd rounds on the BASE subvectors
+    PqDrift.sqlTrainedCodebook +
     PqDrift.sqlSub("b1sub", "b1", "vec_id") + ",\n" +
     PqDrift.sqlSub("b2sub", "b2", "vec_id") + ",\n" +
     PqDrift.sqlSub("csub", "corpus", "vec_id") + ",\n" +
-    "cent0 AS (SELECT sub_id, s_id AS cent_id, sv AS cv FROM (" +
-      PqDrift.sqlSubBody("seedv", "s_id") + ") sx),\n" +
-    // trainRounds Lloyd rounds on the BASE subvectors (v0's codebook)
-    (0 until R).map(i =>
-      PqDrift.sqlAssign(s"a$i", "bsub", s"cent$i") + ",\n" +
-        PqDrift.sqlMeans(s"cent${i + 1}", s"a$i") + ",\n").mkString +
     // v0 as superseded: base codes + batch-0 half encoded STALE
-    PqDrift.sqlAssign("kb", "bsub", s"cent$R") + ",\n" +
-    PqDrift.sqlAssign("k1", "b1sub", s"cent$R") + ",\n" +
+    Quantizer.assignSql(Quantizer.Product, "kb", "bsub", s"cent$R") + ",\n" +
+    Quantizer.assignSql(Quantizer.Product, "k1", "b1sub", s"cent$R") + ",\n" +
     "codes0 AS (SELECT vec_id, sub_id, cent_id AS code, sv FROM kb\n" +
     "           UNION ALL SELECT vec_id, sub_id, cent_id, sv FROM k1),\n" +
     // retrain 1 at the batch-0 boundary: assign half = the stored
     // codes over (base ∪ b1), update half = per-(sub, code) means;
     // re-encode (base ∪ b1) with the v1 codebook
-    PqDrift.sqlMeans("centR1",
-      "(SELECT vec_id, sub_id, code AS cent_id, sv FROM codes0)") + ",\n" +
+    PqDrift.sqlCodeMeans("centR1", "codes0") + ",\n" +
     PqDrift.sqlSub("v1sub", "(SELECT * FROM base UNION ALL SELECT * FROM b1) u1",
       "vec_id") + ",\n" +
-    PqDrift.sqlAssign("kr1", "v1sub", "centR1") + ",\n" +
+    Quantizer.assignSql(Quantizer.Product, "kr1", "v1sub", "centR1") + ",\n" +
     // batch 1 encoded against the v1 codebook — sustained drift
     // re-fires, so retrain 2 folds the full corpus into v2
-    PqDrift.sqlAssign("k2", "b2sub", "centR1") + ",\n" +
+    Quantizer.assignSql(Quantizer.Product, "k2", "b2sub", "centR1") + ",\n" +
     "codes1 AS (SELECT vec_id, sub_id, cent_id AS code, sv FROM kr1\n" +
     "           UNION ALL SELECT vec_id, sub_id, cent_id, sv FROM k2),\n" +
-    PqDrift.sqlMeans("centR2",
-      "(SELECT vec_id, sub_id, code AS cent_id, sv FROM codes1)") + ",\n" +
-    PqDrift.sqlAssign("krL", "csub", "centR2") + ",\n" +
+    PqDrift.sqlCodeMeans("centR2", "codes1") + ",\n" +
+    Quantizer.assignSql(Quantizer.Product, "krL", "csub", "centR2") + ",\n" +
     "codesL AS (SELECT vec_id, sub_id, cent_id AS code FROM krL),\n" +
     "codesF AS (SELECT vec_id, sub_id, code FROM codes0),\n" +
     "q AS (SELECT vec_id AS query_id, embedding AS qv FROM corpus WHERE vec_id % 15 = 0),\n" +
     PqDrift.sqlSub("qsub", "(SELECT query_id AS vec_id, qv AS embedding FROM q) qq",
       "query_id") + ",\n" +
-    "truth AS (SELECT query_id, neighbor_id FROM (\n" +
-    "  SELECT q.query_id, e.vec_id AS neighbor_id,\n" +
-    "         row_number() OVER (PARTITION BY q.query_id\n" +
-    "           ORDER BY round(list_inner_product(CAST(q.qv AS DOUBLE[]),\n" +
-    "                    CAST(e.embedding AS DOUBLE[])), 4) DESC, e.vec_id) AS rk\n" +
-    "  FROM q, corpus e WHERE e.vec_id <> q.query_id) WHERE rk <= 5),\n" +
+    Quantizer.truthSql(PqDrift.sqlDot) + ",\n" +
     PqDrift.sqlAdcSearch("sL", "codesL", "centR2") + ",\n" +
     PqDrift.sqlAdcSearch("sF", "codesF", s"cent$R") + "\n" +
-    PqDrift.sqlRecallRows("retrained_live", "sL", "stale_frozen", "sF", "regime")
+    Quantizer.sqlRecallRows("retrained_live", "sL", "stale_frozen", "sF", "regime")
   }
 }

@@ -549,6 +549,55 @@ class GraftCatalogSpec extends SparkSpec {
     assert(msgChain(populated).contains("already holds"))
   }
 
+  test("CALL graft.system.maintain_pq / maintain_ivf: empty and degenerate indexes fail with the cause") {
+    import graft.ext.{IvfDrift, PqDrift, Similarity, StreamIvf}
+    def msgChain(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
+    // one unit component per subspace; `zeroSub0` zeroes subspace 0's
+    // codebook entry
+    def unit(n: Int, at: Int): Array[Float] = {
+      val a = Array.fill(n)(0.0f); a(at) = 1.0f; a
+    }
+    val vec = (0 until Similarity.pqSubspaces).map(s => unit(64, s * Similarity.pqSubDim))
+      .reduce((a, b) => a.zip(b).map { case (x, y) => x + y })
+    val vectors = Seq((1L, vec), (2L, vec)).toDF("vec_id", "embedding")
+    def pqIndex(cb0: Array[Float]): (String, String) = {
+      val dir0 = tmp("pqg0")
+      val cents = (Seq((0, 0L, cb0)) ++ (1 until Similarity.pqSubspaces)
+        .map(s => (s, 0L, unit(Similarity.pqSubDim, 0)))).toDF("sub_id", "cent_id", "cv")
+      PqDrift.writeCodebook(cents, dir0)
+      PqDrift.sink(dir0).upsert(PqDrift.codeRows(vectors, cents, 0L), 0L)
+      (dir0, tmp("pqg1"))
+    }
+    def maintainPq(dir0: String, vdir: String, dir1: String): Throwable =
+      intercept[Exception](spark.sql(s"CALL graft.system.maintain_pq('$dir0', " +
+        s"'$vdir', '$dir1', CAST(0.2 AS DOUBLE))").collect())
+    // vectors whose vec_ids match no stored code
+    val (dir0, dir1) = pqIndex(unit(Similarity.pqSubDim, 0))
+    val strangers = tmp("pqgv")
+    Seq((100L, vec)).toDF("vec_id", "embedding").write.parquet(strangers)
+    assert(msgChain(maintainPq(dir0, strangers, dir1))
+      .contains("maintain_pq: vectors and the index's codes/codebook share no " +
+        "(vec_id, sub_id, code) rows"))
+    // an all-zero codebook entry that rows are coded as
+    val (zdir0, zdir1) = pqIndex(Array.fill(Similarity.pqSubDim)(0.0f))
+    val vdir = tmp("pqgv")
+    vectors.write.parquet(vdir)
+    assert(msgChain(maintainPq(zdir0, vdir, zdir1))
+      .contains("residual displacement is NaN"))
+    // IVF: an index whose cells match no centroid of its codebook
+    val ivf0 = tmp("ivfg0")
+    val cents = Seq((0L, unit(4, 0)), (1L, unit(4, 1))).toDF("cent_id", "cv")
+    StreamIvf.sink(ivf0).upsert(StreamIvf.indexRows(
+      Seq((1L, unit(4, 0)), (2L, unit(4, 1))).toDF("vec_id", "embedding"), cents, 0L), 0L)
+    IvfDrift.writeCentroids(Seq((7L, unit(4, 0))).toDF("cent_id", "cv"), ivf0)
+    val ivfErr = intercept[Exception](spark.sql(s"CALL graft.system.maintain_ivf(" +
+      s"'$ivf0', '${tmp("ivfg1")}', CAST(0.2 AS DOUBLE))").collect())
+    assert(msgChain(ivfErr).contains("maintain_ivf: the index's cells and its " +
+      "centroids share no cent_id rows"), msgChain(ivfErr))
+  }
+
   test("CALL graft.system.optimize_zorder rewrites partitions, preserves rows") {
     val dir = tmp("pzorder")
     val sink = ParquetUpsertSink(dir, Seq("id"), "seq", "dept")

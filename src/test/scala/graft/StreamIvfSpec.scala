@@ -133,30 +133,32 @@ class StreamIvfSpec extends SparkSpec {
     val cents = Seq(
       (100L, vec(0, 0.04f)), (200L, vec(3, 0.04f)))
       .toDF("cent_id", "cv")
-    val path0 = java.nio.file.Files.createTempDirectory("ivf_drift0").toString
+    def dir(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+    val path0 = dir("ivf_drift0"); val path1 = dir("ivf_drift1")
+    IvfDrift.writeCentroids(cents, path0)
     val s = StreamIvf.sink(path0)
     s.upsert(StreamIvf.indexRows(base.toDF(), cents, seq = 0L), 0L)
-    val disp0 = IvfDrift.maxDisplacement(StreamIvf.readIndex(spark, path0), cents)
-    assert(disp0 < IvfDrift.DriftThreshold,
+    val (fired0, disp0) = IvfDrift.maintain(spark, path0, path1, IvfDrift.DriftThreshold)
+    assert(!fired0 && disp0 < IvfDrift.DriftThreshold,
       s"converged quantizer must sit below the trigger, got $disp0")
     // drifted ingest: a new tight cluster on axis 6 the quantizer never
     // saw — it crams into whichever cell wins the tie and drags that
     // cell's mean away from its centroid
     val drifted = (100 until 120).map(i => IvfVec(i.toLong, vec(6, 0.02f * (i % 5))))
     s.upsert(StreamIvf.indexRows(drifted.toDF(), cents, seq = 1L), 1L)
-    val disp1 = IvfDrift.maxDisplacement(StreamIvf.readIndex(spark, path0), cents)
-    assert(disp1 > IvfDrift.DriftThreshold,
+    // the trigger fires and the retrain rewrites the assignments through
+    // the commit path: every vector lands exactly once
+    val (fired1, disp1) = IvfDrift.maintain(spark, path0, path1, IvfDrift.DriftThreshold)
+    assert(fired1 && disp1 > IvfDrift.DriftThreshold,
       s"a drifted cluster must fire the trigger, got $disp1")
-    // retrain rewrites the assignments through the commit path: every
-    // vector lands exactly once, and the displacement trigger resets
-    val path1 = java.nio.file.Files.createTempDirectory("ivf_drift1").toString
-    val newCents = IvfDrift.retrain(spark, path0, path1)
     val re = StreamIvf.readIndex(spark, path1)
     assert(re.count() == 40 &&
       re.groupBy(col("vec_id")).count().filter(col("count") > 1).count() == 0,
       "retrain must reassign every vector exactly once")
-    val disp2 = IvfDrift.maxDisplacement(re, newCents)
-    assert(disp2 < IvfDrift.DriftThreshold,
+    // on the retrained index the displacement trigger resets
+    val (fired2, disp2) = IvfDrift.maintain(spark, path1, dir("ivf_drift2"),
+      IvfDrift.DriftThreshold)
+    assert(!fired2 && disp2 < IvfDrift.DriftThreshold,
       s"post-retrain displacement must reset below the trigger, got $disp2")
   }
 }
