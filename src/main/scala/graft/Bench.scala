@@ -6,20 +6,26 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // SPARK_GRAFT_ONLY=a,b,c times just those queries — regression triage
+    // needs isolated numbers (shared-JVM run-position effects measured
+    // at 2× on the heavy pair joins); a misspelt name fails here, before
+    // the session starts
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val selected = SparkEntry.select(only)
     val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
     // ERROR-only logging for the bench run: the driver captures a fixed
     // merged stdout+stderr tail, and r7's WARN flood (WindowExec etc.)
     // pushed the final JSON line out of that window → parsed:null
     spark.sparkContext.setLogLevel("ERROR")
     // warm the JVM/codegen once so per-query numbers measure the engine,
-    // not first-call classloading (alphabetically-first query: Map
-    // iteration order would make the warmup — and the first timed
-    // query's cold penalty — vary run to run)
-    SparkEntry.queries.toSeq.sortBy(_._1).headOption.foreach { case (_, fn) =>
+    // not first-call classloading (the alphabetically-first query, so
+    // the warmup — and the first timed query's cold penalty — is the
+    // same run to run)
+    SparkEntry.select(None).headOption.foreach { spec =>
       // toRdd, like the timed path: a count() on top lets the optimizer
       // prune every projection expression — the codegen the warmup
       // exists to compile is exactly what pruning skips
-      try fn(spark, sfDir).queryExecution.toRdd.count()
+      try spec.build(spark, sfDir).queryExecution.toRdd.count()
       catch { case _: Throwable => () }
     }
     // stage deterministic wire fixtures before timing: encoding the
@@ -40,11 +46,6 @@ object Bench {
     val stagingSec = stagingTimes.collect { case (_, v) if v >= 0 => v }.sum
     stagingTimes.foreach { case (k, v) =>
       System.err.println(f"[bench] staged $k in $v%.3f s") }
-    // SPARK_GRAFT_ONLY=a,b,c times just those queries — regression triage
-    // needs isolated numbers (shared-JVM run-position effects measured
-    // at 2× on the heavy pair joins)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     // Previous committed per-query walls, read BEFORE this run
     // overwrites the default detail path: the reference for the
     // end-of-run contamination reruns below. Values are parsed out of
@@ -98,100 +99,18 @@ object Bench {
           s"could not parse $baselinePath (${e.getMessage})")
         Map.empty
     }
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Two tiers: "calibration" queries exist to measure approximation
-    // error against an exact answer (brute-force scans by definition) —
-    // they still run and report, but separately, so the headline total
-    // tracks the scale-shaped operators a production pipeline runs.
-    // x_ann_recall / x_ann_probe_sweep / x_ann_pq_rounds measure
-    // approximation error against the memoized exact baseline — by the
-    // tier's stated definition they are calibration, not headline
-    // (reclassified per round-8 advice).
-    val calibration = Set("x_ann_bruteforce", "x_dedup_embedding",
-      "x_lsh_recall", "x_minhash_error",
-      "x_ann_recall", "x_ann_probe_sweep", "x_ann_pq_rounds",
-      // exact UNCAPPED pair enumeration — the ground truth the banded
-      // LSH twin (x_dedup_embedding_lsh) approximates; quadratic by
-      // definition, like the brute-force scans above (r16, after the
-      // sf1 scaling point measured it at 11x on 10x data)
-      "x_embedding_pairs",
-      // the media pair VIEW has data-quadratic OUTPUT (all verified
-      // pairs — ~100x rows per 10x docs on a feature-concentrated
-      // corpus, decomposed in PLANS.md r17); it is the diagnostic/
-      // ground-truth surface whose production twin is the O(n)
-      // class-contracted x_media_dedup_groups (headline, measured flat)
-      "x_media_dedup_feature",
-      // flat PQ's ADC grid is |codes| x |queries| — output-quadratic BY
-      // FIXTURE (the bench query set scales with the corpus, like the
-      // brute-force truth it is recalled against; stage-decomposed in
-      // SCALING.md r18: every stage flat except the ADC scan, whose
-      // per-row wall IMPROVES 16x). Its production scale path is
-      // x_ann_ivf_pq (headline, 1.42x on 10x data), so under the
-      // media-pair-view precedent the flat scan is a calibration/
-      // ground-truth surface (r18 verdict #3)
-      "x_ann_pq")
-    // Third tier: WRITE-PIPELINE queries build a fresh upsert-table
-    // fixture per run (seed commits + the mutation under test), so
-    // their numbers measure copy-on-write commit floors and small-file
-    // I/O, not read-query latency — reported separately (like
-    // calibration) so the headline tracks steady-state reads and the
-    // fixture variance band stops polluting round-over-round compares.
-    val writePipeline = Set(
-      "q_sql_delete", "q_sql_update", "q_sql_merge", "q_sql_overwrite",
-      "q_sql_rename", "q_sql_restore", "q_sql_ctas",
-      "q_sql_version_asof",
-      "q_change_feed", "q_upsert_table_read", "q_upsert_expectations",
-      "q_agg_pushdown", "x_ann_ivf_incremental", "x_ann_ivf_incremental_mor",
-      "x_line_dedup_incremental",
-      "x_skipping_scan", "x_rename_skipping", "x_stale_rewrite_guard",
-      "x_sort_layout", "x_split_scan", "x_mor_parity",
-      "x_stream_read_fold", "x_stream_static_enrich", "x_sessionize_tws",
-      "x_bloom_point_lookup",
-      "x_stats_broadcast_join", "q_upsert_widening",
-      // round-16 fixtures: crash-replay sessionize→upsert loop, drift
-      // retrain (two index-table builds per run), default-conf stale
-      // rewrite, and the stream-stream join (stages its own event feed
-      // + two stateful operators over a synthetic stream — fixture
-      // variance, not steady-state read latency)
-      "x_sessionize_tws_upsert", "x_ann_ivf_drift",
-      "x_stale_rewrite_default", "x_stream_stream_join",
-      // r19: PQ drift gate — two codebook trainings + three commit-path
-      // writes per run, the same fixture class as x_ann_ivf_drift
-      "x_ann_pq_drift",
-      // r20: streaming in-loop PQ healing (one training + two per-batch
-      // retrains + five commit-path writes through a real streaming
-      // query) and the residual-encoding sweep (coarse-quantizer
-      // training + two codebook trainings per run) — drift-gate
-      // fixture class, not steady-state read latency
-      "x_ann_pq_incremental", "x_ann_ivf_pq_residual")
-    // a rename in SparkEntry.queries must fail HERE, not silently shift
-    // a brute-force scan into the headline sum — and it fails BEFORE the
-    // timed loop (the sets are static; discovering a rename after a
-    // ~5-minute run wastes the whole run)
-    val unknownCalib = calibration.diff(SparkEntry.queries.keySet)
-    require(unknownCalib.isEmpty,
-      s"calibration tier names unknown queries: ${unknownCalib.toSeq.sorted.mkString(",")}")
-    val unknownWp = writePipeline.diff(SparkEntry.queries.keySet)
-    require(unknownWp.isEmpty,
-      s"write-pipeline tier names unknown queries: ${unknownWp.toSeq.sorted.mkString(",")}")
-    // overlapping tiers would double-count the query across tier sums
-    // and silently break value = staging + headline + calib + wp
-    val overlap = calibration.intersect(writePipeline)
-    require(overlap.isEmpty,
-      s"queries in BOTH tiers: ${overlap.toSeq.sorted.mkString(",")}")
-    val results = selected.map { case (name, fn) =>
+    // Time one query on its OWN physical plan (toRdd) — a count() on top
+    // would let the optimizer prune every projection expression and time
+    // a bare scan instead of the query. -1.0 marks a failure, reported by
+    // the first line of its message only: a multi-line AnalysisException
+    // repeated across failures floods the driver's tail capture.
+    def time(spec: QuerySpec, label: String): Double = {
       val t0 = System.nanoTime()
-      // execute the query's OWN physical plan (toRdd) — a count() on top
-      // would let the optimizer prune every projection expression and
-      // time a bare scan instead of the query
-      // first line of the message only — a multi-line AnalysisException
-      // repeated across failures floods the driver's tail capture
       val ok =
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
+        try { spec.build(spark, sfDir).queryExecution.toRdd.count(); true }
         catch { case e: Throwable =>
           val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          System.err.println(s"[bench] $name FAILED: ${msg.linesIterator.nextOption().getOrElse("")}")
+          System.err.println(s"[bench] $label FAILED: ${msg.linesIterator.nextOption().getOrElse("")}")
           false
         }
       val dt = (System.nanoTime() - t0) / 1e9
@@ -200,8 +119,9 @@ object Bench {
       // from a prior query otherwise lands GC pauses inside the next
       // timing — measured swings of several seconds on the pair joins
       System.gc()
-      name -> (if (ok) dt else -1.0)
+      if (ok) dt else -1.0
     }
+    val results = selected.map(spec => spec -> time(spec, spec.name))
     // Run-position contamination immunity (r18 verdict #1/#2): a query
     // whose wall exceeded 2x its previous committed wall (and by more
     // than 0.5 s absolute — 2x of a 0.1 s line is JVM noise, not a
@@ -215,45 +135,25 @@ object Bench {
     // produced. The trigger margin (2x, +0.5 s) sits strictly inside
     // the gate's >2x+1s regression bar, so any line that could trip
     // the gate has been re-timed before it lands in the artifact.
-    val fnOf = SparkEntry.queries
     val reruns: Seq[(String, Double, Double)] = results.collect {
-      case (n, v) if v >= 0 &&
-          baseline.get(n).exists(b => b > 0 && v > 2 * b && v - b > 0.5) =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fnOf(n)(spark, sfDir).queryExecution.toRdd.count(); true }
-          catch { case e: Throwable =>
-            val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-            System.err.println(s"[bench] rerun $n FAILED: ${msg.linesIterator.nextOption().getOrElse("")}")
-            false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        System.gc()
+      case (spec, v) if v >= 0 &&
+          baseline.get(spec.name).exists(b => b > 0 && v > 2 * b && v - b > 0.5) =>
+        val dt = time(spec, s"rerun ${spec.name}")
         // a failed retry keeps the first attempt's wall — never turns a
         // timed query into a failure it didn't have
-        val retry = if (ok) dt else v
-        System.err.println(f"[bench] rerun $n: first $v%.3f s, retry $retry%.3f s")
-        (n, v, retry)
+        val retry = if (dt >= 0) dt else v
+        System.err.println(f"[bench] rerun ${spec.name}: first $v%.3f s, retry $retry%.3f s")
+        (spec.name, v, retry)
     }
     val rerunMin = reruns.map { case (n, first, retry) =>
       n -> math.min(first, retry) }.toMap
-    val finalResults = results.map { case (n, v) =>
-      n -> rerunMin.getOrElse(n, v) }
+    val finalResults = results.map { case (spec, v) =>
+      spec -> rerunMin.getOrElse(spec.name, v) }
     // Locale.ROOT: the f-interpolator honors the JVM default locale, and
     // a comma-decimal locale would corrupt the JSON line
     def ms(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // JSON string escape for interpolated PATHS (sfDir/outPath come from
-    // env vars): a quote or backslash spliced raw would corrupt both
-    // JSON outputs and the driver's parse — same escaper as Verify's
-    def js(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val qs = finalResults.map { case (k, v) => "\"" + k + "\":" + ms(v) }
+    val qs = finalResults.map { case (spec, v) => "\"" + spec.name + "\":" + ms(v) }
       .mkString("{", ",", "}")
     // rerun annotations: per re-timed query, both attempts (the queries
     // map above carries the min) — the gate and triage read these to
@@ -272,19 +172,21 @@ object Bench {
     // as staging_sec/headline_sec/calibration_sec.
     val total = stagingSec +
       finalResults.collect { case (_, v) if v >= 0 => v }.sum
-    val headline = finalResults.collect {
-      case (n, v) if v >= 0 && !calibration(n) && !writePipeline(n) => v }.sum
-    val calibSec = finalResults.collect {
-      case (n, v) if v >= 0 && calibration(n) => v }.sum
-    val writePipelineSec = finalResults.collect {
-      case (n, v) if v >= 0 && writePipeline(n) => v }.sum
+    // each tier's registry names (all of them, not just the selected)
+    def tierJson(t: Tier): String = SparkEntry.registry.filter(_.tier == t)
+      .map(_.name).sorted.map(Verify.jsonString).mkString("[", ",", "]")
+    def tierSec(t: Tier): Double =
+      finalResults.collect { case (spec, v) if v >= 0 && spec.tier == t => v }.sum
+    val headline = tierSec(Tier.Headline)
+    val calibSec = tierSec(Tier.Calibration)
+    val writePipelineSec = tierSec(Tier.WritePipeline)
     val failures = finalResults.count(_._2 < 0) +
       stagingTimes.count(_._2 < 0)
     val stagingJson = stagingTimes
       .map { case (k, v) => "\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","staging_sec":${ms(stagingSec)},"headline_sec":${ms(headline)},"calibration_sec":${ms(calibSec)},"write_pipeline_sec":${ms(writePipelineSec)},"failures":$failures,"queries":$qs,"reruns":$rerunsJson,"staging":$stagingJson,"calibration_queries":${calibration.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"write_pipeline_queries":${writePipeline.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"${js(sfDir)}"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","staging_sec":${ms(stagingSec)},"headline_sec":${ms(headline)},"calibration_sec":${ms(calibSec)},"write_pipeline_sec":${ms(writePipelineSec)},"failures":$failures,"queries":$qs,"reruns":$rerunsJson,"staging":$stagingJson,"calibration_queries":${tierJson(Tier.Calibration)},"write_pipeline_queries":${tierJson(Tier.WritePipeline)},"sf":${Verify.jsonString(sfDir)}}"""
     // The per-query map (~100 entries) overflows the driver's fixed
     // stdout tail-capture window, which for three rounds truncated the
     // first ~15 timings and broke JSON parsing. So: the FULL map is
@@ -331,12 +233,9 @@ object Bench {
     // longer than the window parses as null). The 191-query map alone
     // is ≥4.6 KB (sum of name lengths 2.9 KB), so the full JSON can
     // NEVER ride the stdout contract line — it goes to the detail file
-    // above, and stdout carries the short totals line. A harness with
-    // a bigger window can opt into the full line via
-    // SPARK_GRAFT_BENCH_STDOUT_FULL=1.
+    // above, and stdout carries the short totals line.
     val stdoutLine =
-      if (sys.env.get("SPARK_GRAFT_BENCH_STDOUT_FULL").contains("1")) fullJson
-      else s"""{"metric":"total","value":${ms(total)},"unit":"sec","staging_sec":${ms(stagingSec)},"headline_sec":${ms(headline)},"calibration_sec":${ms(calibSec)},"write_pipeline_sec":${ms(writePipelineSec)},"failures":$failures,"n_queries":${finalResults.size},"n_reruns":${reruns.size},"detail":"${js(outPath)}","sf":"${js(sfDir)}"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","staging_sec":${ms(stagingSec)},"headline_sec":${ms(headline)},"calibration_sec":${ms(calibSec)},"write_pipeline_sec":${ms(writePipelineSec)},"failures":$failures,"n_queries":${finalResults.size},"n_reruns":${reruns.size},"detail":${Verify.jsonString(outPath)},"sf":${Verify.jsonString(sfDir)}}"""
     println(stdoutLine)
     System.out.flush()
   }

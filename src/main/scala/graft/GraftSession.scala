@@ -53,4 +53,29 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** 8 shuffle partitions, for work that chains many actions over
+    * metadata-to-small relations or keeps one state store per shuffle
+    * partition: at the session default the scheduler overhead
+    * dominates the arithmetic.
+    */
+  val NarrowShuffle: (String, String) = "spark.sql.shuffle.partitions" -> "8"
+
+  /** The RocksDB state store (transformWithState requires a
+    * multi-column-family store).
+    */
+  val RocksDbState: (String, String) = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** A clone of `spark` with `overrides` set, so they do not leak into
+    * queries that share the caller's session. newSession() drops the
+    * caller's RUNTIME conf (e.g. Verify's result-dump format), so it is
+    * mirrored first; static keys refuse the set and are skipped.
+    */
+  def cloned(spark: SparkSession, overrides: (String, String)*): SparkSession = {
+    val s = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) => scala.util.Try(s.conf.set(k, v)) }
+    overrides.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
 }

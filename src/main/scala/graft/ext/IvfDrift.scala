@@ -109,7 +109,7 @@ object IvfDrift {
     * averages over enough probes).
     */
   def annIvfDrift(spark0: SparkSession, sfDir: String): DataFrame = {
-    val spark = Quantizer.narrowSession(spark0)
+    val spark = graft.GraftSession.cloned(spark0, graft.GraftSession.NarrowShuffle)
     val (base, drifted) = Quantizer.driftSlices(spark, sfDir)
     val seeds = base.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))

@@ -795,7 +795,7 @@ object Multimodal {
   def mediaDedupGroups(spark0: SparkSession, sfDir: String): DataFrame = {
     // everything past the feature scan is class-scale (thousands of
     // rows), and CC iterates several shuffle rounds
-    val spark = Quantizer.narrowSession(spark0)
+    val spark = graft.GraftSession.cloned(spark0, graft.GraftSession.NarrowShuffle)
     mediaDedupAssignments(spark, sfDir)
       .withColumn("cluster_size", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window.partitionBy(col("keeper_id"))))

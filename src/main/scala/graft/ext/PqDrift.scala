@@ -232,7 +232,7 @@ object PqDrift {
     * exactly once and the retrain recovering recall.
     */
   def annPqDrift(spark0: SparkSession, sfDir: String): DataFrame = {
-    val spark = Quantizer.narrowSession(spark0)
+    val spark = graft.GraftSession.cloned(spark0, graft.GraftSession.NarrowShuffle)
     val (base, drifted) = Quantizer.driftSlices(spark, sfDir)
     val cents = trainedCodebook(base)
     val root = java.nio.file.Files.createTempDirectory("graft_pq_drift").toString

@@ -110,7 +110,7 @@ object PqResidual {
     * ≥ raw.
     */
   def annIvfPqResidual(spark0: SparkSession, sfDir: String): DataFrame = {
-    val spark = Quantizer.narrowSession(spark0)
+    val spark = graft.GraftSession.cloned(spark0, graft.GraftSession.NarrowShuffle)
     val emb = graft.Tables.table(spark, sfDir, "embeddings")
     // CLUSTERED gate corpus — the drift gates' label-axis construction
     // (each vector pulled 2.0 along a per-label basis axis, ten tight

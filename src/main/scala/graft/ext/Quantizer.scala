@@ -125,20 +125,6 @@ object Quantizer {
 
   // ——— drift-gate scaffolding shared by the x_ann_* recall gates ———
 
-  /** A clone of `spark0` with 8 shuffle partitions, for scenarios that
-    * chain many actions over metadata-to-small relations (at the
-    * session default the scheduler overhead dominates the arithmetic).
-    * newSession() drops the caller's RUNTIME conf (e.g. Verify's
-    * result-dump format), so mirror it first; static keys refuse the
-    * set and are skipped.
-    */
-  private[ext] def narrowSession(spark0: SparkSession): SparkSession = {
-    val spark = spark0.newSession()
-    spark0.conf.getAll.foreach { case (k, v) => scala.util.Try(spark.conf.set(k, v)) }
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark
-  }
-
   /** The gates' clustered slice: each (vec_id, label, embedding) row
     * pulled 2.0 along its label's basis axis (0-based element index
     * label*6 — the twin's 1-based label*6+1), ten tight clusters the

@@ -106,7 +106,7 @@ object StreamPq {
     * (v0 → fire at batch 0 → v1 → fire at batch 1 → v2).
     */
   def annPqIncremental(spark0: SparkSession, sfDir: String): DataFrame = {
-    val spark = Quantizer.narrowSession(spark0)
+    val spark = graft.GraftSession.cloned(spark0, graft.GraftSession.NarrowShuffle)
     val (base, drifted0) = Quantizer.driftSlices(spark, sfDir)
     val cents = PqDrift.trainedCodebook(base)
     val root = java.nio.file.Files.createTempDirectory("graft_pq_inc").toString

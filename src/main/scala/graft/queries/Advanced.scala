@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Oracles, Tables}
+import graft.{GraftSession, Oracles, Tables}
 import graft.functions.AggregateFunctions.{bounded_collect_set, exact_count_distinct, misra_gries}
 
 /** Advanced operators: custom typed aggregates, corpus-level token
@@ -834,14 +834,7 @@ object Advanced {
     * into sibling fixture queries starting streams concurrently.
     */
   def sessionizeTwsGate(spark: SparkSession, sfDir: String): DataFrame = {
-    val s = spark.newSession()
-    // newSession() drops the caller's RUNTIME conf (e.g. Verify's INT96
-    // result-dump format) — mirror it, then apply the one override
-    // (static keys refuse the set; skip them)
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val s = GraftSession.cloned(spark, GraftSession.RocksDbState)
     import s.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_tws")
     val actDir = s"$base/activities"
@@ -881,15 +874,10 @@ object Advanced {
     * crash must be invisible).
     */
   def sessionizeTwsUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // small shuffle width = few RocksDB store instances per batch; the
     // conf is identical across the crash restart, so checkpointed
     // state partitioning stays consistent
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val s = GraftSession.cloned(spark, GraftSession.RocksDbState, GraftSession.NarrowShuffle)
     import s.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_twsup")
     val actDir = s"$base/activities"; val tblDir = s"$base/table"

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.Tables.Resplit
 import graft.cdc.Debezium
 import graft.enrich.Enrichments
@@ -966,10 +966,7 @@ object Parity {
     // state store PER SHUFFLE PARTITION per stateful operator — at the
     // session default (32) that is 96 stores of a few hundred rows
     // each, all scheduler overhead
-    val spark = spark0.newSession()
-    spark0.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(spark.conf.set(k, v)) }
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    val spark = GraftSession.cloned(spark0, GraftSession.NarrowShuffle)
     val base = java.nio.file.Files.createTempDirectory("graft_ss").toString
     val events = Tables.table(spark, sfDir, "events")
     val evDir = s"$base/events"
