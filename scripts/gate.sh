@@ -27,6 +27,9 @@ echo "[gate] bench regression list" && python3 scripts/bench_regressions.py
 echo "[gate] src/main Scala lines: $(find src/main -name '*.scala' | xargs cat | wc -l)"
 # distinct session conf keys the engine reads, a tracked number (ROADMAP aim 2)
 echo "[gate] src/main spark.graft.* conf keys: $(grep -rhoE '"spark\.graft\.[A-Za-z0-9_.]+"' src/main | sort -u | wc -l)"
+# footer-inference ("mergeSchema") reads in the engine, a tracked number
+# (ROADMAP item 5: a table's schema is its `_schema.json`, io/TableSchema)
+echo "[gate] src/main mergeSchema reads: $(grep -rho '"mergeSchema"' src/main | wc -l)"
 # dev entry points in the engine, a tracked number (ROADMAP aim 2: one
 # measurement harness, not ten dev mains)
 echo "[gate] src/main entry points (def main): $(grep -rho 'def main(args' src/main | wc -l)"

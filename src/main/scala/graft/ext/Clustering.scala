@@ -240,19 +240,15 @@ object Clustering {
     s"""WITH ex AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
        |            WHERE vec_id % greatest(1, CAST(floor(sqrt(
        |                (SELECT count(*) FROM embeddings))) AS BIGINT)) = 0),
-       |cells AS (
-       |  SELECT vec_id, embedding, cent_id AS cell FROM (
-       |    SELECT e.vec_id, e.embedding, c.cent_id,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY ${Similarity.cosineSql("e.embedding", "c.cv")} DESC,
-       |                      c.cent_id) AS rn
-       |    FROM embeddings e, ex c) WHERE rn = 1)
-       |SELECT b.vec_id, b.cell, min(a.vec_id) AS kept_by
+       |""".stripMargin +
+    Quantizer.assignSql(Quantizer.Coarse, "cells", "embeddings", "ex") +
+    s"""
+       |SELECT b.vec_id, b.cent_id AS cell, min(a.vec_id) AS kept_by
        |FROM cells a JOIN cells b
-       |  ON a.cell = b.cell AND a.vec_id < b.vec_id
+       |  ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
        |WHERE round(${Similarity.cosineSql("a.embedding", "b.embedding")}, 4)
        |      >= $semanticDupThreshold
-       |GROUP BY b.vec_id, b.cell
+       |GROUP BY b.vec_id, b.cent_id
        |ORDER BY b.vec_id""".stripMargin
 
   /** DuckDB twin: the same seeds and two chained

@@ -333,25 +333,15 @@ object Retrieval {
        |  WHERE rank <= $bm25TopK),
        |dcent AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
        |          WHERE vec_id % 25 = 0),
-       |dasg AS (
-       |  SELECT doc_id, nv, cent_id FROM (
-       |    SELECT e.vec_id AS doc_id, e.embedding AS nv, c.cent_id,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |                              ORDER BY ${Similarity.cosineSql("e.embedding", "c.cv")} DESC,
-       |                                       c.cent_id) AS rn
-       |    FROM embeddings e, dcent c WHERE e.vec_id % 50 <> 0)
-       |  WHERE rn = 1),
-       |dqasg AS (
-       |  SELECT query_doc, qv, cent_id FROM (
-       |    SELECT e.vec_id AS query_doc, e.embedding AS qv, c.cent_id,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |                              ORDER BY ${Similarity.cosineSql("e.embedding", "c.cv")} DESC,
-       |                                       c.cent_id) AS rn
-       |    FROM embeddings e, dcent c WHERE e.vec_id % 100 = 0)
-       |  WHERE rn = 1),
+       |""".stripMargin +
+    Quantizer.assignSql(Quantizer.Coarse, "dasg",
+      "(SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 <> 0)", "dcent") + ",\n" +
+    Quantizer.assignSql(Quantizer.Coarse, "dqasg",
+      "(SELECT vec_id, embedding FROM embeddings WHERE vec_id % 100 = 0)", "dcent") +
+    s""",
        |dscored AS (
-       |  SELECT q.query_doc, a.doc_id,
-       |         round(${Similarity.cosineSql("q.qv", "a.nv")}, 4) AS sim
+       |  SELECT q.vec_id AS query_doc, a.vec_id AS doc_id,
+       |         round(${Similarity.cosineSql("q.embedding", "a.embedding")}, 4) AS sim
        |  FROM dqasg q JOIN dasg a ON a.cent_id = q.cent_id),
        |drank AS (
        |  SELECT query_doc, doc_id, rank FROM (

@@ -72,6 +72,13 @@ object Similarity {
       s" / (sqrt(list_inner_product(CAST($a AS DOUBLE[]), CAST($a AS DOUBLE[])))" +
       s" * sqrt(list_inner_product(CAST($b AS DOUBLE[]), CAST($b AS DOUBLE[])))))"
 
+  /** DuckDB twin of the IVF seed centroids (every 25th vector): the
+    * `cent` (cent_id, cv) CTE, trailing comma included.
+    */
+  private def ivfCentSql: String =
+    "cent AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings\n" +
+    "         WHERE vec_id % 25 = 0),\n"
+
   // ——— brute-force top-k ———
 
   /** Exact cosine top-5 per query, unsorted — the ground-truth relation
@@ -758,16 +765,8 @@ object Similarity {
     * oracles.
     */
   val annIvfInt8Sql: String =
-    s"""WITH cent AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
-       |              WHERE vec_id % 25 = 0),
-       |asg AS (
-       |  SELECT vec_id, cent_id FROM (
-       |    SELECT e.vec_id, c.cent_id,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |                              ORDER BY ${cosineSql("e.embedding", "c.cv")} DESC,
-       |                                       c.cent_id) AS rn
-       |    FROM embeddings e, cent c)
-       |  WHERE rn = 1),
+    "WITH " + ivfCentSql + Quantizer.assignSql(Quantizer.Coarse, "asg", "embeddings", "cent") +
+    s""",
        |s AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
        |         $int8ScaleSql AS scale,
@@ -1095,18 +1094,9 @@ object Similarity {
     * shortlist/rerank tail.
     */
   private def ivfPqSqlWith(nprobe: Int): String =
-    pqIndexCteSql(1) +
+    pqIndexCteSql(1) + ",\n" + ivfCentSql +
+    Quantizer.assignSql(Quantizer.Coarse, "asg", "embeddings", "cent") +
     s""",
-      |cent AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
-      |         WHERE vec_id % 25 = 0),
-      |asg AS (
-      |  SELECT vec_id, cent_id FROM (
-      |    SELECT e.vec_id, c.cent_id,
-      |           row_number() OVER (PARTITION BY e.vec_id
-      |                              ORDER BY ${cosineSql("e.embedding", "c.cv")} DESC,
-      |                                       c.cent_id) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1),
       |qcell AS (
       |  SELECT query_id, qcell FROM (
       |    SELECT e.vec_id AS query_id, c.cent_id AS qcell,
@@ -1279,15 +1269,9 @@ object Similarity {
     * assignment widened to rn ≤ nprobe.
     */
   val annIvfNprobeSql: String =
-    s"""WITH cent AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
-       |              WHERE vec_id % 25 = 0),
-       |assigned AS (
-       |  SELECT e.vec_id, e.embedding, c.cent_id,
-       |         row_number() OVER (PARTITION BY e.vec_id
-       |                            ORDER BY ${cosineSql("e.embedding", "c.cv")} DESC,
-       |                                     c.cent_id) AS rn
-       |  FROM embeddings e, cent c),
-       |cells AS (SELECT vec_id, embedding, cent_id FROM assigned WHERE rn = 1),
+    "WITH " + ivfCentSql +
+    Quantizer.assignSql(Quantizer.Coarse, "cells", "embeddings", "cent") +
+    s""",
        |qp AS (
        |  SELECT query_id, qv, cent_id FROM (
        |    SELECT e.vec_id AS query_id, e.embedding AS qv, c.cent_id,
@@ -1308,15 +1292,9 @@ object Similarity {
        |ORDER BY query_id, rank""".stripMargin
 
   val annIvfSql: String =
-    s"""WITH cent AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
-       |              WHERE vec_id % 25 = 0),
-       |assigned AS (
-       |  SELECT e.vec_id, e.embedding, c.cent_id,
-       |         row_number() OVER (PARTITION BY e.vec_id
-       |                            ORDER BY ${cosineSql("e.embedding", "c.cv")} DESC,
-       |                                     c.cent_id) AS rn
-       |  FROM embeddings e, cent c),
-       |cells AS (SELECT vec_id, embedding, cent_id FROM assigned WHERE rn = 1),
+    "WITH " + ivfCentSql +
+    Quantizer.assignSql(Quantizer.Coarse, "cells", "embeddings", "cent") +
+    s""",
        |q AS (SELECT vec_id AS query_id, embedding AS qv, cent_id FROM cells
        |      WHERE vec_id % 100 = 0),
        |scored AS (

@@ -288,7 +288,7 @@ object GraftProcedures {
           s"graft.system: no partitioned graft-upsert table at $path"))
       val files = ParquetUpsertSink.liveDataFileStatuses(fs, path, pc)
       val stats = UpsertDataSkipping.fileStatsAll(fs, files.map(_.getPath),
-        UpsertTableSource.tableSchema(path), fs.getConf)
+        TableSchema.of(path), fs.getConf)
       files.sortBy(_.getPath.toString).map { f =>
         val rows: Any = stats.get(f.getPath.toString)
           .flatMap(_.rowCount).map(Long.box).orNull
@@ -314,7 +314,7 @@ object GraftProcedures {
           s"graft.system: no partitioned graft-upsert table at $path"))
       val files = ParquetUpsertSink.liveDataFileStatuses(fs, path, pc)
       val stats = UpsertDataSkipping.fileStatsAll(fs, files.map(_.getPath),
-        UpsertTableSource.tableSchema(path), fs.getConf)
+        TableSchema.of(path), fs.getConf)
       files.groupBy(_.getPath.getParent.getName).toSeq.sortBy(_._1)
         .map { case (dir, fsOfP) =>
           val counts = fsOfP.map(f =>
@@ -380,7 +380,7 @@ object GraftProcedures {
       // fileStatsAll reads footers for unmanifested files and flushes
       // the repaired manifests — exactly the planning path, warmed
       val stats = UpsertDataSkipping.fileStatsAll(fs, files.map(_.getPath),
-        UpsertTableSource.tableSchema(path), fs.getConf, aliases)
+        TableSchema.of(path), fs.getConf, aliases)
       files.groupBy(_.getPath.getParent.getName).toSeq.sortBy(_._1)
         .map { case (dir, inDir) =>
           val counts = inDir.map(f =>

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Catalog plugin for `graft-upsert` tables — the name-based SQL
@@ -117,7 +117,7 @@ final class GraftUpsertCatalog extends TableCatalog
   private def loadWith(ident: Identifier, asOf: Option[String]): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val path = pathOf(ident)
-    new UpsertTable(path, UpsertTableSource.tableSchema(path),
+    new UpsertTable(path, TableSchema.of(path),
       UpsertTableSource.partitionColOf(path), asOf)
   }
 
@@ -137,15 +137,11 @@ final class GraftUpsertCatalog extends TableCatalog
       require(schema.fieldNames.exists(_.equalsIgnoreCase(c)),
         s"partition column '$c' is not in the table schema")
     }
-    // directory-name identity: the partition column is STRING in this
-    // table format (same pin as every sink read)
-    val pinned = StructType(schema.map(f =>
-      if (partitionCol.exists(_.equalsIgnoreCase(f.name))) f.copy(dataType = StringType)
-      else f))
+    val pinned = TableSchema.pin(schema, partitionCol)
     val root = new Path(path)
     val fs = root.getFileSystem(hadoopConf)
     fs.mkdirs(root)
-    writeFile(fs, new Path(root, ParquetUpsertSink.SchemaFileName), pinned.json)
+    TableSchema.replace(fs, path, pinned)
     val props = new java.util.Properties()
     properties.asScala
       .filterNot { case (k, _) => k.startsWith("option.") || IgnoredProps(k) }
@@ -177,7 +173,7 @@ final class GraftUpsertCatalog extends TableCatalog
         require(add.fieldNames.length == 1,
           "graft-upsert: nested columns are out of scope for this table format")
         val colName = add.fieldNames()(0)
-        val cur = UpsertTableSource.tableSchema(path)
+        val cur = TableSchema.of(path)
         // a duplicate (case-insensitive, like every lookup in this
         // format) would write a two-field-one-name schema that breaks
         // every subsequent read — mirror createTable's column check
@@ -203,13 +199,13 @@ final class GraftUpsertCatalog extends TableCatalog
             "pre-evolution files null-fill it")
         val evolved = StructType(
           cur.fields :+ StructField(colName, add.dataType, nullable = true))
-        writeSchemaAtomic(fs, root, evolved.json)
+        TableSchema.replace(fs, path, evolved)
       }
       case upd: TableChange.UpdateColumnType => GraftUpsertCatalog.withPropsLock(fs, path) {
         require(upd.fieldNames.length == 1,
           "graft-upsert: nested columns are out of scope for this table format")
         val colName = upd.fieldNames()(0)
-        val cur = UpsertTableSource.tableSchema(path)
+        val cur = TableSchema.of(path)
         val f = cur.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
           throw new IllegalArgumentException(
             s"graft-upsert: no column '$colName' in the table schema"))
@@ -225,13 +221,13 @@ final class GraftUpsertCatalog extends TableCatalog
         val evolved = StructType(cur.fields.map(x =>
           if (x.name.equalsIgnoreCase(colName)) x.copy(dataType = upd.newDataType())
           else x))
-        writeSchemaAtomic(fs, root, evolved.json)
+        TableSchema.replace(fs, path, evolved)
       }
       case del: TableChange.DeleteColumn => GraftUpsertCatalog.withPropsLock(fs, path) {
         require(del.fieldNames.length == 1,
           "graft-upsert: nested columns are out of scope for this table format")
         val colName = del.fieldNames()(0)
-        val cur = UpsertTableSource.tableSchema(path)
+        val cur = TableSchema.of(path)
         val f = cur.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
           throw new IllegalArgumentException(
             s"graft-upsert: no column '$colName' in the table schema"))
@@ -251,7 +247,7 @@ final class GraftUpsertCatalog extends TableCatalog
             ColumnAliases.appendDropped(m, f.name))
         }
         val evolved = StructType(cur.fields.filterNot(_ eq f))
-        writeSchemaAtomic(fs, root, evolved.json)
+        TableSchema.replace(fs, path, evolved)
       }
       // NOT lock-wrapped: renameColumn takes the SINK's commit lock
       // (and re-records lineage through updateProps itself) — holding
@@ -265,7 +261,7 @@ final class GraftUpsertCatalog extends TableCatalog
           "graft-upsert: nested columns are out of scope for this table format")
         val from = ren.fieldNames()(0)
         val to = ren.newName()
-        val cur = UpsertTableSource.tableSchema(path)
+        val cur = TableSchema.of(path)
         require(cur.fieldNames.exists(_.equalsIgnoreCase(from)),
           s"graft-upsert: no column '$from' in the table schema")
         require(!cur.fieldNames.exists(_.equalsIgnoreCase(to)),
@@ -337,39 +333,6 @@ final class GraftUpsertCatalog extends TableCatalog
     if (namespace.sameElements(Array("system")))
       GraftProcedures.names.map(Identifier.of(Array("system"), _)).toArray
     else Array.empty
-
-  private def writeFile(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-      content: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Atomic-enough `_schema.json` replace (tmp + delete + rename — the
-    * sink's persistSchema recipe): a driver crash mid-write must never
-    * leave a TRUNCATED schema file, because tableSchema's fallback is
-    * footer inference, which silently resurrects dropped/renamed
-    * columns and reverts widenings for every subsequent read. A reader
-    * in the delete-rename gap falls back to footer inference ONCE
-    * (documented persistSchema semantics), never to torn bytes.
-    */
-  private def writeSchemaAtomic(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path, json: String): Unit = {
-    val target = new Path(root, ParquetUpsertSink.SchemaFileName)
-    val tmp = new Path(root,
-      s".${ParquetUpsertSink.SchemaFileName}.catalog.${java.util.UUID.randomUUID()}.tmp")
-    writeFile(fs, tmp, json)
-    try {
-      fs.delete(target, false)
-      if (!fs.rename(tmp, target))
-        throw new java.io.IOException(
-          s"graft-upsert: schema rename failed: $tmp -> $target")
-    } catch {
-      case t: Throwable =>
-        scala.util.Try(fs.delete(tmp, false))
-        throw t
-    }
-  }
 
   /** DROP/RENAME must not touch the columns the format is built on:
     * the partition column (directory layout), record keys and
@@ -459,9 +422,9 @@ object GraftUpsertCatalog {
             return props
           }
           // On atomic-rename stores (local POSIX, HDFS) updateProps
-          // overwrites the canonical IN PLACE (FileContext
-          // Rename.OVERWRITE), so a table that has properties NEVER
-          // shows the canonical absent — absent+absent here genuinely
+          // overwrites the canonical IN PLACE (TableSchema.replaceFile),
+          // so a table that has properties NEVER shows the canonical
+          // absent — absent+absent here genuinely
           // means propertyless (sink-created). The re-probe round is
           // the net for the residual cases: a crash between tmp write
           // and rename (tmp-recovery above), and object stores whose
@@ -560,9 +523,9 @@ object GraftUpsertCatalog {
     }
   }
 
-  /** Crash-safe read-modify-write of `_table.properties` (tmp + delete
-    * + rename): a concurrent reader sees old-complete, new-complete,
-    * or recovers the surviving tmp via [[loadProps]] — never a
+  /** Crash-safe read-modify-write of `_table.properties` (tmp, then
+    * one rename over it, [[TableSchema.replaceFile]]): a concurrent
+    * reader sees old-complete, new-complete, or recovers the surviving tmp via [[loadProps]] — never a
     * truncated file, and a crash in the window no longer erases the
     * table's lineage. Updates SERIALIZE through [[PropsLockName]]
     * (the sink's commit lock alone doesn't cover the catalog's
@@ -576,36 +539,8 @@ object GraftUpsertCatalog {
     f(props)
     val p = new Path(s"$path/$TablePropsFileName")
     val tmp = new Path(s"$path/$PropsTmpName")
-    val out = fs.create(tmp, true)
-    try props.store(out, null) finally out.close()
-    // ATOMIC overwrite rename (FileContext + Rename.OVERWRITE — POSIX
-    // rename on local, atomic overwrite on HDFS): a lock-free reader
-    // can NEVER observe the canonical absent on a table that has
-    // properties, which is what makes loadProps's
-    // absent+absent ⟹ propertyless conclusion sound. The former
-    // delete→rename pair left an absent window that a descheduled
-    // reader could sample across two serialized updates and still
-    // conclude "propertyless". Object stores without atomic rename
-    // keep loadProps's tmp-recovery + re-probe as the (documented,
-    // best-effort) net.
-    try
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(p.toUri, fs.getConf)
-        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    try TableSchema.replaceFile(fs, tmp, p)(props.store(_, null))
     catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        // stores that implement only FileSystem (no AbstractFileSystem
-        // binding for the scheme) can't take the FileContext path at
-        // all — fall back to the legacy delete→rename pair. Such
-        // stores keep the old absent-window semantics: a lock-free
-        // reader descheduled across the delete can sample "canonical
-        // absent", which loadProps's tmp-recovery + re-probe nets
-        // (documented, best-effort) — strictly better than failing
-        // every property update on those filesystems.
-        fs.delete(p, false)
-        if (!fs.rename(tmp, p) && loadProps(fs, path) != props)
-          throw new java.io.IOException(
-            s"table properties rename failed (legacy path): $tmp -> $p")
       case e: java.io.IOException =>
         // a crashed predecessor's recovery (loadProps promoting a
         // surviving tmp) can race in here; if the intended state is

@@ -280,8 +280,8 @@ final case class ParquetUpsertSink(
     * OVERWRITE ([[overwriteWhere]], [[overwriteDynamic]]) and RESTORE
     * ([[restoreTo]]). `rows` is the complete new content of the
     * `touched` partitions. In order — the crash-safe order every replay
-    * relies on: verify the lock, archive the pre-images, persist the
-    * schema additively, write `rows` ONCE with dynamic overwrite, delete
+    * relies on: verify the lock, persist the schema additively (the
+    * commit's type gate), archive the pre-images, write `rows` ONCE with dynamic overwrite, delete
     * the touched partitions the write left empty, run `beforeMark`,
     * mark the commit complete. Returns the surviving partition dirs.
     * `oneTask` picks [[writeFinal]]'s plan ([[fitsOneTask]]).
@@ -305,12 +305,12 @@ final case class ParquetUpsertSink(
       batchId: Long, op: String, oneTask: Boolean = false)(
       beforeMark: => Unit = ()): Seq[Path] = {
     verifyLockOwnership(fs)
+    // ADDITIVE: the touched-partition content may lack columns that
+    // exist only in untouched partitions — the schema must never narrow
+    tableSchema.widenBy(fs, rows.schema)
     val commit =
       if (keepVersions > 1) Some(archivePreImages(fs, touched.toArray, batchId, op))
       else None
-    // ADDITIVE: the touched-partition content may lack columns that
-    // exist only in untouched partitions — the schema must never narrow
-    persistSchemaAdditive(spark, fs, rows.schema)
     // observed in the write's own stage. Distributed, that is ABOVE the
     // shuffle: an empty shuffle output lets adaptive execution replace
     // the stage below with an empty relation, and an observation inside
@@ -339,36 +339,18 @@ final case class ParquetUpsertSink(
     kept.map(partDir)
   }
 
-  /** Read ONLY the given partition directories, with the partition
-    * column pinned to STRING — the directory-name identity, exactly
-    * what `parts` sets compare against. Plain type inference would
-    * parse e.g. "00123" as int 123: the touched filter would then
-    * never match the string form, the merge would silently exclude
-    * (and dynamic overwrite then DELETE) the partition's existing rows
-    * in upsert, and compaction would rewrite into a brand-new
-    * directory.
-    *
-    * The read schema is the PERSISTED table schema whenever
-    * `_schema.json` exists: it is a widened superset of every live,
-    * archived, and delta file (schema evolution only adds columns and
-    * widens types), so narrow pre-widening files promote on read and
-    * pre-evolution files null-fill. Per-call mergeSchema inference —
-    * kept only as the legacy fallback for tables predating the
-    * metadata — would THROW (CANNOT_MERGE_SCHEMAS) on a dir set mixing
-    * pre- and post-widening files: Spark's schema merge refuses
-    * int+bigint even though its reader promotes either happily.
+  /** Read ONLY the given partition directories with the table schema
+    * ([[TableSchema]]): the partition column is STRING, the
+    * directory-name identity `parts` sets compare against, and the
+    * schema is a superset of every live, archived and delta file, so
+    * narrow pre-widening files promote and pre-evolution files null-fill.
     */
   private def readStringPartitioned(spark: org.apache.spark.sql.SparkSession,
-      partDirs: Seq[Path], base: String = path): DataFrame =
-    persistedSchema(new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)) match {
-      case Some(s) => readAliasNormalized(spark, partDirs, s, base)
-      case None =>
-        val inferred = spark.read.option("mergeSchema", "true")
-          .option("basePath", base)
-          .parquet(partDirs.map(_.toString): _*).schema
-        readWithSchema(spark, partDirs, pinString(inferred), base)
-    }
+      partDirs: Seq[Path], base: String = path): DataFrame = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    readAliasNormalized(spark, partDirs,
+      tableSchema.current(fs).getOrElse(tableSchema.infer(spark, partDirs, base)), base)
+  }
 
   /** [[readWithSchema]], resolving column RENAMES against old files:
     * archived pre-rename dirs store a current column under a
@@ -431,131 +413,8 @@ final case class ParquetUpsertSink(
     spark.read.schema(schema).option("basePath", base)
       .parquet(partDirs.map(_.toString): _*)
 
-  // every field nullable: a batch's non-nullable column (a literal, a
-  // case-class field) must not pin the TABLE schema non-nullable —
-  // pre-evolution files null-fill the column, and a non-nullable
-  // `_schema.json` would let Catalyst constant-fold `col IS NULL`
-  // to false over rows that are in fact null
-  private def pinString(s: org.apache.spark.sql.types.StructType) =
-    org.apache.spark.sql.types.StructType(s.map(f =>
-      if (f.name == partitionCol)
-        f.copy(dataType = org.apache.spark.sql.types.StringType, nullable = true)
-      else f.copy(nullable = true)))
-
-  // ——— table schema metadata (Hudi keeps the writer schema in commit
-  // metadata rather than re-scanning parquet footers every batch;
-  // `_schema.json` is that analog) ———
-
-  // in-memory for this sink's lifetime; `_schema.json` across restarts
-  @volatile private var cachedSchema: Option[org.apache.spark.sql.types.StructType] = None
-  // whether `_schema.json` is known to hold cachedSchema — false after
-  // the legacy-table inference fallback (and after a corrupt read), so
-  // the next commit re-establishes the metadata on disk
-  @volatile private var schemaPersisted: Boolean = false
-  // modification time of `_schema.json` when cachedSchema was loaded
-  // from it: lets the cache detect an EXTERNAL schema change (another
-  // sink instance running ALTER TABLE) — a stale cached view would
-  // read post-rename files with the old name and silently null-fill
-  @volatile private var cachedSchemaMtime: Long = -1L
-
-  private def schemaFile = new Path(s"$path/${ParquetUpsertSink.SchemaFileName}")
-
-  /** Drop the in-memory schema cache when `_schema.json` changed under
-    * this instance (mtime mismatch). One stat per call — metadata-scale.
-    */
-  private def invalidateStaleSchema(fs: org.apache.hadoop.fs.FileSystem): Unit =
-    if (cachedSchema.isDefined && schemaPersisted) {
-      val onDisk =
-        scala.util.Try(fs.getFileStatus(schemaFile).getModificationTime)
-          .getOrElse(-1L)
-      if (onDisk != cachedSchemaMtime) {
-        cachedSchema = None
-        schemaPersisted = false
-      }
-    }
-
-  /** The schema to read existing partitions with during a merge:
-    * in-memory cache, else `_schema.json`, else (legacy tables written
-    * before the metadata existed) a one-time footer-merge inference
-    * over every live data dir — each subsequent batch then skips the
-    * per-batch inference job entirely. The persisted schema is always a
-    * SUPERSET of every live file's columns ([[persistSchema]] writes it
-    * before the overwrite, and merge schemas only grow), so reading
-    * with it can only null-fill, never drop, columns. Caveat, shared
-    * with the commit design: concurrent writers on one table must not
-    * evolve the schema concurrently (one writer's cached view would
-    * miss the other's new column).
-    */
-  /** The persisted table schema (in-memory cache, else `_schema.json`)
-    * — NO inference fallback; None means the table predates the
-    * metadata (or a torn/corrupt file degraded the read — the next
-    * commit rewrites it).
-    */
-  private def persistedSchema(fs: org.apache.hadoop.fs.FileSystem)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    invalidateStaleSchema(fs)
-    val s = cachedSchema.orElse {
-      val fromFile =
-        if (fs.exists(schemaFile))
-          scala.util.Try {
-            val mtime = fs.getFileStatus(schemaFile).getModificationTime
-            val in = fs.open(schemaFile)
-            val parsed =
-              try org.apache.spark.sql.types.DataType
-                .fromJson(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-                .asInstanceOf[org.apache.spark.sql.types.StructType]
-              finally in.close()
-            cachedSchemaMtime = mtime
-            parsed
-          }.toOption
-        else None
-      schemaPersisted = fromFile.isDefined
-      fromFile
-    }
-    cachedSchema = s
-    s
-  }
-
-  private def mergeReadSchema(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      liveDirs: => Seq[Path]): Option[org.apache.spark.sql.types.StructType] = {
-    val s = persistedSchema(fs).orElse {
-      val dirs = liveDirs
-      if (dirs.isEmpty) None
-      else Some(pinString(spark.read.option("mergeSchema", "true")
-        .option("basePath", path).parquet(dirs.map(_.toString): _*).schema))
-    }
-    cachedSchema = s
-    s
-  }
-
-  /** Persist the (string-pinned) table schema BEFORE the overwrite that
-    * makes it real: a crash between the two leaves a superset schema on
-    * disk (harmless — the streaming replay re-delivers the columns),
-    * where the reverse order would leave a NARROWER schema than the
-    * files and a later merge would silently drop, then erase, the new
-    * column. Written only when it changes; delete+rename keeps the
-    * update atomic-enough (a reader hitting the gap falls back to
-    * footer inference).
-    */
-  private def persistSchema(fs: org.apache.hadoop.fs.FileSystem,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val pinned = pinString(schema)
-    if (!schemaPersisted || !cachedSchema.contains(pinned)) {
-      val tmp = new Path(s"$path/.${ParquetUpsertSink.SchemaFileName}.$stagingToken.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(pinned.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      fs.delete(schemaFile, false)
-      if (!fs.rename(tmp, schemaFile))
-        throw new java.io.IOException(s"schema metadata rename failed: $tmp -> $schemaFile")
-      cachedSchema = Some(pinned)
-      schemaPersisted = true
-      cachedSchemaMtime =
-        scala.util.Try(fs.getFileStatus(schemaFile).getModificationTime)
-          .getOrElse(-1L)
-    }
-  }
+  // this writer's view of the table schema (one stat per steady commit)
+  private val tableSchema = new TableSchema(path, partitionCol)
 
   /** Does `dir` exist and hold at least one non-empty data file?
     * (An existing-but-empty dir must read as absent — schema inference
@@ -574,36 +433,20 @@ final case class ParquetUpsertSink(
     else fs.listStatus(root).map(_.getPath)
       .filter(p => p.getName.startsWith(s"$partitionCol=") && hasDataFiles(fs, p)).toSeq
 
-  /** Full pinned schema of the table: inferred from the live partition
-    * dirs when any hold data, else from the NEWEST archived pre-image
-    * that does. Lets an empty change-set / time-travel read return zero
-    * rows WITH the table schema — a downstream `select("id", "v")`
-    * must not throw AnalysisException precisely in the common
-    * no-changes / all-tombstoned case.
-    */
-  private def tableSchema(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem): Option[org.apache.spark.sql.types.StructType] = {
-    val live = livePartDirs(fs, new Path(path))
-    if (live.nonEmpty) Some(readStringPartitioned(spark, live).schema)
-    else ParquetUpsertSink.listArchivedCommits(spark, path).reverse.iterator
-      .map(c => new Path(archiveRoot, c))
-      .map(cd => cd -> livePartDirs(fs, cd))
-      .collectFirst { case (cd, dirs) if dirs.nonEmpty =>
-        readStringPartitioned(spark, dirs, cd.toString).schema
-      }
-  }
-
-  /** Zero rows, table schema (see [[tableSchema]]; falls back to the
-    * partition column alone only when the table has never held data
-    * anywhere — live or archived — i.e. there is no schema to pin).
+  /** Zero rows with the table schema, partition column last as a
+    * partitioned read reports it: an empty change set or time-travel
+    * read must still serve a downstream `select("id", "v")`. The
+    * partition column alone when the table never had a schema.
     */
   private def emptyTable(spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem): DataFrame = {
-    val schema = tableSchema(spark, fs).getOrElse(
-      org.apache.spark.sql.types.StructType(Seq(
+    val (part, data) = tableSchema.currentOrInfer(spark, fs, livePartDirs(fs, new Path(path)))
+      .getOrElse(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField(partitionCol,
           org.apache.spark.sql.types.StringType))))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      .partition(_.name.equalsIgnoreCase(partitionCol))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType(data ++ part))
   }
 
   /** Touched-partition set of an archived commit, in escaped dir-name
@@ -884,11 +727,8 @@ final case class ParquetUpsertSink(
       spark.read.option("mergeSchema", "true")
         .option("recursiveFileLookup", "true").parquet(q.toString)
     else {
-      // ONE definition of the persisted-schema load (cache + file +
-      // corruption fallback): mergeReadSchema, with no inference dirs
       val base: Seq[org.apache.spark.sql.types.StructField] =
-        mergeReadSchema(spark, fs, Seq.empty)
-          .map(_.fields.toSeq).getOrElse(Seq.empty)
+        tableSchema.current(fs).map(_.fields.toSeq).getOrElse(Seq.empty)
       val schema = org.apache.spark.sql.types.StructType(base ++ Seq(
         org.apache.spark.sql.types.StructField("_violations",
           org.apache.spark.sql.types.StringType),
@@ -985,7 +825,7 @@ final case class ParquetUpsertSink(
       // tmp's delete→rename window left canonical-absent +
       // unrecognized-tmp = the table's config permanently erased
       // (keepVersions silently 1, lineage gone); (b) updateProps's
-      // FileContext overwrite-rename has no absent window at all on
+      // overwrite-rename (TableSchema.replaceFile) has no absent window on
       // local/HDFS; (c) the props lock keeps a concurrent ALTER TABLE
       // SET PROPERTY from being lost to this read-modify-write. Lock
       // order stays commit→props, same as every sink path.
@@ -1366,6 +1206,8 @@ final case class ParquetUpsertSink(
     // readStringPartitioned throw on zero paths. The probe is one
     // narrow job that fills the whole cache, so its size is known
     if (partitionValues(batch).isEmpty) { maybeInlineCompact(); return }
+    // the type gate, before the delta is written
+    tableSchema.widenBy(fs, batch.schema)
     val oneTask = fitsOneTask(spark, 0L, Some(batch))
     val deduped = Precombine.latest(if (oneTask) batch.coalesce(1) else batch,
       recordKeys, precombine)
@@ -1377,7 +1219,6 @@ final case class ParquetUpsertSink(
       .write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCol)
       .parquet(tmpDir.toString)
-    persistSchemaAdditive(spark, fs, batch.schema)
     verifyLockOwnership(fs)
     if (!fs.rename(tmpDir, new Path(deltaRoot, commit)))
       throw new java.io.IOException(
@@ -1491,7 +1332,7 @@ final case class ParquetUpsertSink(
     // touched partitions, and a column living solely in untouched ones
     // would otherwise vanish from the catalog entry.
     syncTable.foreach(registerAndSync(spark, _,
-      mergeReadSchema(spark, fs, Seq.empty).getOrElse(pinString(merged.schema))))
+      tableSchema.current(fs).getOrElse(merged.schema)))
     (folding, kept)
   }
 
@@ -1505,30 +1346,6 @@ final case class ParquetUpsertSink(
       s"graft-upsert: $op reads the base file set, but $path has ${live.size} " +
         "unmerged MOR delta commit(s) — run compactMor/CALL graft.system.compact " +
         "first, or read via readMor")
-  }
-
-  /** Persist the table schema grown ADDITIVELY by `newSchema`'s fields
-    * — the current persisted schema's columns always survive, so a
-    * narrow batch (or a touched-partition merge) can never shrink the
-    * table schema on disk. Shared columns WIDEN by the exact-promotion
-    * lattice (a batch carrying long where the table persisted int grows
-    * the schema to long; the narrow files promote on read) and fail
-    * loudly on a lossy type change — this is also the MOR delta
-    * append's type gate, rejecting a bad batch BEFORE its delta commit
-    * renames into the timeline.
-    */
-  private def persistSchemaAdditive(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      newSchema: org.apache.spark.sql.types.StructType): Unit = {
-    val pinnedNew = pinString(newSchema)
-    val union = mergeReadSchema(spark, fs, Seq.empty) match {
-      case Some(cur) => org.apache.spark.sql.types.StructType(
-        SchemaWidening.widenFields(cur, pinnedNew, "batch").fields ++
-          pinnedNew.fields.filterNot(f =>
-            cur.fieldNames.exists(_.equalsIgnoreCase(f.name))))
-      case None => pinnedNew
-    }
-    persistSchema(fs, union)
   }
 
   /** COW commit of a persisted, screened batch (see [[upsert]]). */
@@ -1575,8 +1392,8 @@ final case class ParquetUpsertSink(
       liveDataDirs.toSeq.sorted.map(d => new Path(s"$path/$d"))
     val existing =
       if (touchedDirs.nonEmpty)
-        mergeReadSchema(spark, fs, allLiveDirs).map(schema =>
-          readWithSchema(spark, touchedDirs, schema)
+        tableSchema.currentOrInfer(spark, fs, allLiveDirs).map(s =>
+          readWithSchema(spark, touchedDirs, s)
             // align the string partition column back to the batch's type
             .withColumn(partitionCol,
               col(partitionCol).cast(batch.schema(partitionCol).dataType)))
@@ -1618,7 +1435,7 @@ final case class ParquetUpsertSink(
     // columns living only in untouched partitions (the same narrowing
     // compactMorLocked's sync was fixed for)
     syncTable.foreach(registerAndSync(spark, _,
-      mergeReadSchema(spark, fs, Seq.empty).getOrElse(merged.schema)))
+      tableSchema.current(fs).getOrElse(merged.schema)))
   }
 
   /** Row-level DELETE over the table, copy-on-write: removes every row
@@ -1662,16 +1479,16 @@ final case class ParquetUpsertSink(
     if (liveFiles.isEmpty) return (Seq.empty, Seq.empty)
     def allLiveDirs: Seq[Path] =
       liveFiles.keys.toSeq.sorted.map(d => new Path(s"$path/$d"))
-    val schema = mergeReadSchema(spark, fs, allLiveDirs)
+    val s = tableSchema.currentOrInfer(spark, fs, allLiveDirs)
       .getOrElse(return (Seq.empty, Seq.empty))
     // matched partitions first (metadata-scale result): the full-table
     // pass decodes only cond's columns + the partition column
-    val matched = partitionValues(readWithSchema(spark, allLiveDirs, schema).filter(cond))
+    val matched = partitionValues(readWithSchema(spark, allLiveDirs, s).filter(cond))
     if (matched.isEmpty) return (Seq.empty, Seq.empty)
     // survivors: rows where cond is FALSE or NULL (SQL DELETE keeps
     // NULL-condition rows), written back exactly like upsert's merge —
     // by one task when the matched partitions' files fit one
-    val survivors = readWithSchema(spark, matched.map(partDir), schema)
+    val survivors = readWithSchema(spark, matched.map(partDir), s)
       .filter(!coalesce(cond, lit(false)))
     val matchedBytes = matched.map(v => liveFiles.get(s"$partitionCol=${dirName(v)}")
       .fold(0L)(_.map(_.getLen).sum)).sum
@@ -1975,7 +1792,7 @@ final case class ParquetUpsertSink(
           UpsertTableSource.dataFileStatuses(fs, d))
         if (statuses.nonEmpty) {
           UpsertDataSkipping.fileStatsAll(fs, statuses.map(_.getPath),
-            UpsertTableSource.tableSchema(path), fs.getConf,
+            TableSchema.of(path), fs.getConf,
             ColumnAliases.parse(GraftUpsertCatalog.tableProps(path)))
           ()
         }
@@ -2135,8 +1952,8 @@ final case class ParquetUpsertSink(
       // The alias records the field's ACTUAL schema case, not the
       // user-typed spelling — readers resolve aliases against parquet
       // footers case-SENSITIVELY.
-      val old = persistedSchema(fs).getOrElse(throw new IllegalStateException(
-        s"graft-upsert: cannot rename a column of $path — no _schema.json"))
+      val old = tableSchema.current(fs).getOrElse(throw new IllegalStateException(
+        s"graft-upsert: cannot rename a column of $path — no ${TableSchema.FileName}"))
       val field = old.fields.find(_.name.equalsIgnoreCase(from)).getOrElse(
         throw new IllegalArgumentException(
           s"graft-upsert: no column '$from' in the table schema"))
@@ -2153,7 +1970,7 @@ final case class ParquetUpsertSink(
         props.setProperty(ColumnAliases.RenamesProp,
           ColumnAliases.appendRename(cur, field.name, to))
       }
-      persistSchema(fs, schemaNow)
+      tableSchema.replace(fs, schemaNow)
       val partDirs = livePartDirs(fs, new Path(path))
       if (partDirs.nonEmpty) {
         // readStringPartitioned alias-normalizes: old-name files come
@@ -2218,12 +2035,8 @@ object ParquetUpsertSink {
     */
   val ArchiveDirName = "_archive"
 
-  /** Table-schema metadata file at the table root (Hudi commit-metadata
-    * analog): the string-pinned writer schema as of the latest commit —
-    * always a superset of every live file's columns. The leading
-    * underscore hides it from parquet readers of the table root.
-    */
-  val SchemaFileName = "_schema.json"
+  /** The table-schema file's name ([[TableSchema]] owns the file). */
+  val SchemaFileName: String = TableSchema.FileName
 
   /** Suffix of in-progress (non-atomic) archive copies; never listed
     * as commits, swept as garbage by the next archiving pass.

@@ -55,7 +55,7 @@ object SchemaWidening {
     * is not exactly widenable (equal types return themselves).
     * Nullability — including nested containsNull/valueContainsNull —
     * is NOT a type difference: the table schema is all-nullable by
-    * construction (pinString), while batches routinely carry
+    * construction (TableSchema.pin), while batches routinely carry
     * non-nullable flavors of the same type.
     */
   def widen(a: DataType, b: DataType): Option[DataType] = (a, b) match {

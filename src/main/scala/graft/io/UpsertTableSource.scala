@@ -74,7 +74,7 @@ final class UpsertTableProvider extends TableProvider
   override def supportsExternalMetadata(): Boolean = true
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    UpsertTableSource.tableSchema(UpsertTableSource.tablePath(options))
+    TableSchema.of(UpsertTableSource.tablePath(options))
 
   override def inferPartitioning(options: CaseInsensitiveStringMap): Array[Transform] = {
     val path = UpsertTableSource.tablePath(options)
@@ -1182,44 +1182,5 @@ object UpsertTableSource {
         .collectFirst { case n if !n.startsWith("_") && !n.startsWith(".") && n.contains("=") =>
           n.take(n.indexOf('=')) }
     fromDirs.orElse(GraftUpsertCatalog.tableProps(path).get("partitionCol"))
-  }
-
-  /** Table schema: the `_schema.json` writer schema when present (the
-    * commit-metadata analog — no footer job), else a one-time
-    * footer-merge inference over the live dirs with the partition
-    * column pinned to STRING (the sink's own rule).
-    */
-  private[io] def tableSchema(path: String): StructType = {
-    val spark = SparkSession.active
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sf = new Path(s"$path/${ParquetUpsertSink.SchemaFileName}")
-    val fromFile: Option[StructType] =
-      if (fs.exists(sf)) scala.util.Try {
-        val in = fs.open(sf)
-        try DataType.fromJson(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-          .asInstanceOf[StructType]
-        finally in.close()
-      }.toOption
-      else None
-    fromFile.getOrElse {
-      val pc = partitionColOf(path)
-      val dirs =
-        if (!fs.exists(new Path(path))) Seq.empty
-        else pc match {
-          case Some(c) => fs.listStatus(new Path(path)).toSeq.map(_.getPath)
-            .filter(p => p.getName.startsWith(s"$c=") && dataFiles(fs, p).nonEmpty)
-          case None => Seq(new Path(path)).filter(p => dataFiles(fs, p).nonEmpty)
-        }
-      if (dirs.isEmpty)
-        throw new IllegalArgumentException(
-          s"graft-upsert: no ${ParquetUpsertSink.SchemaFileName} and no live data under $path")
-      val inferred = spark.read.option("mergeSchema", "true").option("basePath", path)
-        .parquet(dirs.map(_.toString): _*).schema
-      pc match {
-        case Some(c) => StructType(inferred.map(f =>
-          if (f.name == c) f.copy(dataType = StringType) else f))
-        case None => inferred
-      }
-    }
   }
 }

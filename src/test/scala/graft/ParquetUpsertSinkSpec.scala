@@ -492,6 +492,31 @@ class ParquetUpsertSinkSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, ParquetUpsertSink.SchemaFileName)))
   }
 
+  test("a schema replace is never seen as a missing file by a concurrent load") {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val dir = Files.createTempDirectory("schemaswap").toString + "/t"
+    ParquetUpsertSink(dir, Seq("id"), "precombine", "processing_date")
+      .upsert(Seq(Rec(1, "a", 10, "p1")).toDF(), 0)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base = graft.io.TableSchema.load(fs, dir).get._1
+    // each schema has a column no data file holds: a load that fell back
+    // to footer inference would return neither
+    val schemas = Seq("x1", "x2").map(c =>
+      StructType(base.fields :+ StructField(c, StringType)))
+    graft.io.TableSchema.replace(fs, dir, schemas(0))
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val writer = new Thread(() =>
+      try (1 to 200).foreach(i => graft.io.TableSchema.replace(fs, dir, schemas(i % 2)))
+      finally done.set(true))
+    writer.start()
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    try while (!done.get || seen.isEmpty)
+      seen += spark.read.format("graft-upsert").load(dir).schema.fieldNames.toSeq
+    finally writer.join()
+    assert(seen.forall(s => schemas.exists(_.fieldNames.toSeq == s)), seen.distinct)
+  }
+
   // ——— the single-write COW commit ———
 
   private def partDirNames(dir: String): Seq[String] =

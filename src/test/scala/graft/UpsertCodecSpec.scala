@@ -48,12 +48,42 @@ class UpsertCodecSpec extends SparkSpec {
     assert(got == rows)
   }
 
+  /** Part files under a table root, and the `_schema.json` text. */
+  private def tableFiles(dir: String): (Seq[String], String) = {
+    val root = new java.io.File(dir)
+    def parts(f: java.io.File): Seq[String] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(parts)
+      else if (f.getName.startsWith("part-")) Seq(f.getPath) else Seq.empty
+    (parts(root).sorted, new String(Files.readAllBytes(
+      new java.io.File(root, ParquetUpsertSink.SchemaFileName).toPath), "UTF-8"))
+  }
+
+  test("a sink commit carrying a DECIMAL column is refused before any file is written") {
+    val dir = tmp("codecdecsink")
+    val sink = ParquetUpsertSink(dir, Seq("id"), "seq", "p")
+    sink.upsert(Seq((1L, 1L, "a")).toDF("id", "seq", "p"), 0)
+    val before = tableFiles(dir)
+    assertUnsupported(sink.upsert(
+      Seq((2L, 1L, BigDecimal("1.25"), "b")).toDF("id", "seq", "amt", "p"), 1))
+    // the merge-on-read append is refused the same way
+    val mor = ParquetUpsertSink(dir, Seq("id"), "seq", "p",
+      writeMode = ParquetUpsertSink.ModeMor)
+    assertUnsupported(mor.upsert(
+      Seq((3L, 1L, BigDecimal("2.50"), "a")).toDF("id", "seq", "amt", "p"), 2))
+    assert(tableFiles(dir) == before)
+  }
+
   test("a DECIMAL column fails on a read that selects it and on a DSv2 write") {
     val dir = tmp("codecdec")
-    // the sink writes through Spark's writer, so a decimal can land in a
-    // table; the connector refuses to serve or stage it
-    ParquetUpsertSink(dir, Seq("id"), "seq", "p").upsert(
-      Seq((1L, 1L, BigDecimal("1.25"), "a")).toDF("id", "seq", "amt", "p"), 0)
+    // the sink refuses the type, so the table is written by hand: one
+    // parquet file and the `_schema.json` that declares its columns
+    val df = Seq((1L, 1L, BigDecimal("1.25"))).toDF("id", "seq", "amt")
+    df.coalesce(1).write.parquet(s"$dir/p=a")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new Path(dir, ParquetUpsertSink.SchemaFileName), true)
+    try out.write(StructType(df.schema.fields :+ StructField("p", StringType))
+      .json.getBytes("UTF-8"))
+    finally out.close()
     val table = spark.read.format("graft-upsert").load(dir)
     assertUnsupported(table.select("id", "amt").collect())
     // a projection that avoids the decimal column still reads
